@@ -104,9 +104,8 @@ object Compaction {
     // the sentinel and fall back to the session shuffle width (the
     // deployment's scale knob), keeping the size-derived width only
     // when the estimate is a real one.
-    val sentinel = BigInt(spark.conf
-      .get("spark.sql.defaultSizeInBytes", Long.MaxValue.toString).toLong)
-    if (bytes >= sentinel)
+    // a typed read: the bytes conf accepts unit strings such as "10g"
+    if (bytes >= BigInt(spark.sessionState.conf.defaultSizeInBytes))
       spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
     else {
       val t = BigInt(TargetFileBytes)

@@ -26,11 +26,16 @@ object Metadata {
                            keyFilter: Option[String] = None,
                            keyPrefix: String = "")
 
+  /** The attributes of one document; null for null content. A damaged
+    * container (say, a truncated zip) keeps its `Content-Type` and
+    * `Content-Length` and loses only its format-specific attributes:
+    * the text path reports the damage as its `error`. */
   def extract(bytes: Array[Byte], filename: String,
               opts: Options = Options()): Map[String, String] = {
+    if (bytes == null) return null
     val mime = MimeDetect.detect(bytes, filename)
     val base = Map("Content-Type" -> mime, "Content-Length" -> bytes.length.toString)
-    val specific = mime match {
+    val specific = try mime match {
       case MimeDetect.Pdf  => pdfInfo(bytes)
       case MimeDetect.Docx => docxProps(bytes)
       case MimeDetect.Doc  => docProps(bytes)
@@ -42,7 +47,7 @@ object Metadata {
       case MimeDetect.Wav  => wavMeta(bytes)
       case MimeDetect.Mp3  => mp3Meta(bytes)
       case _               => Map.empty[String, String]
-    }
+    } catch { case _: Exception => Map.empty[String, String] }
     cap(base ++ specific, opts)
   }
 

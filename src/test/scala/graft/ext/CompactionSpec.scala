@@ -1,8 +1,9 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Compaction contract for the append-only ingest stores: serving
   * output is bit-identical before and after, and the data file count
@@ -27,6 +28,18 @@ class CompactionSpec extends AnyFunSuite {
 
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  test("writerWidth reads spark.sql.defaultSizeInBytes as a bytes conf") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.defaultSizeInBytes", "10g")
+    s.conf.set("spark.sql.shuffle.partitions", "3")
+    // a real estimate keeps its bytes-derived width
+    assert(Compaction.writerWidth(s.range(1000).toDF()) == 1)
+    // an RDD-backed relation has no estimate: the shuffle width
+    val rdd = s.createDataFrame(s.sparkContext.parallelize(Seq(Row(1L))),
+      StructType(Seq(StructField("x", LongType))))
+    assert(Compaction.writerWidth(rdd) == 3)
+  }
 
   test("count-min store: compaction folds partials, estimates unchanged") {
     import spark.implicits._

@@ -20,6 +20,7 @@ class FuzzAllFormatsSpec extends AnyFunSuite {
     "secured_aes.pdf" -> (() => SecuredPdf.securedAes()),
     "secured_aes256.pdf" -> (() => SecuredPdf.securedAes256()),
     "cid.pdf" -> (() => CidFontPdf.sample()),
+    "synth.docx" -> (() => SynthDocs.bytesFor(1L)),
     "doc.odt" -> (() => OpenDocFixtures.sampleOdt()),
     "sheet.ods" -> (() => OpenDocFixtures.sampleOds()),
     "deck.odp" -> (() => OpenDocFixtures.sampleOdp()),
