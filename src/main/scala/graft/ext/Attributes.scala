@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * row-group pruning on id-range probes.
   *
   * Build-once mechanics are the [[Bm25.ensureIndex]] pattern:
-  * content-signature-keyed directory, `_SUCCESS` guard, same-corpus
+  * content-signature-keyed directory, `_BUILT` guard, same-corpus
   * sibling GC, same SINGLE-WRITER assumption (see that scaladoc).
   */
 object Attributes {
@@ -58,10 +58,10 @@ object Attributes {
       (col("__sw") > lit(LinearGate.Threshold) * col("__nf")).as("clf_keep"))
   }
 
-  /** Persist the attributes relation; `_SUCCESS`-guarded no-op when it
+  /** Persist the attributes relation; `_BUILT`-guarded no-op when it
     * already exists. Single-writer (see [[ArtifactDir]]). */
   def ensureAttributes(docs: DataFrame, dir: String): Unit =
-    ArtifactDir.ensure(docs.sparkSession, dir, "attrs",
+    ArtifactDir.ensure(docs.sparkSession, dir,
       "^(graft_attrs_v1_[0-9a-f]+_).*".r) {
       tagFrame(docs)
         .sortWithinPartitions(col("doc_id"))
@@ -140,7 +140,7 @@ object Attributes {
 
   /** Span-store version — part of the persisted-relation contract: bump
     * whenever the TAGGER SET or span schema changes, or an existing
-    * `_SUCCESS`-guarded store silently serves rows the current taggers
+    * `_BUILT`-guarded store silently serves rows the current taggers
     * would no longer produce (v1 → v2: the pii_email tagger joined;
     * v2 → v3: pii_phone + pii_ip). */
   val SpanStoreVersion = "graft_spans_v3"
@@ -289,7 +289,7 @@ object Attributes {
     spanTagFrameOn(tokenized(candidates, idCol, textCol),
       Dedup.hashedShingleSet(benchmark, textCol, n), n)
 
-  /** Persist the span relation, `_SUCCESS`-guarded ([[ArtifactDir]]).
+  /** Persist the span relation, `_BUILT`-guarded ([[ArtifactDir]]).
     * The tokenized frame is persisted around the (eager) write so the
     * input text column — a full corpus scan, plus whatever per-row
     * transform the caller stacked on it — evaluates once, not once per
@@ -298,7 +298,7 @@ object Attributes {
   def ensureSpanAttributes(candidates: DataFrame, benchmark: DataFrame,
                            dir: String, idCol: String = "doc_id",
                            textCol: String = "text", n: Int = 3): Unit =
-    ArtifactDir.ensure(candidates.sparkSession, dir, "spans",
+    ArtifactDir.ensure(candidates.sparkSession, dir,
       ("^(" + SpanStoreVersion + "_[0-9a-f]+_).*").r) {
       val toked = tokenized(candidates, idCol, textCol).persist()
       try

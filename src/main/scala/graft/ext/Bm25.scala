@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * term set) — ~4 full corpus scans per invocation, which is the wrong
   * shape at 100 TB where the tokenize+aggregate pass IS the cost. Here
   * the index persists once per corpus (content-signature keyed,
-  * `_SUCCESS`-guarded, stale siblings GC'd — all exactly as the IVF
+  * `_BUILT`-guarded, stale siblings GC'd — all exactly as the IVF
   * index) and every probe reads only:
   *  - `tf/`: (tok, doc_id, tf, dl) REPARTITIONED BY tok and sorted
   *    within partitions — each parquet file covers a token range, so a
@@ -35,22 +35,22 @@ object Bm25 {
                   root: String = sys.props("java.io.tmpdir")): String =
     s"$root/${Ivf.indexPrefix("graft_bm25_v1", corpusDir)}_${Ivf.md5hex(Ivf.contentSig(corpusDir), 8)}"
 
-  /** Build the inverted index on disk; `_SUCCESS`-guarded no-op when
+  /** Build the inverted index on disk; `_BUILT`-guarded no-op when
     * it already exists. One tokenize pass feeds both aggregates; df
     * derives from the WRITTEN tf relation (no second corpus scan).
     *
     * SINGLE-WRITER assumption (like the IVF precedent): there is no
-    * lock between the `_SUCCESS` probe, the sibling GC, and the build —
+    * lock between the `_BUILT` probe, the sibling GC, and the build —
     * two drivers building concurrently can overwrite each other's
     * partial output, and the GC can delete a stale-signature sibling
     * out from under a reader still probing it. Correct for this
     * harness (one driver owns the corpus) and for any deployment where
     * index builds are serialized by an external scheduler; a
-    * multi-writer serving tier should stage to a temp dir + atomic
-    * rename and age-gate the GC instead. */
+    * multi-writer serving tier builds inside a
+    * [[GenerationStore.publish]] instead. */
   def ensureIndex(docs: DataFrame, idCol: String, textCol: String,
                   dir: String): Unit =
-    ArtifactDir.ensure(docs.sparkSession, dir, "stats",
+    ArtifactDir.ensure(docs.sparkSession, dir,
       "^(graft_bm25_v1_[0-9a-f]+_).*".r) {
       writeTf(docs, idCol, textCol, dir, mode = "overwrite")
       deriveFromTf(docs.sparkSession, dir)
@@ -100,7 +100,8 @@ object Bm25 {
     * `_COMMITTED` marker — a single atomic file create — so serving
     * sees a batch entirely or not at all (see [[ingestIntoIndex]]).
     * Driver-side listing, bounded by batches since the last
-    * compaction (the auto-compaction policy bounds that). */
+    * compaction ([[graft.streaming.StreamPipeline.bm25IngestGen]]'s
+    * `autoCompactEvery` bounds that). */
   def committedBatchDirs(spark: SparkSession, dir: String): Seq[String] =
     StagedBatches.committedDirs(spark, dir)
 
@@ -121,13 +122,13 @@ object Bm25 {
     * the cost is ONE tokenize pass over the BATCH plus batch-bounded
     * writes — never an index rescan. A crash ANYWHERE before the
     * marker leaves an uncommitted dir that serving ignores and
-    * compaction garbage-collects: the three stores can never disagree
+    * compaction never folds: the three stores can never disagree
     * about which batches they contain (the earlier three-append form
     * had a window where tf carried a batch whose df/stats increments
     * were lost, silently skewing every score). Serving folds the
     * committed deltas ([[topK]]'s per-token sum);
-    * [[Compaction.compactBm25Index]] collapses base + batches back to
-    * one generation in a single atomic dir swap. The fold is exact,
+    * [[Compaction.compactBm25ToGeneration]] folds base + batches into
+    * a new generation, committed by one manifest entry. The fold is exact,
     * not approximate — batch ids are new (the caller's contract), so
     * delta sums equal re-derivation, which the driver oracle pins.
     * Redelivery dedup is the caller's contract (exactly-once file
@@ -168,19 +169,6 @@ object Bm25 {
       StagedBatches.commit(spark, batchDir)
     } finally { tfdl.unpersist(); () }
   }
-
-  /** Opt-in auto-compaction policy for the ingest path: when the
-    * committed staged-batch count reaches `maxBatches`, fold base +
-    * batches back to one generation. Returns whether a compaction
-    * fired, so ingest wrappers and specs can observe the trigger.
-    * The threshold bounds BOTH serving's per-read fold work and the
-    * driver-side batch listing — at one batch per streaming trigger
-    * an unbounded store degrades into a small-file scan problem. */
-  def maybeCompact(spark: SparkSession, dir: String, maxBatches: Int): Boolean =
-    if (maxBatches > 0 &&
-        committedBatchDirs(spark, dir).length >= maxBatches) {
-      Compaction.compactBm25Index(spark, dir); true
-    } else false
 
   /** Top-k BM25 per query from the persisted index. `queryTerms` is
     * the small (qid, tok) relation — broadcast after its df join; the

@@ -3,12 +3,10 @@ package graft.ext
 import org.apache.spark.sql.SparkSession
 
 /** MULTI-writer / multi-reader generation protocol for the artifact
-  * stores — the piece the [[Compaction]] swap protocol scaladoc used
-  * to prescribe without implementing: an in-place two-rename swap is
-  * safe only single-writer, and a reader holding the old directory
-  * while a swap deletes it is undefined behavior. This object replaces
-  * both gaps with the standard manifest design (the public
-  * Iceberg/Delta-style commit discipline, reduced to its core):
+  * stores: a rewrite never touches a directory a reader may hold, and
+  * concurrent publishers never clobber each other. It is the standard
+  * manifest design (the public Iceberg/Delta-style commit discipline,
+  * reduced to its core):
   *
   *  - DATA is immutable: every publish fully materializes a fresh
   *    generation directory `<root>/generations/<gen>` and never
@@ -55,14 +53,13 @@ import org.apache.spark.sql.SparkSession
   * LATER state, exactly as a later generation would be), never a
   * torn one. Rewrites and deletes stay forbidden.
   *
-  * Compaction under this protocol is just another publish (read the
-  * current generation, write the folded layout as a new one —
-  * [[Compaction.compactBm25ToGeneration]]) — the
-  * old generation keeps serving in-flight readers until the age gate
-  * passes, closing the mid-read window the in-place [[Compaction]]
-  * swap accepts in exchange for zero extra storage. Single-writer
-  * tiers can keep the in-place swap; deployments with concurrent
-  * writers or long-running readers should use this store.
+  * Compaction is just another publish (read the current generation,
+  * write the folded layout as a new one — every
+  * [[Compaction]] entry point, e.g.
+  * [[Compaction.compactBm25ToGeneration]]) — the old generation keeps
+  * serving in-flight readers until the age gate passes. The cost is
+  * space: both generations sit on disk until [[gc]] collects the old
+  * one.
   *
   * MANIFEST GROWTH IS BOUNDED BY GC, not by the publish count: [[gc]]
   * deletes manifest entries whose generation no longer exists (dead

@@ -295,7 +295,7 @@ object Ivf {
     * PARTITION column — so queries reuse the model and prune to their
     * probed cells AT THE SCAN (partition pruning / DPP) instead of
     * retraining and re-assigning per invocation. Idempotent: keyed on
-    * the corpus `_SUCCESS` marker, a second build is a no-op — this is
+    * the `_BUILT` marker, a second build is a no-op — this is
     * the once-per-corpus step, everything per-query lives in
     * [[topKIndexed]]. The 100 TB shape: the rewrite is one narrow pass
     * over (id, vec), and each of the k cell directories is written by
@@ -356,7 +356,7 @@ object Ivf {
         .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
     }
 
-  /** Shared train-once skeleton: _SUCCESS idempotence guard, stale-
+  /** Shared train-once skeleton: _BUILT idempotence guard, stale-
     * sibling GC (within the index FAMILY the dir name carries — float
     * and quantized prefixes differ, so they never GC each other),
     * deterministic training, centroid table write; `writeCorpus`
@@ -366,7 +366,7 @@ object Ivf {
                              dir: String, k: Int, iters: Int, sampleTarget: Int)(
       writeCorpus: (DataFrame, Model, Array[Array[Double]]) => Unit): Unit = {
     val spark = emb.sparkSession
-    ArtifactDir.ensure(spark, dir, "corpus",
+    ArtifactDir.ensure(spark, dir,
       "^((?:graft_ivf_v1|graft_ivfq8_v1|graft_ivfpq_v1)_[0-9a-f]+_).*".r) {
       buildIndexBody(emb, idCol, vecCol, dir, k, iters, sampleTarget)(writeCorpus)
     }
@@ -444,7 +444,7 @@ object Ivf {
     * cell-clustered write per batch — no shuffle of existing index
     * data, no driver collect beyond the cached k-row model. A crashed
     * ingest leaves an uncommitted dir serving ignores and compaction
-    * deletes; a RETRIED batch that committed twice double-appends
+    * never folds; a RETRIED batch that committed twice double-appends
     * (harmless to top-k: duplicate rows of one nid rank adjacently). */
   def ingestIntoIndex(spark: SparkSession, indexDir: String, batch: DataFrame,
                       idCol: String, vecCol: String): Unit = {
@@ -518,9 +518,9 @@ object Ivf {
     // root its own DPP partition pruning (verified in the formatted
     // plan: both the corpus-sized base scan and each staged-batch
     // scan carry `dynamicpruningexpression(cell IN ...)` partition
-    // filters); join count is bounded by the auto-compaction
-    // threshold — the bounded-delta fold the BM25 df/stats serving
-    // pays.
+    // filters); join count is bounded by the staged batches since the
+    // last compaction — the bounded-delta fold the BM25 df/stats
+    // serving pays.
     val scored = corpusPaths(spark, indexDir)
       .map { p =>
         spark.read.parquet(p).join(broadcast(q), "cell")

@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   * `mode("append")` makes a batch's files visible one job-commit
   * rename at a time, so a mid-commit lister can see a TORN batch).
   * A crashed ingest leaves an uncommitted dir readers ignore and
-  * compaction deletes. This is exactly the append-only relaxation
-  * [[GenerationStore]] sanctions for committed generations, and the
-  * same layout serves the single-writer in-place tier.
+  * compaction never folds. This is exactly the append-only relaxation
+  * [[GenerationStore]] sanctions for committed generations; the same
+  * layout also serves plain, never-compacted store dirs.
   */
 private[graft] object StagedBatches {
 
@@ -34,8 +34,8 @@ private[graft] object StagedBatches {
 
   /** Committed staged-batch dirs under `dir/batches`, sorted for
     * deterministic path lists. Driver-side listing, bounded by batches
-    * since the last compaction (the auto-compaction policies bound
-    * that). */
+    * since the last compaction (the generation ingests'
+    * `autoCompactEvery` bounds that). */
   def committedDirs(spark: SparkSession, dir: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/batches")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

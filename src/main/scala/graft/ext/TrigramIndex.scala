@@ -13,14 +13,14 @@ import org.apache.spark.sql.functions._
   * The inline form rebuilt the (g, doc_id) posting relation — a full
   * explode+distinct over the corpus text — on EVERY probe; correct,
   * but serve-many pays the whole build each time. Here the postings
-  * persist once per corpus (content-signature-keyed dir, `_SUCCESS`
+  * persist once per corpus (content-signature-keyed dir, `_BUILT`
   * guard, stale-sibling GC — exactly the [[Bm25.ensureIndex]] shape),
   * REPARTITIONED BY gram and sorted within partitions so each parquet
   * file covers a gram range and a probe's `isin` filter prunes most
   * files at the scan via row-group min/max on `g`.
   *
   * SINGLE-WRITER assumption: same as [[Bm25.ensureIndex]] — no lock
-  * between the `_SUCCESS` probe, sibling GC, and build; concurrent
+  * between the `_BUILT` probe, sibling GC, and build; concurrent
   * builders need external serialization or temp-dir + atomic rename.
   */
 object TrigramIndex {
@@ -31,12 +31,12 @@ object TrigramIndex {
                   root: String = sys.props("java.io.tmpdir")): String =
     s"$root/${Ivf.indexPrefix("graft_tri_v1", corpusDir)}_${Ivf.md5hex(Ivf.contentSig(corpusDir), 8)}"
 
-  /** Build the posting relation on disk; `_SUCCESS`-guarded no-op when
+  /** Build the posting relation on disk; `_BUILT`-guarded no-op when
     * it already exists. One explode+distinct pass over the corpus —
     * the cost every inline probe used to pay. */
   def ensureIndex(docs: DataFrame, idCol: String, textCol: String,
                   dir: String): Unit =
-    ArtifactDir.ensure(docs.sparkSession, dir, "postings",
+    ArtifactDir.ensure(docs.sparkSession, dir,
       "^(graft_tri_v1_[0-9a-f]+_).*".r) {
       docs.selectExpr(s"$idCol AS doc_id",
           s"explode(if(length($textCol) >= 3, " +

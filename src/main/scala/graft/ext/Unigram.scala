@@ -270,7 +270,7 @@ object Unigram {
   }
 
   /** Model-store version — bump when training constants or the model
-    * schema change (a `_SUCCESS`-guarded store must never silently
+    * schema change (a `_BUILT`-guarded store must never silently
     * serve a model the current trainer would not produce). */
   val ModelStoreVersion = "graft_unigram_v1"
 
@@ -287,13 +287,13 @@ object Unigram {
       s"_${Ivf.md5hex(Ivf.contentSig(corpusDir), 8)}"
 
   /** Train once and persist the (piece, cnt) model table —
-    * `_SUCCESS`-guarded no-op when it already exists (the
+    * `_BUILT`-guarded no-op when it already exists (the
     * [[Bm25.ensureIndex]] ArtifactDir discipline, single-writer). The
     * artifact IS the tokenizer a pipeline ships: |vocab| rows, loaded
     * by [[wordPieceRelationFrom]] in any later session/run. */
   def ensureModel(docs: DataFrame, textCol: String, dir: String,
                   vocabSize: Int = 0): Unit =
-    ArtifactDir.ensure(docs.sparkSession, dir, "model",
+    ArtifactDir.ensure(docs.sparkSession, dir,
       ("^(" + ModelStoreVersion + "c[0-9]+_[0-9a-f]+_).*").r) {
       val spark = docs.sparkSession
       import spark.implicits._

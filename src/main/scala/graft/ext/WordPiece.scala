@@ -253,10 +253,10 @@ object WordPiece {
       s"_${Ivf.md5hex(Ivf.contentSig(corpusDir), 8)}"
 
   /** Train once and persist the (surface, cont) model table —
-    * `_SUCCESS`-guarded no-op when present (single-writer ArtifactDir
+    * `_BUILT`-guarded no-op when present (single-writer ArtifactDir
     * discipline). */
   def ensureModel(docs: DataFrame, textCol: String, dir: String): Unit =
-    ArtifactDir.ensure(docs.sparkSession, dir, "model",
+    ArtifactDir.ensure(docs.sparkSession, dir,
       // capture version + corpus-path hash: stale-signature GC clears
       // only old SIGNATURES of this corpus family (the Unigram rule)
       ("^(" + ModelStoreVersion + "_[0-9a-f]+_).*").r) {

@@ -646,35 +646,33 @@ object StreamQueries {
     }),
 
     // ingest-store COMPACTION under the correctness gate: three batch
-    // ingests fragment the count-min store; serve, compact
-    // (Compaction.swapIn's two-rename protocol), serve again. The two
-    // servings must be value-identical (the oracle replays the
-    // estimates — compaction is a pure relayout/fold) and the parquet
-    // file count must provably drop. The before-serving materializes
-    // to scratch BEFORE the swap: a lazy plan would re-list files the
-    // swap deleted.
+    // ingests fragment generation 0 of a count-min store; serve the
+    // held generation, compact (a publish — Compaction.compactCmsToGeneration),
+    // serve the new current one. The two servings must be
+    // value-identical (the oracle replays the estimates — compaction
+    // is a pure fold) and the parquet file count must provably drop.
+    // The held generation is immutable, so its serving stays lazy.
     "q_store_compact" -> ((s, d) => {
       val docs = s.read.parquet(s"$d/documents.parquet")
         .select(col("doc_id"), col("text"))
-      val store = freshScratchDir(d, "compactgate").toString + "/store"
-      (0 until 3).foreach { i =>
-        graft.ext.CountMin.ingestIntoStore(store,
-          docs.filter(col("doc_id") % 3 === i), "text")
+      val root = freshScratchDir(d, "compactgate").toString
+      val held = graft.ext.GenerationStore.publish(s, root) { genDir =>
+        (0 until 3).foreach { i =>
+          graft.ext.CountMin.ingestIntoStore(genDir,
+            docs.filter(col("doc_id") % 3 === i), "text")
+        }
       }
+      val cur = graft.ext.Compaction.compactCmsToGeneration(s, root)
       val exact = graft.ext.CountMin.tokens(docs, "text")
         .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-      def serve() = graft.ext.CountMin.estimates(
-        exact, graft.ext.CountMin.storeSketch(s, store))
-      val beforeDir = freshScratchDir(d, "compactbefore").toString
-      serve().write.parquet(beforeDir)
-      val filesBefore = graft.ext.Compaction.parquetFileCount(s, store)
-      graft.ext.Compaction.compactCmsStore(s, store)
-      val filesAfter = graft.ext.Compaction.parquetFileCount(s, store)
-      s.read.parquet(beforeDir)
-        .select(col("tok"), col("n"), col("est").as("est_before"))
-        .join(serve().select(col("tok"), col("est").as("est_after")),
+      def serve(gen: String) = graft.ext.CountMin.estimates(
+        exact, graft.ext.CountMin.storeSketch(s, gen))
+      val filesDropped = graft.ext.Compaction.parquetFileCount(s, cur) <
+        graft.ext.Compaction.parquetFileCount(s, held)
+      serve(held).select(col("tok"), col("n"), col("est").as("est_before"))
+        .join(serve(cur).select(col("tok"), col("est").as("est_after")),
           Seq("tok"))
-        .withColumn("files_dropped", lit(filesAfter < filesBefore))
+        .withColumn("files_dropped", lit(filesDropped))
         .orderBy(col("est_after").desc, col("tok")).limit(20)
     }),
 

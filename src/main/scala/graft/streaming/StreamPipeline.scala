@@ -287,10 +287,9 @@ object StreamPipeline {
     * with corpus history; with it the LIVE working set is bounded by
     * the retention window's arrival volume. The age filter enforces
     * the semantics at pair time; [[graft.ext.Compaction.pruneBandStore]]
-    * is the physical counterpart that rewrites aged-out rows away
-    * (run it between batches — store layout stays readable either
-    * way). `ttl` is in the column's own units (epoch micros for the
-    * events table). */
+    * is the physical counterpart that deletes a batch's dir once its
+    * newest signature ages out (run it between batches). `ttl` is in
+    * the column's own units (epoch micros for the events table). */
   def incrementalNearDups(spark: SparkSession, stream: DataFrame, corpus: DataFrame,
                           storeDir: String, outDir: String,
                           n: Int = 3, minJ: Double = 0.8,
@@ -384,21 +383,11 @@ object StreamPipeline {
       org.apache.spark.sql.types.StructType.fromDDL("i LONG, j LONG, jaccard DOUBLE"))
   }
 
-  /** Streaming IVF index maintenance: each micro-batch of new vectors
-    * is cell-assigned with the FROZEN centroid model and appended to
-    * the index's cell-partitioned corpus
-    * ([[graft.ext.Ivf.ingestIntoIndex]]) — probes launched after a
-    * batch commits see its vectors with the same DPP-pruned scan as
-    * the original build. The 100 TB shape: per batch one narrow map
-    * plus one cell-clustered write, state is the index on distributed
-    * storage (not a state store), and the k-row centroid model is the
-    * only driver-resident object. Centroid drift is handled by the
-    * next full rebuild, the standard IVF maintenance split. */
   /** The shared ingest drain: run `body` on every non-empty
     * micro-batch until the sources are fully committed, returning the
     * non-empty batch count (the cross-batch contracts in StreamingSpec
-    * and the ingest queries pin ≥ 2). All five store-maintenance
-    * ingests below are this loop plus one per-batch line. */
+    * and the ingest queries pin ≥ 2). Each plain-dir store-maintenance
+    * ingest below is this loop plus one store call. */
   private def drainIngest(stream: DataFrame)(body: DataFrame => Unit): Long =
     drainIngestWithId(stream)((batch, _) => body(batch))
 
@@ -449,16 +438,23 @@ object StreamPipeline {
     batches.get()
   }
 
-  /** @return number of non-empty micro-batches ingested. */
+  /** Streaming IVF index maintenance: each micro-batch of new vectors
+    * is cell-assigned with the FROZEN centroid model and appended to
+    * the index's cell-partitioned corpus
+    * ([[graft.ext.Ivf.ingestIntoIndex]]) — probes launched after a
+    * batch commits see its vectors with the same DPP-pruned scan as
+    * the original build. The 100 TB shape: per batch one narrow map
+    * plus one cell-clustered write, state is the index on distributed
+    * storage (not a state store), and the k-row centroid model is the
+    * only driver-resident object. Centroid drift is handled by the
+    * next full rebuild, the standard IVF maintenance split.
+    *
+    * @return number of non-empty micro-batches ingested. */
   def ivfIngest(spark: SparkSession, stream: DataFrame, indexDir: String,
-                idCol: String, vecCol: String,
-                autoCompactMaxFiles: Int = 0): Long =
+                idCol: String, vecCol: String): Long =
     drainIngest(stream) { batch =>
       graft.ext.Ivf.ingestIntoIndex(batch.sparkSession, indexDir, batch,
         idCol, vecCol)
-      graft.ext.Compaction.maybeCompactIvf(batch.sparkSession, indexDir,
-        autoCompactMaxFiles)
-      ()
     }
 
   /** Streaming BM25 index maintenance — [[ivfIngest]]'s pattern
@@ -466,55 +462,63 @@ object StreamPipeline {
     * each micro-batch of new documents is tokenized (batch-bounded
     * work) and staged+committed atomically as one batch generation.
     * State is the on-disk index, not a state store; probes after a
-    * committed batch score the union corpus. `autoCompactEvery` > 0
-    * opts into the [[graft.ext.Bm25.maybeCompact]] policy: whenever
-    * the committed staged-batch count reaches the threshold, base +
-    * batches fold back to one generation between triggers — serving
-    * cost stays bounded however long the stream runs. */
+    * committed batch score the union corpus. A plain index dir is
+    * never compacted; a stream that must keep serving cost bounded
+    * however long it runs uses [[bm25IngestGen]], which folds staged
+    * batches into a new generation. */
   def bm25Ingest(spark: SparkSession, stream: DataFrame, indexDir: String,
-                 idCol: String, textCol: String,
-                 autoCompactEvery: Int = 0): Long =
+                 idCol: String, textCol: String): Long =
     drainIngest(stream) { batch =>
       graft.ext.Bm25.ingestIntoIndex(batch.sparkSession, indexDir, batch,
         idCol, textCol)
-      graft.ext.Bm25.maybeCompact(batch.sparkSession, indexDir,
-        autoCompactEvery)
-      ()
+    }
+
+  /** The generation-store maintainer loop of [[bm25IngestGen]] and
+    * [[spanIngestGen]]: every micro-batch RE-RESOLVES the current
+    * generation of `root` (a compaction may have published a new one
+    * since the last batch) and `ingest`s into it; when that
+    * generation's committed-batch count reaches `autoCompactEvery`,
+    * `compact` publishes a folded generation and the age-gated GC
+    * runs. Resolve + append + compact run SEQUENTIALLY inside one
+    * foreachBatch, so an appended batch can never land in a
+    * generation a concurrent fold has already superseded — the
+    * single-MAINTAINER contract; concurrent readers need no
+    * coordination at all. */
+  private def drainIntoGeneration(stream: DataFrame, root: String,
+                                  autoCompactEvery: Int, gcAgeMs: Long,
+                                  compact: (SparkSession, String) => String)
+                                 (ingest: (DataFrame, String) => Unit): Long =
+    drainIngest(stream) { batch =>
+      val sp = batch.sparkSession
+      val cur = graft.ext.GenerationStore.currentGenDir(sp, root)
+        .getOrElse(sys.error(s"generation ingest: no committed generation under $root"))
+      ingest(batch, cur)
+      if (autoCompactEvery > 0 &&
+          graft.ext.StagedBatches.committedDirs(sp, cur).length
+            >= autoCompactEvery) {
+        compact(sp, root)
+        graft.ext.GenerationStore.gc(sp, root, gcAgeMs)
+        ()
+      }
     }
 
   /** [[bm25Ingest]] under the [[graft.ext.GenerationStore]] protocol —
     * the deployment shape with LONG-RUNNING readers beside the
-    * maintainer, where the in-place compaction swap is unsafe. Every
-    * micro-batch RE-RESOLVES the current generation (a compaction may
-    * have published a new one since the last batch) and stage-commits
-    * into it; when the generation's committed-batch count reaches
-    * `autoCompactEvery`, the same foreachBatch publishes a folded
+    * maintainer ([[drainIntoGeneration]]'s loop): each micro-batch
+    * stage-commits into the current generation, and at
+    * `autoCompactEvery` committed batches the fold publishes a new
     * generation (compaction-as-publish — nothing renamed or deleted,
-    * in-flight readers finish on the superseded dir) and runs the
-    * age-gated GC. Resolve + append + compact run SEQUENTIALLY inside
-    * one foreachBatch, so an appended batch can never land in a
-    * generation a concurrent fold has already superseded — the
-    * single-MAINTAINER contract; concurrent readers need no
-    * coordination at all. The root must hold one committed generation
-    * (the initial build, published by the caller) before the stream
-    * starts. */
+    * in-flight readers finish on the superseded dir). The root must
+    * hold one committed generation (the initial build, published by
+    * the caller) before the stream starts. */
   def bm25IngestGen(spark: SparkSession, stream: DataFrame, root: String,
                     idCol: String, textCol: String,
                     autoCompactEvery: Int = 0,
                     gcAgeMs: Long = 3600L * 1000): Long =
-    drainIngest(stream) { batch =>
-      val sp = batch.sparkSession
-      val cur = graft.ext.GenerationStore.currentGenDir(sp, root)
-        .getOrElse(sys.error(
-          s"bm25IngestGen: no committed generation under $root"))
-      graft.ext.Bm25.ingestIntoIndex(sp, cur, batch, idCol, textCol)
-      if (autoCompactEvery > 0 &&
-          graft.ext.Bm25.committedBatchDirs(sp, cur).length
-            >= autoCompactEvery) {
-        graft.ext.Compaction.compactBm25ToGeneration(sp, root)
-        graft.ext.GenerationStore.gc(sp, root, gcAgeMs)
-        ()
-      }
+    drainIntoGeneration(stream, root, autoCompactEvery, gcAgeMs,
+        graft.ext.Compaction.compactBm25ToGeneration) { (batch, cur) =>
+      graft.ext.Bm25.ingestIntoIndex(batch.sparkSession, cur, batch,
+        idCol, textCol)
     }
 
   /** Streaming topic-shard routing — [[ivfIngest]]'s pattern applied
@@ -528,13 +532,9 @@ object StreamPipeline {
     * batches via [[graft.ext.KMeans.readShards]]. */
   def kmeansIngest(spark: SparkSession, stream: DataFrame, outDir: String,
                    cents: Array[Array[Long]],
-                   idCol: String, vecCol: String,
-                   autoCompactMaxFiles: Int = 0): Long =
+                   idCol: String, vecCol: String): Long =
     drainIngest(stream) { batch =>
       graft.ext.KMeans.ingestIntoShards(outDir, batch, idCol, vecCol, cents)
-      graft.ext.Compaction.maybeCompactKmeans(batch.sparkSession, outDir,
-        autoCompactMaxFiles)
-      ()
     }
 
   /** Streaming SemDeDup maintenance — the semantic-dedup analogue of
@@ -560,24 +560,18 @@ object StreamPipeline {
     * rare ingest with NO read side at all; serving folds the log with
     * one bounded groupBy ([[graft.ext.CountMin.storeSketch]]). */
   def cmsIngest(spark: SparkSession, stream: DataFrame, storeDir: String,
-                textCol: String, autoCompactMaxFiles: Int = 0): Long =
+                textCol: String): Long =
     drainIngest(stream) { batch =>
       graft.ext.CountMin.ingestIntoStore(storeDir, batch, textCol)
-      graft.ext.Compaction.maybeCompactCms(batch.sparkSession, storeDir,
-        autoCompactMaxFiles)
-      ()
     }
 
   /** Streaming Dolma-attributes maintenance: per micro-batch, tag the
     * batch and append its attribute rows to the persisted relation
     * ([[graft.ext.Attributes.ingestIntoAttributes]]). */
   def attrsIngest(spark: SparkSession, stream: DataFrame,
-                  attrsDir: String, autoCompactMaxFiles: Int = 0): Long =
+                  attrsDir: String): Long =
     drainIngest(stream) { batch =>
       graft.ext.Attributes.ingestIntoAttributes(attrsDir, batch)
-      graft.ext.Compaction.maybeCompactAttrs(batch.sparkSession, attrsDir,
-        autoCompactMaxFiles)
-      ()
     }
 
   /** Streaming SPAN-attributes maintenance: each micro-batch's span
@@ -587,15 +581,11 @@ object StreamPipeline {
     * persisted ONCE for the stream's lifetime (it is static), not
     * re-derived per micro-batch. */
   def spanIngest(spark: SparkSession, stream: DataFrame, spanDir: String,
-                 benchmark: DataFrame, n: Int = 3,
-                 autoCompactMaxFiles: Int = 0): Long = {
+                 benchmark: DataFrame, n: Int = 3): Long = {
     val benchGrams = graft.ext.Attributes.benchGramSet(benchmark, n = n).persist()
     try drainIngest(stream) { batch =>
       graft.ext.Attributes.ingestIntoSpanAttributes(spanDir, batch,
         benchGrams, n = n)
-      graft.ext.Compaction.maybeCompactSpans(batch.sparkSession, spanDir,
-        autoCompactMaxFiles)
-      ()
     }
     finally { benchGrams.unpersist(); () }
   }
@@ -604,13 +594,9 @@ object StreamPipeline {
     * [[bm25IngestGen]]'s shape for the span-attribute tier, the store
     * with the clearest long-running-reader workload (a Dolma-style
     * excision mix over the whole corpus runs for hours while tagging
-    * continues). Every micro-batch RE-RESOLVES the current generation
-    * and stage-commits its span rows into it; at `autoCompactEvery`
-    * committed batches the same foreachBatch publishes a folded
-    * generation and runs the age-gated GC. Resolve + append + compact
-    * run sequentially inside one foreachBatch — the single-MAINTAINER
-    * contract; concurrent readers need no coordination. The root must
-    * hold one committed generation (the initial
+    * continues). Each micro-batch stage-commits its span rows into the
+    * current generation ([[drainIntoGeneration]]'s loop). The root
+    * must hold one committed generation (the initial
     * [[graft.ext.Attributes.ensureSpanAttributes]] build, published by
     * the caller) before the stream starts. */
   def spanIngestGen(spark: SparkSession, stream: DataFrame, root: String,
@@ -618,20 +604,10 @@ object StreamPipeline {
                     autoCompactEvery: Int = 0,
                     gcAgeMs: Long = 3600L * 1000): Long = {
     val benchGrams = graft.ext.Attributes.benchGramSet(benchmark, n = n).persist()
-    try drainIngest(stream) { batch =>
-      val sp = batch.sparkSession
-      val cur = graft.ext.GenerationStore.currentGenDir(sp, root)
-        .getOrElse(sys.error(
-          s"spanIngestGen: no committed generation under $root"))
+    try drainIntoGeneration(stream, root, autoCompactEvery, gcAgeMs,
+        graft.ext.Compaction.compactSpansToGeneration) { (batch, cur) =>
       graft.ext.Attributes.ingestIntoSpanAttributes(cur, batch,
         benchGrams, n = n)
-      if (autoCompactEvery > 0 &&
-          graft.ext.StagedBatches.committedDirs(sp, cur).length
-            >= autoCompactEvery) {
-        graft.ext.Compaction.compactSpansToGeneration(sp, root)
-        graft.ext.GenerationStore.gc(sp, root, gcAgeMs)
-        ()
-      }
     }
     finally { benchGrams.unpersist(); () }
   }

@@ -5,9 +5,10 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Compaction contract for the append-only ingest stores: serving
-  * output is bit-identical before and after, and the data file count
-  * provably drops. Plus the near-dup band-store retention (ttl) path.
+/** Compaction contract for the append-only ingest stores: a compaction
+  * publishes a new generation whose serving output is bit-identical to
+  * the generation it folds, with provably fewer data files. Plus the
+  * near-dup band-store retention (ttl) path.
   */
 class CompactionSpec extends AnyFunSuite {
   private lazy val spark = SparkSession.builder()
@@ -45,90 +46,90 @@ class CompactionSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val store = tmpDir("cms") + "/store"
-    (0 until 3).foreach { i =>
-      CountMin.ingestIntoStore(store, docs.filter(col("doc_id") % 3 === i), "text")
+    val root = tmpDir("cms") + "/store"
+    val held = GenerationStore.publish(spark, root) { g =>
+      (0 until 3).foreach { i =>
+        CountMin.ingestIntoStore(g, docs.filter(col("doc_id") % 3 === i), "text")
+      }
     }
     val cands = Seq("the", "and", "data", "zzz_absent").toDF("tok")
-    val before = sortedRows(
-      CountMin.estimates(cands, CountMin.storeSketch(spark, store)))
-    val filesBefore = Compaction.parquetFileCount(spark, store)
-    Compaction.compactCmsStore(spark, store)
-    val after = sortedRows(
-      CountMin.estimates(cands, CountMin.storeSketch(spark, store)))
-    val filesAfter = Compaction.parquetFileCount(spark, store)
-    assert(before == after)
+    def serve(gen: String) = sortedRows(
+      CountMin.estimates(cands, CountMin.storeSketch(spark, gen)))
+    val cur = Compaction.compactCmsToGeneration(spark, root)
+    assert(serve(held) == serve(cur))
+    val filesBefore = Compaction.parquetFileCount(spark, held)
+    val filesAfter = Compaction.parquetFileCount(spark, cur)
     assert(filesAfter < filesBefore, s"$filesAfter !< $filesBefore")
-    // the fold landed as ONE base sketch; staged batches retired
-    assert(spark.read.parquet(s"$store/base").count() <=
+    // the fold landed as ONE base sketch with no staged batches
+    assert(spark.read.parquet(s"$cur/base").count() <=
       CountMin.Depth * CountMin.Width)
-    assert(StagedBatches.committedDirs(spark, store).isEmpty)
+    assert(StagedBatches.committedDirs(spark, cur).isEmpty)
+  }
+
+  /** Query terms of the first five documents, collected so the
+    * relation does not depend on the index it queries. */
+  private def qtermsOf(dir: String) = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/tf")
+      .filter(col("doc_id") < 5)
+      .select(col("doc_id").as("qid"), col("tok")).distinct()
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq.toDF("qid", "tok")
   }
 
   test("bm25 index: tf compaction preserves top-k, reduces files") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val dir = tmpDir("bm25") + "/idx"
-    Bm25.ensureIndex(docs, "doc_id", "text", dir)
+    val root = tmpDir("bm25") + "/store"
+    val held = GenerationStore.publish(spark, root)(
+      Bm25.ensureIndex(docs, "doc_id", "text", _))
     val copies = docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    Bm25.ingestIntoIndex(spark, dir, copies.filter(col("doc_id") % 2 === 0),
+    Bm25.ingestIntoIndex(spark, held, copies.filter(col("doc_id") % 2 === 0),
       "doc_id", "text")
-    Bm25.ingestIntoIndex(spark, dir, copies.filter(col("doc_id") % 2 =!= 0),
+    Bm25.ingestIntoIndex(spark, held, copies.filter(col("doc_id") % 2 =!= 0),
       "doc_id", "text")
-    // materialize query terms locally: a lazy DataFrame over tf/ would
-    // re-scan files the compaction swap has deleted
-    import spark.implicits._
-    val qterms = spark.read.parquet(s"$dir/tf")
-      .filter(col("doc_id") < 5)
-      .select(col("doc_id").as("qid"), col("tok")).distinct()
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-      .toSeq.toDF("qid", "tok")
-    val before = sortedRows(Bm25.topK(spark, dir, qterms, 5))
-    val filesBefore = Compaction.parquetFileCount(spark, dir)
+    val qterms = qtermsOf(held)
+    val before = sortedRows(Bm25.topK(spark, held, qterms, 5))
     // streaming ingest stages one COMMITTED batch dir per micro-batch;
     // the base df/stats stay single-generation and the serving fold
     // spans base + batches
-    assert(Bm25.committedBatchDirs(spark, dir).length == 2)
-    val dfFolded = spark.read.parquet(Bm25.storePaths(spark, dir, "df"): _*)
+    assert(Bm25.committedBatchDirs(spark, held).length == 2)
+    val dfFolded = spark.read.parquet(Bm25.storePaths(spark, held, "df"): _*)
       .groupBy(col("tok")).agg(sum(col("df")).as("df"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(spark.read.parquet(s"$dir/stats").count() == 1L)
-    Compaction.compactBm25Index(spark, dir)
-    val after = sortedRows(Bm25.topK(spark, dir, qterms, 5))
-    val filesAfter = Compaction.parquetFileCount(spark, dir)
-    assert(before == after)
+    assert(spark.read.parquet(s"$held/stats").count() == 1L)
+    val cur = Compaction.compactBm25ToGeneration(spark, root)
+    assert(sortedRows(Bm25.topK(spark, cur, qterms, 5)) == before)
+    val filesBefore = Compaction.parquetFileCount(spark, held)
+    val filesAfter = Compaction.parquetFileCount(spark, cur)
     assert(filesAfter < filesBefore, s"$filesAfter !< $filesBefore")
-    // the fold materialized into a single base generation: batches
-    // gone, df value-identical to the pre-compaction serving fold,
-    // stats back to a single row
-    assert(Bm25.committedBatchDirs(spark, dir).isEmpty)
-    val dfAfter = spark.read.parquet(s"$dir/df")
+    // the fold materialized into a single base generation: no batches,
+    // df value-identical to the pre-compaction serving fold, stats a
+    // single row
+    assert(Bm25.committedBatchDirs(spark, cur).isEmpty)
+    val dfAfter = spark.read.parquet(s"$cur/df")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(dfAfter == dfFolded)
-    assert(spark.read.parquet(s"$dir/stats").count() == 1L)
+    assert(spark.read.parquet(s"$cur/stats").count() == 1L)
   }
 
   test("bm25 ingest commits batches atomically; uncommitted staging is invisible") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val dir = tmpDir("bm25atomic") + "/idx"
-    Bm25.ensureIndex(docs, "doc_id", "text", dir)
+    val root = tmpDir("bm25atomic") + "/store"
+    val held = GenerationStore.publish(spark, root)(
+      Bm25.ensureIndex(docs, "doc_id", "text", _))
     val copies = docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    Bm25.ingestIntoIndex(spark, dir, copies, "doc_id", "text")
-    import spark.implicits._
-    val qterms = spark.read.parquet(s"$dir/tf")
-      .filter(col("doc_id") < 5)
-      .select(col("doc_id").as("qid"), col("tok")).distinct()
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-      .toSeq.toDF("qid", "tok")
-    val committed = sortedRows(Bm25.topK(spark, dir, qterms, 5))
+    Bm25.ingestIntoIndex(spark, held, copies, "doc_id", "text")
+    val qterms = qtermsOf(held)
+    val committed = sortedRows(Bm25.topK(spark, held, qterms, 5))
     // simulate a crash mid-ingest: a staged batch dir with data but NO
     // _COMMITTED marker must not change any serving result — the
     // crash-window the old three-append layout had (tf visible, its
     // df/stats increments lost, every score silently skewed)
-    val batches = Bm25.committedBatchDirs(spark, dir)
+    val batches = Bm25.committedBatchDirs(spark, held)
     assert(batches.length == 1)
-    val debris = s"$dir/batches/b_crashdebris"
+    val debris = s"$held/batches/b_crashdebris"
     // committedBatchDirs returns fs-qualified paths (file:/...)
     val headLocal = batches.head.stripPrefix("file:")
     for (sub <- Seq("tf", "df", "stats")) {
@@ -140,103 +141,73 @@ class CompactionSpec extends AnyFunSuite {
           dst.toPath.resolve(f.getName))
       }
     }
-    assert(Bm25.committedBatchDirs(spark, dir).length == 1,
+    assert(Bm25.committedBatchDirs(spark, held).length == 1,
       "unmarked staging dir must stay invisible")
-    assert(sortedRows(Bm25.topK(spark, dir, qterms, 5)) == committed)
-    // compaction garbage-collects the debris with the atomic dir swap
-    Compaction.compactBm25Index(spark, dir)
-    assert(!new java.io.File(debris).exists())
-    assert(sortedRows(Bm25.topK(spark, dir, qterms, 5)) == committed)
-  }
-
-  test("cms auto-compaction fires at the file threshold, estimates unchanged") {
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val store = tmpDir("cmsauto") + "/store"
-    var fired = 0
-    (0 until 3).foreach { i =>
-      CountMin.ingestIntoStore(store, docs.filter(col("doc_id") % 3 === i), "text")
-      if (Compaction.maybeCompactCms(spark, store, maxFiles = 1)) fired += 1
-    }
-    assert(fired >= 1, "growth past the 1-file floor must trigger")
-    assert(!Compaction.maybeCompactCms(spark, store, maxFiles = 1),
-      "must not re-fire at the compacted steady state")
-    val cands = Seq("the", "and", "data", "zzz_absent").toDF("tok")
-    val got = sortedRows(
-      CountMin.estimates(cands, CountMin.storeSketch(spark, store)))
-    // reference: same three ingests, never compacted
-    val ref = tmpDir("cmsauto_ref") + "/store"
-    (0 until 3).foreach { i =>
-      CountMin.ingestIntoStore(ref, docs.filter(col("doc_id") % 3 === i), "text")
-    }
-    assert(got == sortedRows(
-      CountMin.estimates(cands, CountMin.storeSketch(spark, ref))))
+    assert(sortedRows(Bm25.topK(spark, held, qterms, 5)) == committed)
+    // compaction never folds the debris: the new generation carries no
+    // batches at all, and serves exactly the committed state
+    val cur = Compaction.compactBm25ToGeneration(spark, root)
+    assert(!new java.io.File(s"$cur/batches").exists())
+    assert(sortedRows(Bm25.topK(spark, cur, qterms, 5)) == committed)
   }
 
   test("bm25 auto-compaction fires exactly at the batch threshold, serving unchanged") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val dir = tmpDir("bm25auto") + "/idx"
-    Bm25.ensureIndex(docs, "doc_id", "text", dir)
+    val base = tmpDir("bm25auto")
+    val root = s"$base/store"
+    val g0 = GenerationStore.publish(spark, root)(
+      Bm25.ensureIndex(docs, "doc_id", "text", _))
     val copies = docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    import spark.implicits._
-    val qterms = spark.read.parquet(s"$dir/tf")
-      .filter(col("doc_id") < 5)
-      .select(col("doc_id").as("qid"), col("tok")).distinct()
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-      .toSeq.toDF("qid", "tok")
-    var fired = 0
     (0 until 3).foreach { i =>
-      Bm25.ingestIntoIndex(spark, dir, copies.filter(col("doc_id") % 3 === i),
-        "doc_id", "text")
-      if (Bm25.maybeCompact(spark, dir, maxBatches = 3)) fired += 1
+      copies.filter(col("doc_id") % 3 === i).coalesce(1)
+        .write.parquet(s"$base/src/b$i")
     }
-    assert(fired == 1, s"expected exactly one compaction, saw $fired")
-    assert(Bm25.committedBatchDirs(spark, dir).isEmpty)
+    val stream = spark.readStream.schema(copies.schema)
+      .option("maxFilesPerTrigger", "1")
+      .option("recursiveFileLookup", "true").parquet(s"$base/src")
+    val nBatches = graft.streaming.StreamPipeline.bm25IngestGen(spark, stream,
+      root, "doc_id", "text", autoCompactEvery = 3)
+    assert(nBatches == 3L, s"expected 3 micro-batches, saw $nBatches")
+    // exactly one new generation, published at the third batch; the
+    // age-gated gc keeps generation 0 for its readers
+    val gens = new java.io.File(s"$root/generations").list().toSeq
+    assert(gens.length == 2, s"expected exactly one new generation: $gens")
+    val cur = GenerationStore.currentGenDir(spark, root).get
+    assert(cur != g0)
+    assert(Bm25.committedBatchDirs(spark, cur).isEmpty)
+    assert(Bm25.committedBatchDirs(spark, g0).length == 3)
     // serving equals a replayed no-compaction ingest of the same docs
     val expectDir = tmpDir("bm25auto_ref") + "/idx"
     Bm25.ensureIndex(docs, "doc_id", "text", expectDir)
     Bm25.ingestIntoIndex(spark, expectDir, copies, "doc_id", "text")
-    assert(sortedRows(Bm25.topK(spark, dir, qterms, 5)) ==
+    val qterms = qtermsOf(g0)
+    assert(sortedRows(Bm25.topK(spark, cur, qterms, 5)) ==
       sortedRows(Bm25.topK(spark, expectDir, qterms, 5)))
   }
 
   test("attributes store: compaction preserves mixes, reduces files") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val dir = tmpDir("attrs") + "/attrstore"
-    Attributes.ensureAttributes(docs, dir)
+    val root = tmpDir("attrs") + "/store"
+    val held = GenerationStore.publish(spark, root)(
+      Attributes.ensureAttributes(docs, _))
     val copies = docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    Attributes.ingestIntoAttributes(dir, copies.filter(col("doc_id") % 2 === 0))
-    Attributes.ingestIntoAttributes(dir, copies.filter(col("doc_id") % 2 =!= 0))
+    Attributes.ingestIntoAttributes(held, copies.filter(col("doc_id") % 2 === 0))
+    Attributes.ingestIntoAttributes(held, copies.filter(col("doc_id") % 2 =!= 0))
     val union = docs.unionByName(copies)
-    def mix() = sortedRows(
+    def mix(dir: String) = sortedRows(
       Attributes.mixed(spark, dir, union, col("clf_keep") && col("gopher_keep"))
         .select(col("doc_id"), col("n_words"), col("quality_q4"), col("lang")))
-    val before = mix()
     // staged ingest batches live under batches/<id>/ — count the store
-    def attrFiles() = Attributes.attrsPaths(spark, dir)
+    def attrFiles(dir: String) = Attributes.attrsPaths(spark, dir)
       .map(Compaction.parquetFileCount(spark, _)).sum
-    val filesBefore = attrFiles()
-    Compaction.compactAttrs(spark, dir)
-    val after = mix()
-    val filesAfter = attrFiles()
-    assert(before == after)
-    assert(filesAfter < filesBefore, s"$filesAfter !< $filesBefore")
+    val cur = Compaction.compactAttrsToGeneration(spark, root)
+    assert(mix(held) == mix(cur))
+    assert(attrFiles(cur) < attrFiles(held), s"${attrFiles(cur)} !< ${attrFiles(held)}")
     // row count preserved (relayout, not a fold)
-    assert(spark.read.parquet(s"$dir/attrs").count() == union.count())
-    // the growth trigger is QUIET at the compacted steady state (an
-    // absolute-count trigger would rewrite the store every batch once
-    // the floor itself reached the threshold), fires after fresh
-    // appends, and is a no-op when disabled
-    assert(!Compaction.maybeCompactAttrs(spark, dir, maxFiles = 0))
-    assert(!Compaction.maybeCompactAttrs(spark, dir, maxFiles = 1))
-    Attributes.ingestIntoAttributes(dir,
-      docs.select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-    assert(Compaction.maybeCompactAttrs(spark, dir, maxFiles = 1))
-    assert(!Compaction.maybeCompactAttrs(spark, dir, maxFiles = 1),
-      "must not re-fire immediately after compacting")
+    assert(spark.read.parquet(s"$cur/attrs").count() == union.count())
+    assert(StagedBatches.committedDirs(spark, cur).isEmpty)
   }
 
   test("span store: compaction preserves spans and mixes, reduces files") {
@@ -247,75 +218,57 @@ class CompactionSpec extends AnyFunSuite {
           col("doc_id").cast("string"), lit("@example.com")).as("text"))
     val bench = docs.filter(col("source") === "src0")
     val cand = docs.filter(col("source") =!= "src0")
-    val dir = tmpDir("spans") + "/spanstore"
-    Attributes.ensureSpanAttributes(cand, bench, dir, n = 3)
+    val root = tmpDir("spans") + "/store"
+    val held = GenerationStore.publish(spark, root)(
+      Attributes.ensureSpanAttributes(cand, bench, _, n = 3))
     val copies = cand.select((col("doc_id") + 1000000L).as("doc_id"),
       col("source"), col("text"))
-    val grams = Attributes.benchGramSet(bench)
-    Attributes.ingestIntoSpanAttributes(dir, copies, grams)
-    def spans() = sortedRows(Attributes.readSpans(spark, dir))
-    def spanFiles() = Attributes.spanPaths(spark, dir)
+    Attributes.ingestIntoSpanAttributes(held, copies, Attributes.benchGramSet(bench))
+    def spans(dir: String) = sortedRows(Attributes.readSpans(spark, dir))
+    def spanFiles(dir: String) = Attributes.spanPaths(spark, dir)
       .map(Compaction.parquetFileCount(spark, _)).sum
-    val before = spans()
-    val filesBefore = spanFiles()
-    // the growth trigger IS the compaction here: fresh appends sit
-    // above the compacted floor, so maxFiles=1 fires — then stays
-    // quiet at steady state
-    assert(!Compaction.maybeCompactSpans(spark, dir, maxFiles = 1000000))
-    assert(Compaction.maybeCompactSpans(spark, dir, maxFiles = 1))
-    assert(spans() == before)
-    assert(spanFiles() < filesBefore)
-    assert(!Compaction.maybeCompactSpans(spark, dir, maxFiles = 1),
-      "must not re-fire immediately after compacting")
+    val cur = Compaction.compactSpansToGeneration(spark, root)
+    assert(spans(cur) == spans(held))
+    assert(spanFiles(cur) < spanFiles(held))
+    assert(StagedBatches.committedDirs(spark, cur).isEmpty)
   }
 
   test("ivf corpus: compaction preserves probes, folds cell files") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val dir = tmpDir("ivf") + "/idx"
-    Ivf.buildIndex(emb, "vec_id", "embedding", dir, k = 8, iters = 2)
+    val root = tmpDir("ivf") + "/store"
+    val held = GenerationStore.publish(spark, root)(
+      Ivf.buildIndex(emb, "vec_id", "embedding", _, k = 8, iters = 2))
     val copies = emb.select((col("vec_id") + 1000000L).as("vec_id"),
       col("embedding"))
-    Ivf.ingestIntoIndex(spark, dir, copies.filter(col("vec_id") % 2 === 0),
+    Ivf.ingestIntoIndex(spark, held, copies.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding")
-    Ivf.ingestIntoIndex(spark, dir, copies.filter(col("vec_id") % 2 =!= 0),
+    Ivf.ingestIntoIndex(spark, held, copies.filter(col("vec_id") % 2 =!= 0),
       "vec_id", "embedding")
     val queries = emb.filter(col("vec_id") % 37 === 0)
-    def probe() = sortedRows(
+    def probe(dir: String) = sortedRows(
       Ivf.topKIndexed(spark, dir, queries, "vec_id", "embedding",
         k = 3, nProbe = 2))
-    val before = probe()
+    val before = probe(held)
     // ingest STAGES batches under batches/<id>/ — a reader folds only
     // committed ones, so deleting a marker must hide that batch and
     // restoring it must bring the rows back (the torn-batch guard)
-    val batches = Ivf.committedBatchDirs(spark, dir)
+    val batches = Ivf.committedBatchDirs(spark, held)
     assert(batches.length == 2, s"expected 2 committed batches: $batches")
     val marker = new org.apache.hadoop.fs.Path(s"${batches.head}/_COMMITTED")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(marker, false)
-    assert(Ivf.committedBatchDirs(spark, dir).length == 1)
-    assert(probe() != before, "an uncommitted batch must be invisible")
+    assert(Ivf.committedBatchDirs(spark, held).length == 1)
+    assert(probe(held) != before, "an uncommitted batch must be invisible")
     fs.create(marker, false).close()
-    assert(probe() == before)
+    assert(probe(held) == before)
+    val cur = Compaction.compactIvfToGeneration(spark, root)
+    assert(probe(cur) == before)
     // whole-index file count: base corpus + staged batches
-    val filesBefore = Compaction.parquetFileCount(spark, dir)
-    Compaction.compactIvfCorpus(spark, dir)
-    val after = probe()
-    val filesAfter = Compaction.parquetFileCount(spark, dir)
-    assert(before == after)
+    val filesBefore = Compaction.parquetFileCount(spark, held)
+    val filesAfter = Compaction.parquetFileCount(spark, cur)
     assert(filesAfter < filesBefore, s"$filesAfter !< $filesBefore")
-    assert(Ivf.committedBatchDirs(spark, dir).isEmpty,
-      "the swap must retire staged batches atomically with the fold")
-    // the growth trigger stays quiet at the compacted steady state —
-    // the per-cell floor means an absolute-count trigger would rewrite
-    // the whole corpus on every micro-batch once cells >= maxFiles
-    assert(!Compaction.maybeCompactIvf(spark, dir, maxFiles = 1),
-      "must not fire right after compacting")
-    Ivf.ingestIntoIndex(spark, dir,
-      emb.select((col("vec_id") + 2000000L).as("vec_id"), col("embedding")),
-      "vec_id", "embedding")
-    val afterIngest = probe()
-    assert(Compaction.maybeCompactIvf(spark, dir, maxFiles = 1))
-    assert(probe() == afterIngest)
+    assert(Ivf.committedBatchDirs(spark, cur).isEmpty,
+      "the folded generation must carry no staged batches")
   }
 
   test("compaction between streaming micro-batches: serving equals union sketch") {
@@ -323,8 +276,9 @@ class CompactionSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"))
     val half1 = docs.filter(col("doc_id") % 2 === 0)
     val half2 = docs.filter(col("doc_id") % 2 =!= 0)
-    val store = tmpDir("cmsstream") + "/store"
-    def ingestStreaming(part: org.apache.spark.sql.DataFrame, tag: String): Unit = {
+    val root = tmpDir("cmsstream") + "/store"
+    def ingestStreaming(part: org.apache.spark.sql.DataFrame, tag: String,
+                        store: String): Unit = {
       val src = tmpDir(s"cmssrc$tag")
       part.withColumn("half", col("doc_id") % 4)
         .repartition(2).write.mode("overwrite").parquet(src)
@@ -333,49 +287,12 @@ class CompactionSpec extends AnyFunSuite {
         .select(col("doc_id"), col("text"))
       graft.streaming.StreamPipeline.cmsIngest(spark, stream, store, "text")
     }
-    ingestStreaming(half1, "a")
-    Compaction.compactCmsStore(spark, store) // compact mid-ingest
-    ingestStreaming(half2, "b")
-    val merged = sortedRows(CountMin.storeSketch(spark, store))
+    GenerationStore.publish(spark, root)(ingestStreaming(half1, "a", _))
+    val cur = Compaction.compactCmsToGeneration(spark, root) // mid-ingest
+    ingestStreaming(half2, "b", cur)
+    val merged = sortedRows(CountMin.storeSketch(spark, cur))
     val direct = sortedRows(CountMin.sketch(CountMin.tokens(docs, "text")))
     assert(merged == direct)
-  }
-
-  test("crash between swap renames: next compaction recovers, no data loss") {
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val store = tmpDir("crash") + "/store"
-    (0 until 2).foreach { i =>
-      CountMin.ingestIntoStore(store, docs.filter(col("doc_id") % 2 === i), "text")
-    }
-    val cands = Seq("the", "and", "data").toDF("tok")
-    val before = sortedRows(
-      CountMin.estimates(cands, CountMin.storeSketch(spark, store)))
-    // simulate the crash window between the two swap renames: dir is
-    // ABSENT, the complete old store sits at .compact_old, a complete
-    // replacement at .compact_tmp — the only two copies on disk
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirP = new org.apache.hadoop.fs.Path(store)
-    val oldP = new org.apache.hadoop.fs.Path(store + ".compact_old")
-    val tmpP = new org.apache.hadoop.fs.Path(store + ".compact_tmp")
-    // a complete replacement in the compacted layout (folded base/)
-    CountMin.storeSketch(spark, store)
-      .coalesce(1).write.parquet(s"$tmpP/base")
-    assert(fs.rename(dirP, oldP))
-    assert(!fs.exists(dirP))
-    // re-running compaction must first restore the store, then compact
-    Compaction.compactCmsStore(spark, store)
-    assert(fs.exists(dirP) && !fs.exists(oldP) && !fs.exists(tmpP))
-    val after = sortedRows(
-      CountMin.estimates(cands, CountMin.storeSketch(spark, store)))
-    assert(before == after)
-    // store-gone-and-no-backup refuses loudly instead of deleting debris
-    assert(fs.rename(dirP, tmpP))
-    val e = intercept[RuntimeException](Compaction.compactCmsStore(spark, store))
-    assert(e.getMessage.contains("refusing to proceed"))
-    assert(fs.rename(tmpP, dirP)) // restore for any later suite ordering
   }
 
   test("pruneBandStore on a store built without tsCol fails with intent") {
