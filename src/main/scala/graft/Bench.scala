@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline query set
   * against SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query
   * seconds.
@@ -164,19 +162,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val startNs = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "2700").toDouble
     def elapsedS: Double = (System.nanoTime() - startNs) / 1e9
     def overBudget: Boolean = elapsedS > budgetS
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cores)
     spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String): Unit =
@@ -282,7 +271,7 @@ object Bench {
     def sentinel(): Double = {
       val t0 = System.nanoTime()
       try {
-        spark.range(0, 8L * 1000 * 1000, 1, cpus.toInt)
+        spark.range(0, 8L * 1000 * 1000, 1, GraftSession.cores)
           .selectExpr("bit_xor(id * 2654435761) AS s")
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9

@@ -1,13 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(GraftSession.cores)
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     val qs = if (args.nonEmpty) args.toSeq

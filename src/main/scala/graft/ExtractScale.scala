@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Extraction-throughput ladder rung (VERDICT r16 #3): materialize a
@@ -24,13 +23,8 @@ object ExtractScale {
     val nDocs = nStr.toLong
     val iters = args.lift(2).map(_.toInt).getOrElse(3)
     val heavy = args.lift(3).contains("heavy")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cores
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // scope the corpus dir by nDocs (the q_extract_synth discipline):

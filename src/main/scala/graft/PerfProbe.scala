@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement aid (guide §1): run queries through the noop sink with a
   * listener counting jobs/stages/tasks and summed task time, so wall
@@ -9,18 +8,7 @@ import org.apache.spark.sql.SparkSession
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_AQE_CACHE", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cores)
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
     val stages = new java.util.concurrent.atomic.AtomicLong(0)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic ~10× scale-up of an existing testdata dir — the
@@ -46,15 +45,7 @@ object SynthScale {
     val known = Set("documents", "embeddings", "events", "relational")
     require(tables.subsetOf(known),
       s"unknown tables: ${(tables -- known).mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cores)
     spark.sparkContext.setLogLevel("WARN")
 
     val reps = spark.range(0, factor).select(col("id").as("__r"))

@@ -152,7 +152,9 @@ object LongVecSum {
     val maxKeys = math.max(128L, (256L << 20) / math.max(1L, bufBytes))
     val thresh = math.max(128L, math.min(keys, maxKeys))
       .min(Int.MaxValue.toLong)
-    val prev = spark.conf.getOption(key)
+    // getAll holds only the keys set on the session; getOption would
+    // return the default of an unset key and the restore would set it
+    val prev = spark.conf.getAll.get(key)
     spark.conf.set(key, thresh.toString)
     try body
     finally prev match {

@@ -13,8 +13,6 @@ import graft.pipeline.{DocPipeline, Router}
   */
 object PipelineQueries {
 
-  private val FixtureDir = "/root/reference/nifi-extracttext-processors/src/test/resources"
-
   /** The planted page + real-parse link rows shared by q_html_links
     * and q_anchor_text: every document renders to HTML whose three
     * anchors exercise double-quoted, single-quoted-with-entity, and
@@ -106,7 +104,7 @@ object PipelineQueries {
     // (binary → text; oracle = FixtureGolden golden row set + ScalaTest
     // parity — change extraction behavior and the golden must move too)
     "q_extract_fixtures" -> ((s, _) => {
-      val enriched = DocPipeline.enrich(DocPipeline.ingest(s, FixtureDir))
+      val enriched = DocPipeline.enrich(DocPipeline.ingest(s, graft.Fixtures.dir))
       enriched.select(col("filename"), col("mime_type"), col("orig_mime_type"),
           length(col("text")).as("text_chars"), col("error"))
         .orderBy(col("filename"))
@@ -177,7 +175,7 @@ object PipelineQueries {
 
     // T3 HTML output mode over the fixtures (FixtureGolden oracle)
     "q_extract_fixtures_html" -> ((s, _) => {
-      val enriched = DocPipeline.enrich(DocPipeline.ingest(s, FixtureDir),
+      val enriched = DocPipeline.enrich(DocPipeline.ingest(s, graft.Fixtures.dir),
         DocPipeline.ExtractConfig(htmlOutput = true))
       enriched.select(col("filename"), col("mime_type"),
           length(col("text")).as("html_chars"))
@@ -186,14 +184,14 @@ object PipelineQueries {
 
     // T5 ExtractMediaMetadata over the fixtures (FixtureGolden oracle)
     "q_extract_metadata" -> ((s, _) => {
-      val enriched = DocPipeline.enrich(DocPipeline.ingest(s, FixtureDir))
+      val enriched = DocPipeline.enrich(DocPipeline.ingest(s, graft.Fixtures.dir))
       enriched.select(col("filename"), explode(col("meta")).as(Seq("key", "value")))
         .orderBy(col("filename"), col("key"))
     }),
 
     // N1 entity extraction over extracted fixture lines (FixtureGolden oracle)
     "q_entities_fixtures" -> ((s, _) => {
-      val enriched = DocPipeline.enrich(DocPipeline.ingest(s, FixtureDir))
+      val enriched = DocPipeline.enrich(DocPipeline.ingest(s, graft.Fixtures.dir))
       val lines = DocPipeline.toLines(enriched.filter(col("error").isNull))
       lines.select(col("filename"), explode(Udfs.extractEntities(col("sentence"))).as("entity"))
         .groupBy(col("entity")).agg(count(lit(1)).as("n"))
@@ -255,7 +253,7 @@ object PipelineQueries {
     // detection), so the oracle is the golden row set itself — the
     // reference's own assert-on-observable-output test style.
     "q_extract_metadata_filtered" -> ((s, _) => {
-      val docs = DocPipeline.ingest(s, FixtureDir)
+      val docs = DocPipeline.ingest(s, graft.Fixtures.dir)
         .withColumn("filename", element_at(split(col("path"), "/"), -1))
       docs.select(col("filename"),
           explode(Udfs.extract_metadata(col("content"), col("filename"),

@@ -17,8 +17,6 @@ import graft.streaming.StreamPipeline
   */
 object StreamQueries {
 
-  private val FixtureDir = "/root/reference/nifi-extracttext-processors/src/test/resources"
-
   /** Deterministic per-sf scratch path, WIPED — every streaming query
     * that writes a sink or source dir funnels through this one wipe
     * implementation (previously four divergent inline copies). Returns
@@ -113,8 +111,8 @@ object StreamQueries {
     // fixtures, so the oracle is the golden row set (FixtureGolden
     // style) — batch/stream unification made hash-checkable.
     "q_stream_doc_pipeline" -> ((s, _) => {
-      val schema = s.read.format("binaryFile").load(FixtureDir).schema
-      val stream = s.readStream.format("binaryFile").schema(schema).load(FixtureDir)
+      val schema = s.read.format("binaryFile").load(graft.Fixtures.dir).schema
+      val stream = s.readStream.format("binaryFile").schema(schema).load(graft.Fixtures.dir)
       val routed = graft.pipeline.DocPipeline.enrich(stream)
         .select(col("filename"), col("mime_type"), col("orig_mime_type"),
           length(col("text")).as("text_chars"),

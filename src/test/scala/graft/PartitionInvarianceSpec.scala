@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** The repo's cross-engine discipline (decimal sums, floor contracts,
   * total-order tie-breaks) claims results independent of partitioning
@@ -12,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * grouping, or collect order that the single-config oracle run could
   * never see.
   */
-class PartitionInvarianceSpec extends AnyFunSuite {
+class PartitionInvarianceSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   // one per family: double-summing LM scores, window ranks, banded
@@ -50,13 +49,6 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     // the whole point of the KMeans-discipline arithmetic
     "q_semdedup_dist")
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // shuffle.partitions is a RUNTIME SQLConf -- flip it on the shared
   // session instead of stop()ing the JVM-wide context out from under

@@ -1,19 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** The build-once marker: [[ArtifactDir.ensure]] declares an artifact
   * built only after its whole build returned, never on the strength of
   * one sub-relation's `_SUCCESS`.
   */
-class ArtifactDirSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ArtifactDirSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private val docs = Seq(

@@ -1,16 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
-class AsofJoinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AsofJoinSpec extends AnyFunSuite with SparkSuite {
   test("asof join is inclusive at equal times and null before any right row") {
     import spark.implicits._
     val left = Seq((1L, 10L, "a"), (1L, 20L, "b"), (1L, 5L, "c"), (2L, 10L, "d"))

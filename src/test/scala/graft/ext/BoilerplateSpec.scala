@@ -1,20 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Cross-document repeated-segment removal: segmentation algebra,
   * removal semantics, partition independence, and the broadcast
   * anti-join plan shape the 100 TB path depends on.
   */
-class BoilerplateSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class BoilerplateSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def corpus = Seq(

@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.storage.StorageLevel
 
 /** The loan-pattern finish of the shared-core CACHE CONTRACT: after a
@@ -10,12 +10,7 @@ import org.apache.spark.storage.StorageLevel
   * and plans escaping a scope still compute correctly (they recompute,
   * never fail).
   */
-class CacheScopeSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CacheScopeSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def docs = Seq(

@@ -1,19 +1,13 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Gzip ingestion: real-codec round trip, trailer-verified corruption
   * handling, the decompression-bomb guard, and the map-only plan
   * shape. */
-class CompressedSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class CompressedSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("gzip → gunzip round-trips bytes exactly") {

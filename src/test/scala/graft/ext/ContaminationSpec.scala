@@ -1,16 +1,10 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Contamination-screen invariants on planted overlaps. */
-class ContaminationSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ContaminationSpec extends AnyFunSuite with SparkSuite {
   private def fixtures = {
     import spark.implicits._
     val bench = Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")

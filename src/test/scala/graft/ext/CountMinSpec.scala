@@ -1,20 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Count-min sketch contracts: the ≥-true guarantee holds for every
   * token, each row conserves total token mass, the sketch is bounded
   * by Depth·Width, and absent probes still obey the one-sided error.
   */
-class CountMinSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class CountMinSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   // skewed corpus: "alpha" dominates, a long tail of near-singletons

@@ -1,21 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Branch-coverage contracts for the Gopher / C4 rule-set filters: each
   * planted fixture page must trip EXACTLY the rule it was built for (the
   * oracle pins the full output hash; this pins the intent per branch).
   */
-class CurationFiltersSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
+class CurationFiltersSpec extends AnyFunSuite with SparkSuite {
   private def gopherRows = {
     import spark.implicits._
     val df = CurationFilters.gopherPlanted.toDF("doc_id", "text")

@@ -1,20 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** DSIR contracts: importance scores separate target-like from
   * non-target text, selection is exactly-k and partition-independent,
   * and the top-k boundary avoids any global window.
   */
-class DsirSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class DsirSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   // two disjoint vocabularies: target docs speak "wiki", raw noise

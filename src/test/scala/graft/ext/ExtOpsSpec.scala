@@ -1,20 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Invariants for the dedup / similarity / text-analysis extensions
   * that the DuckDB oracle can't express (probabilistic structures,
   * recall bounds, Scala/column semantic lockstep).
   */
-class ExtOpsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class ExtOpsSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("bpe decode inverts encode, including multi-code-point words") {

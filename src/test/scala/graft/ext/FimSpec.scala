@@ -1,19 +1,13 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** FIM contracts: the PSM string reassembles to the original document
   * exactly, cuts are ordered and in range, short docs still transform,
   * and the output is partition-count invariant.
   */
-class FimSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class FimSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def docs = ((1 to 40).map { i =>

@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** The multi-writer/reader generation protocol: readers that resolved
@@ -9,12 +9,7 @@ import org.apache.spark.sql.functions._
   * publish; the old generation survives exactly until the GC age gate;
   * uncommitted debris ages out; commits are totally ordered.
   */
-class GenerationStoreSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GenerationStoreSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmpRoot(tag: String): String =

@@ -1,20 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Lloyd k-means contracts: planted clusters are recovered, ties and
   * emptied clusters follow the documented deterministic rules, the
   * result is partition-count-invariant, and corrupt embeddings fail
   * loudly instead of wrapping the fixed-point arithmetic.
   */
-class KMeansSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class KMeansSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   // three well-separated 2-d blobs; ids interleaved across blobs so the

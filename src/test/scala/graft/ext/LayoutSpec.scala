@@ -1,21 +1,13 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** The Morton interleave's defining properties, checked against a
   * Scala reference implementation and on real data.
   */
-class LayoutSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
+class LayoutSpec extends AnyFunSuite with SparkSuite {
   private def mortonRef(a: Long, b: Long): Long = {
     var z = 0L
     var i = 0

@@ -1,20 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** MLM masking contracts: positions are preserved, targets record the
   * original tokens, non-selected positions pass through verbatim,
   * replacements come from the document's own tokens, and the selection
   * rate lands near the configured 15%.
   */
-class MlmMaskSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class MlmMaskSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def docs = (1 to 50).map { i =>

@@ -1,20 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** int8 quantization: range/rounding invariants, exactness on
   * representable inputs, reconstruction quality, and the no-shuffle
   * plan shape.
   */
-class QuantizeSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class QuantizeSpec extends AnyFunSuite with SparkSuite {
   test("quantized values stay in [-127, 127] and max|v| maps to ±127") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)

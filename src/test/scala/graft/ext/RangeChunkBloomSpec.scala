@@ -1,23 +1,13 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Round-7 operators: bucketed range join (equi-join plan for a range
   * predicate), sliding-window chunking, bloom membership screen.
   */
-class RangeChunkBloomSpec extends AnyFunSuite {
-  private lazy val spark = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-  }
-
+class RangeChunkBloomSpec extends AnyFunSuite with SparkSuite {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 

@@ -1,19 +1,13 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Deterministic-sampling invariants: reproducibility, partition
   * independence, rate accuracy, per-stratum exactness.
   */
-class SamplingSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SamplingSpec extends AnyFunSuite with SparkSuite {
   private def docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
 
   test("thresholdHex maps rates to zero-padded 8-hex prefixes") {

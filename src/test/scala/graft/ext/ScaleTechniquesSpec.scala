@@ -1,26 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** The cluster-scale techniques SCALE.md commits to, proven on local
   * plans: salted aggregation equivalence, and bucketed co-located joins
   * planning without a shuffle on the join key.
   */
-class ScaleTechniquesSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toFile
-    wh.deleteOnExit()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh.getAbsolutePath)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-  }
+class ScaleTechniquesSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
@@ -97,18 +85,6 @@ class ScaleTechniquesSpec extends AnyFunSuite {
   test("bucketed tables join without an exchange on the join key") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val o = spark.read.parquet(s"$sf/orders.parquet")
-    // specs share one JVM-wide session: the warehouse dir may be a
-    // leftover from a previous run — drop tables AND locations first
-    for (t <- Seq("li_bucketed", "o_bucketed")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:"), t)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      if (loc.exists()) rm(loc)
-    }
     li.write.mode("overwrite").bucketBy(8, "l_orderkey")
       .sortBy("l_orderkey").saveAsTable("li_bucketed")
     o.write.mode("overwrite").bucketBy(8, "o_orderkey")

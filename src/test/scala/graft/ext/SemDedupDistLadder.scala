@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off ladder rung for the DISTRIBUTED SemDeDup trainer (VERDICT
@@ -22,14 +21,7 @@ object SemDedupDistLadder {
       case "dist"   => 1
       case m        => sys.error(s"mode must be driver|dist, got $m")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.cores)
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")

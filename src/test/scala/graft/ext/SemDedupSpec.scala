@@ -1,20 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** SemDeDup contracts: scale-invariant duplicate collapse, lowest-id
   * representative, separated directions untouched, partition
   * independence.
   */
-class SemDedupSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SemDedupSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   // one duplicate trio along e1 (three different scales), plus three

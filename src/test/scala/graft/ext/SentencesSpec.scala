@@ -1,19 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** The pinned sentence rule table, the codegen'd boundary expression,
   * and the greedy sentence-chunker — including every '.'-suppression
   * branch and the no-shuffle plan shape.
   */
-class SentencesSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SentencesSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("isSentenceEnd: terminals, closers, and all suppression branches") {

@@ -3,7 +3,7 @@ package graft.ext
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** ScalaCheck laws for the round's model-building operators, checked
   * against independent driver-side REFERENCE implementations of the
@@ -11,13 +11,7 @@ import org.apache.spark.sql.SparkSession
   * corpora through KMeans.fit and CountMin must reproduce a 20-line
   * Scala Lloyd / sketch exactly. Deterministic seeds, no scalatestplus
   * bridge (the ArchivePropertySpec pattern). */
-class SketchPropertySpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SketchPropertySpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =

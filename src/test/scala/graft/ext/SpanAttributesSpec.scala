@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Span-level Dolma attributes: char-offset correctness (0-based start
@@ -10,12 +10,7 @@ import org.apache.spark.sql.functions._
   * mix's interval-merge semantics (overlapping spans cut their UNION,
   * never double-counted).
   */
-class SpanAttributesSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SpanAttributesSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private val ValidCard = "4111111111111111" // Luhn-valid

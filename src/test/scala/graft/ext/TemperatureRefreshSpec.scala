@@ -1,19 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** The frozen-temperature-recipe re-freeze policy: drift within the
   * bound keeps the frozen thresholds untouched; drift beyond it
   * re-freezes (a NEW recipe version) with the full per-source audit —
   * including sources that appeared or vanished since the freeze.
   */
-class TemperatureRefreshSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TemperatureRefreshSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def corpus(perSource: (String, Int)*) =

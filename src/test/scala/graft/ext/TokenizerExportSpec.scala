@@ -1,19 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Interchange round trips: export → re-import → IDENTICAL encode for
   * all three tokenizer families, plus golden-file byte checks of the
   * published formats.
   */
-class TokenizerExportSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TokenizerExportSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def docs = Seq(

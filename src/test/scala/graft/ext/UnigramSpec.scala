@@ -1,19 +1,14 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Unigram-LM tokenizer semantics: Viterbi optimality + tie-breaks,
   * the long-word / unreachable fallbacks, model coverage (every
   * training word encodes), and decode∘encode identity.
   */
-class UnigramSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UnigramSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("viterbi picks the max-score segmentation; ties keep the longest final piece") {

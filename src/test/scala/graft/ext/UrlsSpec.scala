@@ -1,19 +1,13 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** URL parsing + domain cap: parse correctness on the planted shapes,
   * cap semantics, and the plan contracts (parse is shuffle-free and
   * UDF-free; the cap runs on exactly one exchange). */
-class UrlsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class UrlsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def docs = Seq(

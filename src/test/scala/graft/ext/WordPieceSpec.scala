@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** WordPiece semantics: greedy longest-match-first with continuation
@@ -9,12 +9,7 @@ import org.apache.spark.sql.functions._
   * coverage (every training word encodes), decode identity, and the
   * family-agnostic (w, spos, tid) plumbing.
   */
-class WordPieceSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WordPieceSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def P(s: String, c: Boolean) = WordPiece.Piece(s, c)

@@ -9,11 +9,8 @@ import java.nio.file.{Files, Paths}
   * prefixes, MIME attribute values, max-length bound, and no failures.
   */
 class ExtractParitySpec extends AnyFunSuite {
-  private val fixtures =
-    "/root/reference/nifi-extracttext-processors/src/test/resources"
-
   private def read(name: String): Array[Byte] =
-    Files.readAllBytes(Paths.get(fixtures, name))
+    Files.readAllBytes(Paths.get(graft.Fixtures.dir, name))
 
   // ETPTest.java:47-69 — PDF text mode
   test("simple.pdf extracts text starting 'A Simple PDF File'") {

@@ -93,8 +93,8 @@ class LegacyOfficeSpec extends AnyFunSuite {
     // deliberately wrong/missing extensions: the directory entries win
     assert(MimeDetect.detect(LegacyOffice.sampleXls(), "mystery.bin") == MimeDetect.Xls)
     assert(MimeDetect.detect(LegacyOffice.samplePpt(), null) == MimeDetect.Ppt)
-    val doc = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/nifi-extracttext-processors/src/test/resources/simple.doc"))
+    val doc = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(graft.Fixtures.dir, "simple.doc"))
     assert(MimeDetect.detect(doc, "renamed.dat") == MimeDetect.Doc)
   }
 
@@ -159,8 +159,8 @@ class LegacyOfficeSpec extends AnyFunSuite {
   test("reference simple.doc still extracts its golden through the piece path") {
     // the real Word fixture carries a normal-save piece table; the new
     // primary path must reproduce the contiguous read's golden exactly
-    val doc = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/nifi-extracttext-processors/src/test/resources/simple.doc"))
+    val doc = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(graft.Fixtures.dir, "simple.doc"))
     val r = TextExtractor.extract(doc, "simple.doc")
     assert(r.error == null, s"error=${r.error}")
     assert(r.text.length == 931) // the golden text_chars every query pins

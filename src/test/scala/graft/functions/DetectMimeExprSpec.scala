@@ -1,19 +1,13 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** The codegen'd DetectMime expression must agree with the UDF form and
   * stay inside a WholeStageCodegen span (the point of having it). */
-class DetectMimeExprSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val fixtures = "/root/reference/nifi-extracttext-processors/src/test/resources"
+class DetectMimeExprSpec extends AnyFunSuite with SparkSuite {
+  private def fixtures = graft.Fixtures.dir
 
   test("expression and UDF agree on the fixtures; SQL registration works") {
     val docs = spark.read.format("binaryFile").load(fixtures)

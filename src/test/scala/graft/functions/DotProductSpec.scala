@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** The codegen'd dot product must be bit-identical to the reference
@@ -9,23 +9,7 @@ import org.apache.spark.sql.functions._
   * the exact fp order), null-safe, and reachable from SQL through the
   * session extensions.
   */
-class DotProductSpec extends AnyFunSuite {
-  private lazy val spark = {
-    // extensions are ignored by getOrCreate when a JVM-wide session
-    // already exists (suite-order dependent — tests run sequentially
-    // in one forked JVM), so take the session over like ExtensionsSpec
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
-
+class DotProductSpec extends AnyFunSuite with SparkSuite {
   private val refUdf = udf((a: Seq[Double], b: Seq[Double]) => {
     var s = 0.0
     var i = 0

@@ -1,19 +1,13 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** LuhnRedact semantics: checksum gate, run-length bounds, multiple
   * runs per text, and interpreted/codegen lockstep.
   */
-class LuhnRedactSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class LuhnRedactSpec extends AnyFunSuite with SparkSuite {
   private def redact(s: String): String =
     LuhnRedact.redact(org.apache.spark.unsafe.types.UTF8String.fromString(s))
       .toString

@@ -14,10 +14,8 @@ class PropertySpec extends AnyFunSuite {
   private def samples[A](g: Gen[A], n: Int = 100): Seq[A] =
     (0 until n).map(i => g.pureApply(Gen.Parameters.default, Seed(i.toLong)))
 
-  private val fixtures =
-    "/root/reference/nifi-extracttext-processors/src/test/resources"
   private def fixture(name: String): Array[Byte] =
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixtures, name))
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(graft.Fixtures.dir, name))
 
   test("∀ text, len ≥ 0: bounded append length ≤ len") {
     for ((s, len) <- samples(Gen.asciiPrintableStr).zip(samples(Gen.chooseNum(0, 500)))) {

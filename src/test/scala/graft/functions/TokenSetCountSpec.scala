@@ -1,20 +1,14 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** TokenSetCount must match the higher-order-`filter()` form it
   * replaced exactly — `split(lower(text), " ")` token semantics,
   * including empty tokens from repeated spaces — and must stay inside
   * whole-stage codegen (the reason it exists). */
-class TokenSetCountSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TokenSetCountSpec extends AnyFunSuite with SparkSuite {
   private val words = Seq("fast", "good", "bad")
 
   test("expression agrees with the higher-order filter() form") {

@@ -1,19 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** UAX #15 normalization expression: composition/decomposition law
   * checks, the compatibility folds NFKC adds, the zero-copy ASCII
   * fast path, and codegen/DataFrame agreement with direct eval. */
-class UnicodeNormalizeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class UnicodeNormalizeSpec extends AnyFunSuite with SparkSuite {
   private def u(s: String) = UTF8String.fromString(s)
 
   test("NFC composes decomposed sequences; precomposed is a fixpoint") {

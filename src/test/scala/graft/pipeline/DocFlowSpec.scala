@@ -2,7 +2,8 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{EndsWith, ScalaUDF}
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -18,14 +19,7 @@ import graft.extract.{SynthDocs, SynthHeavyDocs}
   * success text is checked against its planted text, the failures
   * against their cause, and the coalesced scan against a plain one.
   */
-class DocFlowSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
+class DocFlowSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with SparkSuite {
   // enough files that binaryFile's per-file open cost packs them into
   // more scan partitions than the coalesced width
   private val heavy = 0L until 40L

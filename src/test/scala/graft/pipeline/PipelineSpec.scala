@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** End-to-end §3.3 DAG over the reference's own fixtures, plus the
@@ -10,15 +10,8 @@ import org.apache.spark.sql.functions._
   * MergeContent policy (A1), PutFile conflict handling (K1), and the
   * Kafka/Slack sink stubs (K2/K3).
   */
-class PipelineSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  private val fixtures = "/root/reference/nifi-extracttext-processors/src/test/resources"
+class PipelineSpec extends AnyFunSuite with SparkSuite {
+  private def fixtures = graft.Fixtures.dir
 
   private def tmp(): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_pipe").toFile

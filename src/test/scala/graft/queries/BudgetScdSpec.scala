@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,14 +10,7 @@ import org.apache.spark.sql.functions._
   * validity intervals must tile each user's timeline without overlap
   * and close exactly once.
   */
-class BudgetScdSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class BudgetScdSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("banded token-budget cut equals the global-cumsum definition") {

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants of the retrieval family (q_bm25_topk,
@@ -10,14 +10,7 @@ import org.apache.spark.sql.functions._
   * posting lists are sorted/deduplicated, PMI puts an always-adjacent
   * pair above an independent pair.
   */
-class RetrievalSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class RetrievalSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("bm25 ranks the verbatim duplicate of a query document first") {

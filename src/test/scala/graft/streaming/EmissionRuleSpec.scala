@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Pins the engine's Append-mode emission rule for ALIGNED window ends
@@ -30,15 +30,7 @@ import org.apache.spark.sql.functions._
   * upgrade that changes either boundary fails loudly here rather than
   * as a once-in-a-corpus oracle hash flake.
   */
-class EmissionRuleSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
+class EmissionRuleSpec extends AnyFunSuite with SparkSuite {
   // hour-aligned epoch second (472223 * 3600); window [t0, t0+1h),
   // watermark delay 30 min → the window closes when the watermark
   // reaches t0 + 1h, driven by a max event near t0 + 1h30m

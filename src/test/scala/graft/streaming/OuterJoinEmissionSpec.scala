@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Pins the engine's null-row emission rule for the watermarked
@@ -23,14 +23,7 @@ import org.apache.spark.sql.functions._
   * state-watermark adjustment). A Spark upgrade that shifts this
   * boundary fails here loudly rather than as an oracle hash flake.
   */
-class OuterJoinEmissionSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
+class OuterJoinEmissionSpec extends AnyFunSuite with SparkSuite {
   private val H = 3600L * 1000000L
   private val D = 1800L * 1000000L
   private val base = 1700000000L * 1000000L

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -9,15 +9,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * micro-batches through the file source, watermark-gated append
   * output, and mapGroupsWithState session state held across batches.
   */
-class StreamingSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
+class StreamingSpec extends AnyFunSuite with SparkSuite {
   private def tmpDir(): java.io.File = {
     val d = java.nio.file.Files.createTempDirectory("graft_stream").toFile
     d.deleteOnExit(); d
@@ -109,7 +101,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("document pipeline runs unchanged under streaming ingest (SURVEY §7.3 step 5)") {
     import graft.pipeline.DocPipeline
-    val fixtures = "/root/reference/nifi-extracttext-processors/src/test/resources"
+    val fixtures = graft.Fixtures.dir
     val schema = spark.read.format("binaryFile").load(fixtures).schema
     val stream = spark.readStream.format("binaryFile")
       .schema(schema) // streaming sources don't infer
@@ -505,10 +497,9 @@ class StreamingSpec extends AnyFunSuite {
     // width (the scale knob stays the session's) — forced here with a
     // 1-byte advisory rather than a 256 MB relation
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prev = spark.conf.getOption(key)
     spark.conf.set(key, "1b")
     try assert(StreamPipeline.batchWidth(df) ==
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    finally spark.conf.unset(key)
   }
 }
