@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Okapi BM25 retrieval over a BUILD-ONCE on-disk inverted index — the
   * [[Ivf]] train-once / probe-many pattern applied to lexical search.
@@ -16,10 +18,20 @@ import org.apache.spark.sql.functions._
   * index) and every probe reads only:
   *  - `tf/`: (tok, doc_id, tf, dl) REPARTITIONED BY tok and sorted
   *    within partitions — each parquet file covers a token range, so a
-  *    probe's query-term join prunes most files at the scan via
-  *    row-group min/max on `tok`;
+  *    probe's pushed `tok IN (…)` filter prunes most files and row
+  *    groups at the scan via their min/max on `tok`;
   *  - `df/`: (tok, df), same layout;
   *  - `stats/`: the 1-row (n_docs, tot_dl).
+  *
+  * The three relations have FIXED schemas ([[TfSchema]], [[DfSchema]],
+  * [[StatsSchema]]): every writer casts to them and every reader reads
+  * with them, so no read pays a parquet schema-inference job.
+  *
+  * Every read and fold works on one [[Snapshot]]: the base relations
+  * plus the staged batches committed when the snapshot was listed —
+  * ONE listing, shared by tf, df and stats. A batch that commits
+  * mid-read is then wholly outside the read, never in tf but missing
+  * from df/stats.
   *
   * Scoring follows the repo's cross-engine discipline: per-term
   * contributions rounded to 6 decimals and summed as exact decimals,
@@ -28,6 +40,22 @@ import org.apache.spark.sql.functions._
   * 1+k1 at runtime could differ from the parsed literal by an ulp.
   */
 object Bm25 {
+
+  /** `tf/`'s fixed schema. `doc_id` is `long` whatever id type the
+    * caller's documents carry: the writers cast it. */
+  val TfSchema: StructType = StructType(Seq(
+    StructField("tok", StringType), StructField("doc_id", LongType),
+    StructField("tf", LongType), StructField("dl", LongType)))
+
+  /** `df/`'s fixed schema: per-token document frequencies (per-batch
+    * increments, in a staged batch). */
+  val DfSchema: StructType = StructType(Seq(
+    StructField("tok", StringType), StructField("df", LongType)))
+
+  /** `stats/`'s fixed schema: the corpus (n_docs, tot_dl) (per-batch
+    * increments, in a staged batch). */
+  val StatsSchema: StructType = StructType(Seq(
+    StructField("n_docs", LongType), StructField("tot_dl", LongType)))
 
   /** Deterministic index location: corpus path + content signature
     * (a regenerated corpus keys to a NEW dir, never a stale reuse). */
@@ -52,35 +80,39 @@ object Bm25 {
                   dir: String): Unit =
     ArtifactDir.ensure(docs.sparkSession, dir,
       "^(graft_bm25_v1_[0-9a-f]+_).*".r) {
-      writeTf(docs, idCol, textCol, dir, mode = "overwrite")
+      writeTf(docs, idCol, textCol, dir)
       deriveFromTf(docs.sparkSession, dir)
     }
 
-  /** Tokenize `docs` and write their (tok, doc_id, tf, dl) rows into
-    * the token-partitioned tf store — `overwrite` for the initial
-    * build, `append` for streaming maintenance. */
-  private def writeTf(docs: DataFrame, idCol: String, textCol: String,
-                      dir: String, mode: String): Unit = {
+  /** The (tok, doc_id, tf, dl) posting rows of `docs`, in [[TfSchema]]
+    * (`doc_id` cast to `long`): one tokenize pass feeds both counts. */
+  private def postings(docs: DataFrame, idCol: String,
+                       textCol: String): DataFrame = {
     val toks = TextStats.tokenRows(docs, idCol, textCol)
-      .withColumnRenamed(idCol, "doc_id")
+      .select(col(idCol).cast(LongType).as("doc_id"), col("tok"))
     val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     tf.join(dl, Seq("doc_id"))
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
+  }
+
+  /** Tokenize `docs` and write their posting rows as the initial
+    * build's token-partitioned tf store. */
+  private def writeTf(docs: DataFrame, idCol: String, textCol: String,
+                      dir: String): Unit =
+    postings(docs, idCol, textCol)
       // write width sized from the SOURCE corpus bytes (the compaction
       // fold's TargetFileBytes policy), not the session shuffle width
       .repartition(Compaction.writerWidth(docs), col("tok"))
       .sortWithinPartitions(col("tok"), col("doc_id"))
-      .write.mode(mode).parquet(s"$dir/tf")
-  }
+      .write.mode("overwrite").parquet(s"$dir/tf")
 
   /** Re-derive df/ and stats/ from the WRITTEN tf relation (distinct
     * per doc for dl) — never from the corpus: the derived relations
     * must agree with tf/ forever, and the re-derivation cost is
-    * bounded by index cardinality (posting rows), not corpus size.
-    * Shared by the initial build and streaming maintenance. */
+    * bounded by index cardinality (posting rows), not corpus size. */
   private def deriveFromTf(spark: SparkSession, dir: String): Unit = {
-    val tfIdx = spark.read.parquet(s"$dir/tf")
+    val tfIdx = spark.read.schema(TfSchema).parquet(s"$dir/tf")
     // df/ and stats/ both derive from the WRITTEN tf relation and are
     // independent of each other — overlap the two jobs (guide §2.6)
     ParJobs.run(
@@ -110,6 +142,24 @@ object Bm25 {
   def storePaths(spark: SparkSession, dir: String, sub: String): Seq[String] =
     StagedBatches.storePaths(spark, dir, sub)
 
+  /** One consistent view of the index at `dir`: the base relations plus
+    * the committed staged `batches` of one listing, each relation read
+    * with its fixed schema. */
+  private[ext] final case class Snapshot(dir: String, batches: Seq[String]) {
+    def paths(sub: String): Seq[String] =
+      StagedBatches.paths(dir, batches, sub)
+    def tf(spark: SparkSession): DataFrame =
+      spark.read.schema(TfSchema).parquet(paths("tf"): _*)
+    def df(spark: SparkSession): DataFrame =
+      spark.read.schema(DfSchema).parquet(paths("df"): _*)
+    def stats(spark: SparkSession): DataFrame =
+      spark.read.schema(StatsSchema).parquet(paths("stats"): _*)
+  }
+
+  /** Lists `dir`'s committed batches once. */
+  private[ext] def snapshot(spark: SparkSession, dir: String): Snapshot =
+    Snapshot(dir, committedBatchDirs(spark, dir))
+
   /** Streaming index maintenance (the Ivf.ingestIntoIndex pattern for
     * lexical search): STAGE one micro-batch of new documents' tf rows
     * plus the batch's df and stats DELTAS under a fresh
@@ -137,12 +187,7 @@ object Bm25 {
                       idCol: String, textCol: String): Unit = {
     val batchDir = StagedBatches.freshBatchDir(dir)
     // one tokenize pass serves the tf write AND both delta writes
-    val toks = TextStats.tokenRows(batch, idCol, textCol)
-      .withColumnRenamed(idCol, "doc_id")
-    val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-    val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val tfdl = tf.join(dl, Seq("doc_id"))
-      .select(col("tok"), col("doc_id"), col("tf"), col("dl")).persist()
+    val tfdl = postings(batch, idCol, textCol).persist()
     try {
       // the three staged sub-writes all read the persisted tfdl and
       // write disjoint dirs — overlap them (guide §2.6); the commit
@@ -170,26 +215,64 @@ object Bm25 {
     } finally { tfdl.unpersist(); () }
   }
 
-  /** Top-k BM25 per query from the persisted index. `queryTerms` is
-    * the small (qid, tok) relation — broadcast after its df join; the
-    * tf scan is pruned to files whose token range intersects it. */
+  /** Top-k BM25 per query, read from one [[snapshot]] of the index at
+    * `dir`. `queryTerms` is the small (qid, tok) relation; it is
+    * collected to the driver. One small job fetches the query terms'
+    * df rows (a pushed-down `tok IN (…)` filter) and every stats row;
+    * the driver folds the committed deltas (a per-token sum for df, a
+    * column sum for stats). The tf scan carries the same pushed
+    * `tok IN (…)` filter, so it reads only the files and row groups
+    * whose token range intersects the query, and joins a broadcast
+    * local (qid, tok, df) relation; n_docs and avgdl enter the score
+    * as literals. The score expressions are the Catalyst ones a
+    * full-store join would evaluate (Spark's `log` is
+    * `StrictMath.log`), in the same operand order. The read has one
+    * exchange: the scan stage pre-aggregates its (qid, doc_id) groups
+    * and hashes them to the aggregate's partitions, which
+    * `coalesce(1)` reads in one task that also runs the final
+    * aggregate, the rank window and the (qid, rank) order, so neither
+    * needs an exchange (or a sampling job) of its own.
+    * Jobs per read: the df/stats fetch, the broadcast, the scan stage
+    * and the result stage (plus one to collect `queryTerms` when it is
+    * not a local relation).
+    *
+    * The result has qid (the input's type), rank, doc_id, n_match and
+    * score, ordered by (qid, rank). A duplicate (qid, tok) row counts
+    * twice, as a join counts it; a query's own doc_id is never a
+    * candidate. */
   def topK(spark: SparkSession, dir: String, queryTerms: DataFrame,
            k: Int): DataFrame = {
-    val tf = spark.read.parquet(storePaths(spark, dir, "tf"): _*)
-    // df/stats carry one DELTA generation per committed staged batch
-    // (see [[ingestIntoIndex]]): fold to current values — a
-    // |vocab|-bounded aggregation (identity on a freshly-built or
-    // compacted index)
-    val dfr = spark.read.parquet(storePaths(spark, dir, "df"): _*)
-      .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-    val stats = spark.read.parquet(storePaths(spark, dir, "stats"): _*)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
-    val qdf = queryTerms.join(dfr, Seq("tok"))
-    val cand = tf.join(broadcast(qdf), Seq("tok"))
+    val snap = snapshot(spark, dir)
+    val qt = queryTerms.select(col("qid"), col("tok"))
+    val qrows = qt.collect()
+    val terms = qrows.toSeq.flatMap(r => Option(r.getString(1))).distinct
+    // one job: the query terms' df deltas and every stats row (a null
+    // tok marks a stats row — `tok IN (…)` never keeps a null tok)
+    val noLong = lit(null).cast(LongType)
+    val fetched = snap.df(spark).filter(col("tok").isin(terms: _*))
+      .select(col("tok"), col("df"), noLong.as("n_docs"), noLong.as("tot_dl"))
+      .unionByName(snap.stats(spark).select(lit(null).cast(StringType).as("tok"),
+        noLong.as("df"), col("n_docs"), col("tot_dl")))
+      .collect()
+    val (dfRows, statRows) = fetched.partition(!_.isNullAt(0))
+    val dfOf = dfRows.groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
+    val nDocs = statRows.map(_.getLong(2)).sum
+    // tot_dl is null only in a base built over no documents (a sum over
+    // no rows); its n_docs is 0, so it adds nothing either way
+    val totDl = statRows.filterNot(_.isNullAt(3)).map(_.getLong(3)).sum
+    val qdfRows = qrows.toSeq.flatMap(r => Option(r.getString(1)).flatMap(dfOf.get)
+      .map(d => Row(r.get(0), r.getString(1), d)))
+    val qdf = spark.createDataFrame(qdfRows.asJava, StructType(Seq(
+      qt.schema("qid"), qt.schema("tok"), StructField("df", LongType))))
+    val cand = snap.tf(spark)
+      .filter(col("tok").isin(dfOf.keys.toSeq: _*))
+      .join(broadcast(qdf), Seq("tok"))
       .filter(col("doc_id") =!= col("qid"))
-      .crossJoin(broadcast(stats))
-    val nd = col("n_docs").cast("double")
-    val avgdl = col("tot_dl").cast("double") / col("n_docs")
+    // the same IEEE doubles Spark's long-to-double cast and division
+    // give; with n_docs 0 there is no posting to score, so the avgdl
+    // literal (NaN then) is never read
+    val nd = lit(nDocs.toDouble)
+    val avgdl = lit(totDl.toDouble / nDocs)
     val idf = log(lit(1.0) + (nd - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val tfn = (col("tf") * lit(2.2)) /
       (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / avgdl))
@@ -199,6 +282,11 @@ object Bm25 {
       .groupBy(col("qid"), col("doc_id"))
       .agg(count(lit(1)).as("n_match"),
         (floor(sum(col("c6")).cast("double") * 1e4 + 0.5) / 1e4).as("score"))
+      // the final aggregate, the window and the sort share one task, so
+      // neither needs a second exchange; the scan stage's partial
+      // aggregate has already cut each (qid, doc_id) group to one row
+      // per scan partition, so that task never sees raw postings
+      .coalesce(1)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("doc_id"))
     scored.withColumn("rank", row_number().over(w))

@@ -141,25 +141,24 @@ object Compaction {
     * Uncommitted batch debris from crashed ingests is never folded. */
   private def foldBm25(spark: SparkSession, srcDir: String,
                        outDir: String): Unit = {
-    val tfPaths = Bm25.storePaths(spark, srcDir, "tf")
-    val dfPaths = Bm25.storePaths(spark, srcDir, "df")
-    val stPaths = Bm25.storePaths(spark, srcDir, "stats")
-    val n = targetPartsFor(spark, tfPaths)
-    val nDf = targetPartsFor(spark, dfPaths)
+    // one listing: the three folds cover exactly the same batches
+    val snap = Bm25.snapshot(spark, srcDir)
+    val n = targetPartsFor(spark, snap.paths("tf"))
+    val nDf = targetPartsFor(spark, snap.paths("df"))
     // the three folds read disjoint source relations and write disjoint
     // output dirs — overlap them (guide §2.6); the manifest commit
     // stays strictly after all three
     ParJobs.run(
-      () => spark.read.parquet(tfPaths: _*)
+      () => snap.tf(spark)
         .repartition(n, col("tok"))
         .sortWithinPartitions(col("tok"), col("doc_id"))
         .write.parquet(s"$outDir/tf"),
-      () => spark.read.parquet(dfPaths: _*)
+      () => snap.df(spark)
         .groupBy(col("tok")).agg(sum(col("df")).as("df"))
         .repartition(nDf, col("tok"))
         .sortWithinPartitions(col("tok"))
         .write.parquet(s"$outDir/df"),
-      () => spark.read.parquet(stPaths: _*)
+      () => snap.stats(spark)
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
         .coalesce(1).write.parquet(s"$outDir/stats"))
   }

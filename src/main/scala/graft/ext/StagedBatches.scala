@@ -45,8 +45,13 @@ private[graft] object StagedBatches {
       .map(_.toString).sorted.toSeq
   }
 
+  /** The `sub` relation's read paths: base store `dir` + each of
+    * `batches`. */
+  def paths(dir: String, batches: Seq[String], sub: String): Seq[String] =
+    s"$dir/$sub" +: batches.map(b => s"$b/$sub")
+
   /** The `sub` relation's read paths: base store + every COMMITTED
     * staged batch. */
   def storePaths(spark: SparkSession, dir: String, sub: String): Seq[String] =
-    s"$dir/$sub" +: committedDirs(spark, dir).map(b => s"$b/$sub")
+    paths(dir, committedDirs(spark, dir), sub)
 }

@@ -42,16 +42,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
     // scalar join: the 1-row corpus token total broadcast onto the
     // per-(source, token) KL terms
     "q_source_kl",
-    // scalar joins: the 1-row N/avgdl stats (BM25) and the 1-row
-    // unigram/bigram corpus totals (PMI) broadcast onto bounded
-    // candidate streams
-    "q_bm25_topk", "q_pmi_colloc",
-    // the cold-build rung serves exactly q_bm25_topk's probe (same
-    // 1-row stats broadcast) from the rebuilt index
-    "q_store_build_cold",
-    // the same 1-row N/avgdl stats broadcast, served through the
-    // generation-store protocol
-    "q_genstore_bm25",
+    // scalar join: the 1-row unigram/bigram corpus totals (PMI)
+    // broadcast onto a bounded candidate stream
+    "q_pmi_colloc",
     // scalar join: the 1-row token-budget broadcast onto the
     // constant-cardinality (≤10 001 rows) quality-band relation
     "q_token_budget",
