@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Measurement aid (guide §1): run queries through the noop sink with a
@@ -85,13 +86,16 @@ object PerfProbe {
       jobOfStage.clear(); jobSite.clear(); jobTaskMs.clear(); jobTasks.clear()
       stageTaskMs.clear(); stageName.clear()
       stageCpuMs.clear(); stageGcMs.clear(); stageDeserMs.clear()
+      // `compiles=`: classes the timed pass generated and compiled; a
+      // warm pass that compiles again pays Janino before its jobs run
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       try graft.ext.CacheScope.withScope {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
       } catch { case e: Throwable => println(s"$name FAIL: ${e.getMessage}") }
       val wallS = (System.nanoTime() - t0) / 1e9
-      println(f"PROBE $name%-32s wall=$wallS%7.2fs jobs=${jobs.get}%4d stages=${stages.get}%5d tasks=${tasks.get}%6d taskTime=${taskMs.get / 1000.0}%8.1fs")
+      println(f"PROBE $name%-32s wall=$wallS%7.2fs jobs=${jobs.get}%4d stages=${stages.get}%5d tasks=${tasks.get}%6d taskTime=${taskMs.get / 1000.0}%8.1fs compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0}%4d")
       if (topJobs > 0) {
         import scala.jdk.CollectionConverters._
         jobTaskMs.asScala.toSeq.sortBy(-_._2.get).take(topJobs).foreach {

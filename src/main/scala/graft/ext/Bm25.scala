@@ -85,16 +85,21 @@ object Bm25 {
     }
 
   /** The (tok, doc_id, tf, dl) posting rows of `docs`, in [[TfSchema]]
-    * (`doc_id` cast to `long`): one tokenize pass feeds both counts. */
+    * (`doc_id` cast to `long`), from one tokenize pass: `dl` is a
+    * window count over the document's token rows and `tf` their
+    * (doc_id, tok) count, so one clustering by doc_id serves both —
+    * one exchange over a partitioned input, none over a single
+    * partition. A doc_id that several rows share is one document. */
   private def postings(docs: DataFrame, idCol: String,
-                       textCol: String): DataFrame = {
-    val toks = TextStats.tokenRows(docs, idCol, textCol)
+                       textCol: String): DataFrame =
+    TextStats.tokenRows(docs, idCol, textCol)
       .select(col(idCol).cast(LongType).as("doc_id"), col("tok"))
-    val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-    val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    tf.join(dl, Seq("doc_id"))
+      // a posting needs a document: a null id has none
+      .filter(col("doc_id").isNotNull)
+      .withColumn("dl", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+      .groupBy(col("doc_id"), col("tok"), col("dl"))
+      .agg(count(lit(1)).as("tf"))
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
-  }
 
   /** Tokenize `docs` and write their posting rows as the initial
     * build's token-partitioned tf store. */
@@ -170,7 +175,12 @@ object Bm25 {
     * column sums are the corpus stats (the [[CountMin]] append-only
     * store discipline: counters of independent batches sum). Per batch
     * the cost is ONE tokenize pass over the BATCH plus batch-bounded
-    * writes — never an index rescan. A crash ANYWHERE before the
+    * writes — never an index rescan. A batch that fits one file
+    * ([[Compaction.writerWidth]] 1, as a streaming micro-batch of a
+    * few hundred documents does) is read through `coalesce(1)`
+    * ([[Compaction.TokWrite]]): the tokenize, the counts, the distinct
+    * and the stats aggregate then run in one task and plan no
+    * exchange. A crash ANYWHERE before the
     * marker leaves an uncommitted dir that serving ignores and
     * compaction never folds: the three stores can never disagree
     * about which batches they contain (the earlier three-append form
@@ -186,15 +196,16 @@ object Bm25 {
   def ingestIntoIndex(spark: SparkSession, dir: String, batch: DataFrame,
                       idCol: String, textCol: String): Unit = {
     val batchDir = StagedBatches.freshBatchDir(dir)
+    val w = Compaction.TokWrite(Compaction.writerWidth(batch))
     // one tokenize pass serves the tf write AND both delta writes
-    val tfdl = postings(batch, idCol, textCol).persist()
+    val tfdl = postings(w.input(batch), idCol, textCol).persist()
     try {
       // the three staged sub-writes all read the persisted tfdl and
       // write disjoint dirs — overlap them (guide §2.6); the commit
       // marker stays strictly after the join, so the atomicity
       // contract is unchanged
       ParJobs.run(
-        () => tfdl.repartition(Compaction.writerWidth(batch), col("tok"))
+        () => w.byTok(tfdl)
           .sortWithinPartitions(col("tok"), col("doc_id"))
           .write.parquet(s"$batchDir/tf"),
         // one delta file per batch, not one per shuffle partition: the

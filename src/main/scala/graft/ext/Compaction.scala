@@ -88,10 +88,9 @@ object Compaction {
     // default) for LogicalRDD-backed plans, and join estimates multiply
     // child sizes toward it. Unclamped, that would explode the width
     // into the 2^20 backstop — 1M writer tasks/files from one bogus
-    // estimate (ADVICE r19). Mirror batchWidth's discipline: detect
-    // the sentinel and fall back to the session shuffle width (the
-    // deployment's scale knob), keeping the size-derived width only
-    // when the estimate is a real one.
+    // estimate (ADVICE r19). Detect the sentinel and fall back to the
+    // session shuffle width (the deployment's scale knob), keeping the
+    // size-derived width only when the estimate is a real one.
     // a typed read: the bytes conf accepts unit strings such as "10g"
     if (bytes >= BigInt(spark.sessionState.conf.defaultSizeInBytes))
       spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
@@ -99,6 +98,23 @@ object Compaction {
       val t = BigInt(TargetFileBytes)
       ((bytes + t - 1) / t).max(1).min(1 << 20).toInt
     }
+  }
+
+  /** The layout of a token-clustered BM25 store write of `width`
+    * files: [[Bm25.ingestIntoIndex]]'s staged batch and [[foldBm25]]'s
+    * folded relations. At width 1 the write's input is read through
+    * `coalesce(1)`, so every group-by, distinct, window and aggregate
+    * over it runs in that one task and plans no exchange, and its tf
+    * rows are already in their one file's partition. Wider, the input
+    * keeps its partitioning and `byTok` hashes tf rows into `width`
+    * token partitions. [[Bm25.ensureIndex]] does not use it: its input
+    * is a whole corpus, whose tokenize stays spread over the scan's
+    * tasks whatever the output width. */
+  private[ext] final case class TokWrite(width: Int) {
+    def input(df: DataFrame): DataFrame =
+      if (width == 1) df.coalesce(1) else df
+    def byTok(df: DataFrame): DataFrame =
+      if (width == 1) df else df.repartition(width, col("tok"))
   }
 
   /** The one compaction shape: resolve the current generation of
@@ -143,24 +159,22 @@ object Compaction {
                        outDir: String): Unit = {
     // one listing: the three folds cover exactly the same batches
     val snap = Bm25.snapshot(spark, srcDir)
-    val n = targetPartsFor(spark, snap.paths("tf"))
-    val nDf = targetPartsFor(spark, snap.paths("df"))
+    val tf = TokWrite(targetPartsFor(spark, snap.paths("tf")))
+    val df = TokWrite(targetPartsFor(spark, snap.paths("df")))
     // the three folds read disjoint source relations and write disjoint
     // output dirs — overlap them (guide §2.6); the manifest commit
     // stays strictly after all three
     ParJobs.run(
-      () => snap.tf(spark)
-        .repartition(n, col("tok"))
+      () => tf.byTok(tf.input(snap.tf(spark)))
         .sortWithinPartitions(col("tok"), col("doc_id"))
         .write.parquet(s"$outDir/tf"),
-      () => snap.df(spark)
-        .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-        .repartition(nDf, col("tok"))
+      () => df.byTok(df.input(snap.df(spark))
+          .groupBy(col("tok")).agg(sum(col("df")).as("df")))
         .sortWithinPartitions(col("tok"))
         .write.parquet(s"$outDir/df"),
-      () => snap.stats(spark)
+      () => snap.stats(spark).coalesce(1)
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
-        .coalesce(1).write.parquet(s"$outDir/stats"))
+        .write.parquet(s"$outDir/stats"))
   }
 
   /** BM25 compaction: fold the CURRENT generation (base + its

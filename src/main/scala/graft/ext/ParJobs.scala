@@ -20,8 +20,12 @@ package graft.ext
   *
   * Threads are created per call (2-3 per micro-batch — negligible
   * against the jobs they run) and inherit the caller's inheritable
-  * thread-locals, so SparkContext job descriptions/groups and the
-  * session's conf behave exactly as on the calling thread. Concurrent
+  * thread-locals, so SparkContext job descriptions/groups behave
+  * exactly as on the calling thread. Each thunk's DataFrame plans and
+  * runs under its own session's conf, whichever session the thread
+  * inherited as active: a streaming maintainer's thunks run on the
+  * caller's session ([[graft.streaming.StreamPipeline]] re-plans each
+  * micro-batch there), and no thunk writes conf. Concurrent
   * first-materialization of a shared persisted relation is safe: the
   * BlockManager locks per block, one thread computes, the rest block.
   */

@@ -38,7 +38,7 @@ object RetrievalQueries {
     "q_bm25_topk" -> ((s, d) => {
       val dir = graft.ext.Bm25.indexDirFor(d)
       graft.ext.Bm25.ensureIndex(Tables.documents(s, d), "doc_id", "text", dir)
-      val qterms = s.read.parquet(s"$dir/tf")
+      val qterms = s.read.schema(graft.ext.Bm25.TfSchema).parquet(s"$dir/tf")
         .filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("tok")).distinct()
       graft.ext.Bm25.topK(s, dir, qterms, 10)
@@ -86,7 +86,7 @@ object RetrievalQueries {
       graft.ext.Attributes.ensureSpanAttributes(
         all.filter(col("source") =!= "src0"),
         all.filter(col("source") === "src0"), spDir, n = 3)
-      val qterms = s.read.parquet(s"$bmDir/tf")
+      val qterms = s.read.schema(graft.ext.Bm25.TfSchema).parquet(s"$bmDir/tf")
         .filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("tok")).distinct()
       graft.ext.Bm25.topK(s, bmDir, qterms, 10)

@@ -496,7 +496,7 @@ object StreamQueries {
       val stream = s.readStream.schema(copies.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
       StreamPipeline.bm25Ingest(s, stream, idxDir, "doc_id", "text")
-      val qterms = s.read.parquet(s"$idxDir/tf")
+      val qterms = s.read.schema(graft.ext.Bm25.TfSchema).parquet(s"$idxDir/tf")
         .filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("tok")).distinct()
       graft.ext.Bm25.topK(s, idxDir, qterms, 10)
@@ -538,7 +538,7 @@ object StreamQueries {
       require(cur != g0, "auto-compaction must have published a NEW generation")
       require(graft.ext.Bm25.committedBatchDirs(s, cur).isEmpty,
         "the folded generation must carry no staged batches")
-      val qterms = s.read.parquet(
+      val qterms = s.read.schema(graft.ext.Bm25.TfSchema).parquet(
           graft.ext.Bm25.storePaths(s, cur, "tf"): _*)
         .filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("tok")).distinct()
@@ -706,7 +706,7 @@ object StreamQueries {
       val cur = graft.ext.GenerationStore.currentGenDir(s, root)
         .getOrElse(sys.error(s"no committed generation under $root"))
       require(cur != held, "compaction must publish a NEW generation")
-      val qterms = s.read.parquet(
+      val qterms = s.read.schema(graft.ext.Bm25.TfSchema).parquet(
           graft.ext.Bm25.storePaths(s, cur, "tf"): _*)
         .filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("tok")).distinct()

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Streaming variants of the pipeline (SURVEY.md §2 S1 streaming path,
@@ -391,46 +392,33 @@ object StreamPipeline {
   private def drainIngest(stream: DataFrame)(body: DataFrame => Unit): Long =
     drainIngestWithId(stream)((batch, _) => body(batch))
 
-  /** AQE-equivalent shuffle width for ONE micro-batch's maintenance
-    * program. Spark disables adaptive execution inside a streaming
-    * query (ResolveWriteToStream unsets it with a warning), so every
-    * exchange a foreachBatch body plans runs at the FULL session width
-    * however small the batch — a KB-sized trigger pays the same task
-    * count the 100 TB backfill would (measured on q_stream_bm25_ingest
-    * at sf0.1: every per-batch stage 32 tasks of ~0.3 s fixed
-    * setup/commit overhead apiece for ~10 ms of CPU). Mirror AQE's
-    * coalescing rule instead of hard-coding anything local: width =
-    * ceil(batch bytes / advisoryPartitionSizeInBytes) clamped to
-    * [1, session width]. The session width stays the scale knob — a
-    * backfill-sized batch keeps using all of it; only the sub-advisory
-    * waste is coalesced away, exactly what AQE would have done had the
-    * engine allowed it here. */
-  private[streaming] def batchWidth(batch: DataFrame): Int = {
-    val spark = batch.sparkSession
-    val sessionW = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-    val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    ((bytes + advisory - 1) / advisory).max(1).min(sessionW).toInt
-  }
-
   /** [[drainIngest]] exposing the engine's micro-batch id to the body —
     * for stores whose rows are SCOPED to their ingest batch (the
-    * packed-sequence store: sequence ids restart per batch). The body
-    * runs under the batch-sized shuffle width ([[batchWidth]]); the
-    * session width is restored after. */
+    * packed-sequence store: sequence ids restart per batch).
+    *
+    * Each micro-batch is re-planned on the session that created
+    * `stream` before `body` sees it. The engine hands foreachBatch a
+    * batch on the query's own clone of that session, and a new clone
+    * per query misses the generated-code cache that Spark keys by the
+    * session's class loader: every query compiled its whole ingest body
+    * again (29 Janino compilations for a plain 250-doc BM25 batch, 44
+    * for a compacting one). On the caller's session a body compiles
+    * once and later queries reuse it. The body also plans under that
+    * session's conf, AQE included: small batches get their exchanges
+    * coalesced without any per-batch conf change, so nothing here
+    * writes the shared session's conf that concurrent readers use. */
   private def drainIngestWithId(stream: DataFrame)
                                (body: (DataFrame, Long) => Unit): Long = {
+    val session = stream.sparkSession
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
     val q = stream.writeStream
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      .foreachBatch { (raw: DataFrame, id: Long) =>
+        val batch = DatasetBridge.onSession(session, raw)
         if (!batch.isEmpty) {
           batches.incrementAndGet()
-          withStateParts(batch.sparkSession, Some(batchWidth(batch))) {
-            body(batch, id)
-          }
+          body(batch, id)
         }
       }
       .start()

@@ -1,9 +1,6 @@
 package graft.ext
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{In, InSet}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
@@ -163,25 +160,10 @@ class Bm25TopKSpec extends AnyFunSuite with SparkSuite
     s
   }
 
-  /** Final-stage names of the jobs `f` runs. */
-  private def jobsOf(f: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val names = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        names.add(j.stageInfos.maxBy(_.stageId).name); ()
-      }
-    }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(l)
-    try { f; ListenerBusDrain.drain(sc) } finally sc.removeSparkListener(l)
-    names.asScala.toSeq
-  }
-
   test("one read: at most 4 jobs, no schema inference, tok filter pushed into the tf scan") {
     val q = queries.map { case (q, t) => (q.toLong, t) }.toDF("qid", "tok")
     Bm25.topK(split, gen, q, 3).collect() // warm: codegen, file status cache
-    val jobs = jobsOf(Bm25.topK(split, gen, q, 3).collect())
+    val jobs = ListenerBusDrain.jobsOf(spark.sparkContext)(Bm25.topK(split, gen, q, 3).collect())
     assert(jobs.length <= 4, jobs)
     assert(!jobs.exists(_.startsWith("parquet at")), jobs)
 

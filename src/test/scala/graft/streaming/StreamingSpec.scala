@@ -484,22 +484,44 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       tf.filter(col("doc_id") < 1000000L).count())
   }
 
-  test("micro-batch maintenance shuffle width mirrors AQE coalescing") {
+  test("a drain on the caller's session leaves its conf unchanged") {
     import spark.implicits._
-    // AQE is engine-disabled inside a streaming query, so foreachBatch
-    // bodies size their exchanges from the batch's estimated bytes
-    // instead: ceil(bytes / advisoryPartitionSizeInBytes) clamped to
-    // [1, session width]. A KB-sized batch under the 64m default
-    // coalesces to ONE partition…
-    val df = (1 to 100).toDF("id")
-    assert(StreamPipeline.batchWidth(df) == 1)
-    // …and a batch larger than width·advisory clamps to the session
-    // width (the scale knob stays the session's) — forced here with a
-    // 1-byte advisory rather than a 256 MB relation
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    spark.conf.set(key, "1b")
-    try assert(StreamPipeline.batchWidth(df) ==
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    finally spark.conf.unset(key)
+    // every micro-batch body runs on `spark` itself (fold included:
+    // autoCompactEvery = 2), so a conf write there would reach any
+    // reader planning concurrently; a sampler thread reads the conf
+    // for the whole drain, as such a reader would
+    val root = new java.io.File(tmpDir(), "store").getAbsolutePath
+    graft.ext.GenerationStore.publish(spark, root) { g =>
+      graft.ext.Bm25.ensureIndex(
+        Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text"),
+        "doc_id", "text", g)
+    }
+    val srcDir = tmpDir()
+    Seq((10L, "alpha delta"), (11L, "delta")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$srcDir/a")
+    Seq((20L, "gamma gamma"), (21L, "epsilon")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$srcDir/b")
+    val stream = spark.readStream.schema("doc_id BIGINT, text STRING")
+      .option("maxFilesPerTrigger", "1")
+      .option("recursiveFileLookup", "true").parquet(srcDir.getAbsolutePath)
+    val before = spark.conf.getAll
+    val changed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val samples = new java.util.concurrent.atomic.AtomicLong(0)
+    @volatile var done = false
+    val sampler = new Thread(() => while (!done) {
+      val now = spark.conf.getAll
+      (before.keySet ++ now.keySet).filter(k => before.get(k) != now.get(k))
+        .foreach(k => changed.add(s"$k: ${before.get(k)} -> ${now.get(k)}"))
+      samples.incrementAndGet()
+      Thread.sleep(2)
+    })
+    sampler.start()
+    val n = try StreamPipeline.bm25IngestGen(spark, stream, root,
+      "doc_id", "text", autoCompactEvery = 2)
+    finally { done = true; sampler.join() }
+    assert(n == 2)
+    assert(samples.get > 10, "the sampler must run through the drain")
+    assert(changed.isEmpty, changed)
+    assert(spark.conf.getAll == before)
   }
 }
