@@ -31,4 +31,16 @@ object GraftSession {
     .withExtensions(new GraftExtensions)
 
   def local(cores: Int): SparkSession = builder(cores).getOrCreate()
+
+  /** A new session of `spark`'s context with `conf` set on it before
+    * anything plans there — for work that needs other conf (a stream's
+    * state width) without writing the conf that concurrent queries on
+    * `spark` plan under. It shares the context, the cache and the
+    * extensions; its SQL conf starts from the context's (this
+    * builder's), not from runtime changes made on `spark`. */
+  def derived(spark: SparkSession, conf: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    conf.foreach { case (k, v) => s.sessionState.conf.setConfString(k, v) }
+    s
+  }
 }

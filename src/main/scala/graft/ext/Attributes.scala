@@ -71,7 +71,7 @@ object Attributes {
   /** The attrs relation's read paths: base build + every COMMITTED
     * staged ingest batch ([[StagedBatches]]). */
   def attrsPaths(spark: SparkSession, dir: String): Seq[String] =
-    StagedBatches.storePaths(spark, dir, "attrs")
+    StagedBatches.snapshot(spark, dir).paths("attrs")
 
   /** The persisted doc-level attributes relation — base + committed
     * staged batches in one union read (the relation is unpartitioned,
@@ -81,19 +81,20 @@ object Attributes {
 
   /** Streaming attributes maintenance (the [[Bm25.ingestIntoIndex]]
     * pattern): STAGE one micro-batch of new documents' attribute rows
-    * under a fresh `batches/<id>/attrs` dir and COMMIT with one atomic
-    * `_COMMITTED` create ([[StagedBatches]]) — the tag pass runs over
-    * the BATCH, never the corpus, and every mix launched after the
-    * batch commits sees the union; a mix running DURING the commit
-    * folds only already-committed batches, never a torn one. Ingested
-    * doc ids must be new (same contract as the index ingest paths). */
-  def ingestIntoAttributes(dir: String, batch: DataFrame): Unit = {
-    val batchDir = StagedBatches.freshBatchDir(dir)
-    tagFrame(batch)
-      .sortWithinPartitions(col("doc_id"))
-      .write.parquet(s"$batchDir/attrs")
-    StagedBatches.commit(batch.sparkSession, batchDir)
-  }
+    * as batch `key` under `batches/b_<key>/attrs`
+    * ([[StagedBatches.stage]]: one exclusive `_COMMITTED` create, a
+    * no-op for a key already applied) — the tag pass runs over the
+    * BATCH, never the corpus, and every mix launched after the batch
+    * commits sees the union; a mix running DURING the commit folds only
+    * already-committed batches, never a torn one. Ingested doc ids must
+    * be new (same contract as the index ingest paths). */
+  def ingestIntoAttributes(dir: String, batch: DataFrame,
+                           key: String = StagedBatches.freshKey()): Boolean =
+    StagedBatches.stage(batch.sparkSession, dir, key) { batchDir =>
+      tagFrame(batch)
+        .sortWithinPartitions(col("doc_id"))
+        .write.parquet(s"$batchDir/attrs")
+    }
 
   /** A MIX: join the persisted attributes back to the corpus by id and
     * keep rows satisfying `pred` (a predicate over attribute columns).
@@ -315,7 +316,7 @@ object Attributes {
   /** The span relation's read paths: base build + every COMMITTED
     * staged ingest batch ([[StagedBatches]]). */
   def spanPaths(spark: SparkSession, dir: String): Seq[String] =
-    StagedBatches.storePaths(spark, dir, "spans")
+    StagedBatches.snapshot(spark, dir).paths("spans")
 
   /** The persisted span relation — base + committed staged batches in
     * one union read. */
@@ -324,28 +325,26 @@ object Attributes {
 
   /** Streaming span-attributes maintenance (the
     * [[ingestIntoAttributes]] pattern): STAGE one micro-batch of new
-    * documents' span rows under `batches/<id>/spans` and COMMIT with
-    * one atomic `_COMMITTED` create — the taggers run over the BATCH
-    * against the static benchmark, never the corpus; every mix
-    * launched after the batch commits sees the union, and a reader
-    * listing mid-commit folds only whole batches. Ingested doc ids
-    * must be new. `benchGrams` takes the benchmark's PRE-HASHED gram
-    * set so a long-lived stream computes it once, not once per
-    * micro-batch ([[StreamPipeline.spanIngest]] passes a persisted
-    * one). */
+    * documents' span rows as batch `key` under
+    * `batches/b_<key>/spans` — the taggers run over the BATCH against
+    * the static benchmark, never the corpus; every mix launched after
+    * the batch commits sees the union, and a reader listing mid-commit
+    * folds only whole batches. Ingested doc ids must be new.
+    * `benchGrams` takes the benchmark's PRE-HASHED gram set so a
+    * long-lived stream computes it once, not once per micro-batch
+    * ([[StreamPipeline.spanIngest]] passes a persisted one). */
   def ingestIntoSpanAttributes(dir: String, batch: DataFrame,
                                benchGrams: DataFrame,
                                idCol: String = "doc_id",
-                               textCol: String = "text", n: Int = 3): Unit = {
-    val toked = tokenized(batch, idCol, textCol).persist()
-    try {
-      val batchDir = StagedBatches.freshBatchDir(dir)
-      spanTagFrameOn(toked, benchGrams, n)
+                               textCol: String = "text", n: Int = 3,
+                               key: String = StagedBatches.freshKey()): Boolean =
+    StagedBatches.stage(batch.sparkSession, dir, key) { batchDir =>
+      val toked = tokenized(batch, idCol, textCol).persist()
+      try spanTagFrameOn(toked, benchGrams, n)
         .sortWithinPartitions(col("doc_id"), col("tag"), col("start"))
         .write.parquet(s"$batchDir/spans")
-      StagedBatches.commit(batch.sparkSession, batchDir)
-    } finally { toked.unpersist(); () }
-  }
+      finally { toked.unpersist(); () }
+    }
 
   /** The benchmark gram set [[ingestIntoSpanAttributes]] consumes —
     * [[Dedup.hashedShingleSet]] under the span taggers' tokenization. */

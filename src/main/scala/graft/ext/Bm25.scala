@@ -133,8 +133,8 @@ object Bm25 {
 
   /** Committed staged-batch dirs under `dir/batches`, sorted for
     * deterministic path lists. Streaming ingest stages each batch
-    * under `batches/<id>/{tf,df,stats}` and commits it by creating a
-    * `_COMMITTED` marker — a single atomic file create — so serving
+    * under `batches/b_<key>/{tf,df,stats}` and commits it by creating a
+    * `_COMMITTED` marker — a single exclusive file create — so serving
     * sees a batch entirely or not at all (see [[ingestIntoIndex]]).
     * Driver-side listing, bounded by batches since the last
     * compaction ([[graft.streaming.StreamPipeline.bm25IngestGen]]'s
@@ -145,66 +145,47 @@ object Bm25 {
   /** The `sub` store's read paths: base generation + every COMMITTED
     * staged batch. */
   def storePaths(spark: SparkSession, dir: String, sub: String): Seq[String] =
-    StagedBatches.storePaths(spark, dir, sub)
-
-  /** One consistent view of the index at `dir`: the base relations plus
-    * the committed staged `batches` of one listing, each relation read
-    * with its fixed schema. */
-  private[ext] final case class Snapshot(dir: String, batches: Seq[String]) {
-    def paths(sub: String): Seq[String] =
-      StagedBatches.paths(dir, batches, sub)
-    def tf(spark: SparkSession): DataFrame =
-      spark.read.schema(TfSchema).parquet(paths("tf"): _*)
-    def df(spark: SparkSession): DataFrame =
-      spark.read.schema(DfSchema).parquet(paths("df"): _*)
-    def stats(spark: SparkSession): DataFrame =
-      spark.read.schema(StatsSchema).parquet(paths("stats"): _*)
-  }
-
-  /** Lists `dir`'s committed batches once. */
-  private[ext] def snapshot(spark: SparkSession, dir: String): Snapshot =
-    Snapshot(dir, committedBatchDirs(spark, dir))
+    StagedBatches.snapshot(spark, dir).paths(sub)
 
   /** Streaming index maintenance (the Ivf.ingestIntoIndex pattern for
     * lexical search): STAGE one micro-batch of new documents' tf rows
-    * plus the batch's df and stats DELTAS under a fresh
-    * `batches/<id>/` dir, then COMMIT the whole batch atomically with
-    * a `_COMMITTED` marker (one file create) — `df/` deltas hold
-    * (tok, df) increments whose per-token SUM is the document
-    * frequency, `stats/` holds (n_docs, tot_dl) increments whose
-    * column sums are the corpus stats (the [[CountMin]] append-only
-    * store discipline: counters of independent batches sum). Per batch
-    * the cost is ONE tokenize pass over the BATCH plus batch-bounded
-    * writes — never an index rescan. A batch that fits one file
+    * plus the batch's df and stats DELTAS as batch `key`
+    * ([[StagedBatches.stage]]: committed by one `_COMMITTED` create, a
+    * no-op for a key already applied) — `df/` deltas hold (tok, df)
+    * increments whose per-token SUM is the document frequency,
+    * `stats/` holds (n_docs, tot_dl) increments whose column sums are
+    * the corpus stats (the [[CountMin]] append-only store discipline:
+    * counters of independent batches sum). Per batch the cost is ONE
+    * tokenize pass over the BATCH plus batch-bounded writes — never an
+    * index rescan. A batch that fits one file
     * ([[Compaction.writerWidth]] 1, as a streaming micro-batch of a
     * few hundred documents does) is read through `coalesce(1)`
     * ([[Compaction.TokWrite]]): the tokenize, the counts, the distinct
     * and the stats aggregate then run in one task and plan no
-    * exchange. A crash ANYWHERE before the
-    * marker leaves an uncommitted dir that serving ignores and
-    * compaction never folds: the three stores can never disagree
-    * about which batches they contain (the earlier three-append form
-    * had a window where tf carried a batch whose df/stats increments
-    * were lost, silently skewing every score). Serving folds the
-    * committed deltas ([[topK]]'s per-token sum);
-    * [[Compaction.compactBm25ToGeneration]] folds base + batches into
-    * a new generation, committed by one manifest entry. The fold is exact,
-    * not approximate — batch ids are new (the caller's contract), so
-    * delta sums equal re-derivation, which the driver oracle pins.
-    * Redelivery dedup is the caller's contract (exactly-once file
-    * sources here). Single-writer, like [[ensureIndex]]. */
+    * exchange. A crash ANYWHERE before the marker leaves an uncommitted
+    * dir that serving ignores and compaction never folds: the three
+    * stores can never disagree about which batches they contain (the
+    * earlier three-append form had a window where tf carried a batch
+    * whose df/stats increments were lost, silently skewing every
+    * score). Serving folds the committed deltas ([[topK]]'s per-token
+    * sum); [[Compaction.compactBm25ToGeneration]] folds base + batches
+    * into a new generation, committed by one manifest entry. The fold
+    * is exact: each key is applied once, so delta sums equal
+    * re-derivation, which the driver oracle pins. `key` defaults to a
+    * fresh one; the streaming drain passes the micro-batch's file key.
+    * Returns whether the batch was staged. Single-writer, like
+    * [[ensureIndex]]. */
   def ingestIntoIndex(spark: SparkSession, dir: String, batch: DataFrame,
-                      idCol: String, textCol: String): Unit = {
-    val batchDir = StagedBatches.freshBatchDir(dir)
-    val w = Compaction.TokWrite(Compaction.writerWidth(batch))
-    // one tokenize pass serves the tf write AND both delta writes
-    val tfdl = postings(w.input(batch), idCol, textCol).persist()
-    try {
+                      idCol: String, textCol: String,
+                      key: String = StagedBatches.freshKey()): Boolean =
+    StagedBatches.stage(spark, dir, key) { batchDir =>
+      val w = Compaction.TokWrite(Compaction.writerWidth(batch))
+      // one tokenize pass serves the tf write AND both delta writes
+      val tfdl = postings(w.input(batch), idCol, textCol).persist()
       // the three staged sub-writes all read the persisted tfdl and
       // write disjoint dirs — overlap them (guide §2.6); the commit
-      // marker stays strictly after the join, so the atomicity
-      // contract is unchanged
-      ParJobs.run(
+      // marker stays strictly after the join
+      try ParJobs.run(
         () => w.byTok(tfdl)
           .sortWithinPartitions(col("tok"), col("doc_id"))
           .write.parquet(s"$batchDir/tf"),
@@ -220,14 +201,11 @@ object Bm25 {
           .agg(count(lit(1)).as("n_docs"),
             coalesce(sum(col("dl")), lit(0L)).as("tot_dl"))
           .write.parquet(s"$batchDir/stats"))
-      // the commit point: everything above is invisible until this
-      // single atomic create succeeds
-      StagedBatches.commit(spark, batchDir)
-    } finally { tfdl.unpersist(); () }
-  }
+      finally { tfdl.unpersist(); () }
+    }
 
-  /** Top-k BM25 per query, read from one [[snapshot]] of the index at
-    * `dir`. `queryTerms` is the small (qid, tok) relation; it is
+  /** Top-k BM25 per query, read from one [[StagedBatches.snapshot]] of
+    * the index at `dir`. `queryTerms` is the small (qid, tok) relation; it is
     * collected to the driver. One small job fetches the query terms'
     * df rows (a pushed-down `tok IN (…)` filter) and every stats row;
     * the driver folds the committed deltas (a per-token sum for df, a
@@ -253,17 +231,18 @@ object Bm25 {
     * candidate. */
   def topK(spark: SparkSession, dir: String, queryTerms: DataFrame,
            k: Int): DataFrame = {
-    val snap = snapshot(spark, dir)
+    val snap = StagedBatches.snapshot(spark, dir)
     val qt = queryTerms.select(col("qid"), col("tok"))
     val qrows = qt.collect()
     val terms = qrows.toSeq.flatMap(r => Option(r.getString(1))).distinct
     // one job: the query terms' df deltas and every stats row (a null
     // tok marks a stats row — `tok IN (…)` never keeps a null tok)
     val noLong = lit(null).cast(LongType)
-    val fetched = snap.df(spark).filter(col("tok").isin(terms: _*))
+    val fetched = snap.read(spark, "df", DfSchema).filter(col("tok").isin(terms: _*))
       .select(col("tok"), col("df"), noLong.as("n_docs"), noLong.as("tot_dl"))
-      .unionByName(snap.stats(spark).select(lit(null).cast(StringType).as("tok"),
-        noLong.as("df"), col("n_docs"), col("tot_dl")))
+      .unionByName(snap.read(spark, "stats", StatsSchema)
+        .select(lit(null).cast(StringType).as("tok"),
+          noLong.as("df"), col("n_docs"), col("tot_dl")))
       .collect()
     val (dfRows, statRows) = fetched.partition(!_.isNullAt(0))
     val dfOf = dfRows.groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
@@ -275,7 +254,7 @@ object Bm25 {
       .map(d => Row(r.get(0), r.getString(1), d)))
     val qdf = spark.createDataFrame(qdfRows.asJava, StructType(Seq(
       qt.schema("qid"), qt.schema("tok"), StructField("df", LongType))))
-    val cand = snap.tf(spark)
+    val cand = snap.read(spark, "tf", TfSchema)
       .filter(col("tok").isin(dfOf.keys.toSeq: _*))
       .join(broadcast(qdf), Seq("tok"))
       .filter(col("doc_id") =!= col("qid"))

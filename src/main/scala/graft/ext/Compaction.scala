@@ -118,16 +118,23 @@ object Compaction {
   }
 
   /** The one compaction shape: resolve the current generation of
-    * `root`, `fold` it (source dir, fresh output dir) into a new
-    * generation, and commit that via the manifest. Folds read their
-    * source eagerly (parquet writes), and the source generation is
-    * immutable, so readers holding it are unaffected. Returns the new
+    * `root`, list its committed batches ONCE, `fold` that snapshot into
+    * a fresh output dir, record the folded batch keys there
+    * ([[StagedBatches.recordFolded]] — so a redelivered batch stays a
+    * no-op after its dir is folded away), and commit the new
+    * generation via the manifest. Folds read their source eagerly
+    * (parquet writes), and the source generation is immutable, so
+    * readers holding it are unaffected; a batch committed after the
+    * listing is neither folded nor recorded. Returns the new
     * generation's data dir. */
   private def publishFold(spark: SparkSession, root: String)
-                         (fold: (String, String) => Unit): String = {
-    val cur = GenerationStore.currentGenDir(spark, root).getOrElse(
-      sys.error(s"compaction: no committed generation under $root"))
-    GenerationStore.publish(spark, root)(fold(cur, _))
+                         (fold: (StagedBatches.Snapshot, String) => Unit): String = {
+    val snap = StagedBatches.snapshot(spark, GenerationStore.currentGenDir(spark, root)
+      .getOrElse(sys.error(s"compaction: no committed generation under $root")))
+    GenerationStore.publish(spark, root) { out =>
+      fold(snap, out)
+      StagedBatches.recordFolded(spark, snap, out)
+    }
   }
 
   /** Fold the count-min store (compacted `base/` + committed staged
@@ -135,9 +142,9 @@ object Compaction {
     * `base/` — the mergeability identity [[CountMin.storeSketch]]
     * applies at every read, made physical. ≤ Depth·Width rows total,
     * one file. */
-  private def foldCms(spark: SparkSession, srcDir: String,
+  private def foldCms(spark: SparkSession, snap: StagedBatches.Snapshot,
                       outDir: String): Unit =
-    CountMin.storeSketch(spark, srcDir)
+    CountMin.storeSketch(spark, snap)
       .repartition(1).sortWithinPartitions(col("r"), col("b"))
       .write.parquet(s"$outDir/base")
 
@@ -147,7 +154,7 @@ object Compaction {
   def compactCmsToGeneration(spark: SparkSession, root: String): String =
     publishFold(spark, root)(foldCms(spark, _, _))
 
-  /** Fold `srcDir`'s base generation + committed staged batches
+  /** Fold `snap`'s base generation + committed staged batches
     * ([[Bm25.ingestIntoIndex]]'s layout) into the single-generation
     * layout [[Bm25.ensureIndex]] produces, at `outDir`: `tf/`
     * token-clustered and sorted within partitions ([[Bm25]] scaladoc's
@@ -155,24 +162,22 @@ object Compaction {
     * folded to single relations (the same per-token / per-column sum
     * serving applies, materialized so reads stop paying it).
     * Uncommitted batch debris from crashed ingests is never folded. */
-  private def foldBm25(spark: SparkSession, srcDir: String,
+  private def foldBm25(spark: SparkSession, snap: StagedBatches.Snapshot,
                        outDir: String): Unit = {
-    // one listing: the three folds cover exactly the same batches
-    val snap = Bm25.snapshot(spark, srcDir)
     val tf = TokWrite(targetPartsFor(spark, snap.paths("tf")))
     val df = TokWrite(targetPartsFor(spark, snap.paths("df")))
     // the three folds read disjoint source relations and write disjoint
     // output dirs — overlap them (guide §2.6); the manifest commit
     // stays strictly after all three
     ParJobs.run(
-      () => tf.byTok(tf.input(snap.tf(spark)))
+      () => tf.byTok(tf.input(snap.read(spark, "tf", Bm25.TfSchema)))
         .sortWithinPartitions(col("tok"), col("doc_id"))
         .write.parquet(s"$outDir/tf"),
-      () => df.byTok(df.input(snap.df(spark))
+      () => df.byTok(df.input(snap.read(spark, "df", Bm25.DfSchema))
           .groupBy(col("tok")).agg(sum(col("df")).as("df")))
         .sortWithinPartitions(col("tok"))
         .write.parquet(s"$outDir/df"),
-      () => snap.stats(spark).coalesce(1)
+      () => snap.read(spark, "stats", Bm25.StatsSchema).coalesce(1)
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
         .write.parquet(s"$outDir/stats"))
   }
@@ -191,10 +196,10 @@ object Compaction {
     * are each sorted internally, but id ranges overlap across batches,
     * defeating row-group pruning on id probes; the fold restores it
     * corpus-wide. */
-  private def foldRangeStore(spark: SparkSession, srcDir: String,
+  private def foldRangeStore(spark: SparkSession, snap: StagedBatches.Snapshot,
                              outDir: String, sub: String,
                              sortCols: Seq[String]): Unit = {
-    val paths = StagedBatches.storePaths(spark, srcDir, sub)
+    val paths = snap.paths(sub)
     val n = targetPartsFor(spark, paths)
     spark.read.parquet(paths: _*)
       .repartitionByRange(n, col("doc_id"))
@@ -217,7 +222,7 @@ object Compaction {
     publishFold(spark, root)(
       foldRangeStore(spark, _, _, "spans", Seq("doc_id", "tag", "start")))
 
-  /** Fold `srcDir`'s IVF index into `outDir`: frozen model tables
+  /** Fold `snap`'s IVF index into `outDir`: frozen model tables
     * (centroids, pqbooks, …) byte-copied verbatim — centroids drift
     * only at a full rebuild, which is just another publish — and base
     * corpus + every COMMITTED staged batch ([[Ivf.ingestIntoIndex]]'s
@@ -225,9 +230,9 @@ object Compaction {
     * layout sized to [[TargetFileBytes]]: one shuffle clusters by
     * cell, `partitionBy` restores the locality the DPP-pruned probes
     * scan. Uncommitted batch debris is simply not folded. */
-  private def foldIvf(spark: SparkSession, srcDir: String,
+  private def foldIvf(spark: SparkSession, snap: StagedBatches.Snapshot,
                       outDir: String): Unit = {
-    val (fs, src) = fsFor(spark, srcDir)
+    val (fs, src) = fsFor(spark, snap.dir)
     fs.mkdirs(new org.apache.hadoop.fs.Path(outDir))
     fs.listStatus(src).filter(_.isDirectory).map(_.getPath)
       .filterNot(p => p.getName == "corpus" || p.getName == "batches")
@@ -239,8 +244,8 @@ object Compaction {
           false, spark.sparkContext.hadoopConfiguration)
         ()
       }
-    val n = targetPartsFor(spark, Ivf.corpusPaths(spark, srcDir))
-    Ivf.readCorpus(spark, srcDir)
+    val n = targetPartsFor(spark, snap.paths("corpus"))
+    Ivf.readCorpus(spark, snap)
       .repartition(n, col("cell"))
       .write.partitionBy("cell").parquet(s"$outDir/corpus")
   }
@@ -256,10 +261,10 @@ object Compaction {
     * cluster locality under `base/` — per-batch staging leaves one
     * small file per cluster per batch ([[foldIvf]]'s rationale on the
     * topic-shard store). */
-  private def foldKmeans(spark: SparkSession, srcDir: String,
+  private def foldKmeans(spark: SparkSession, snap: StagedBatches.Snapshot,
                          outDir: String): Unit = {
-    val n = targetPartsFor(spark, KMeans.shardPaths(spark, srcDir))
-    KMeans.readShards(spark, srcDir)
+    val n = targetPartsFor(spark, snap.withBase(spark, "shards"))
+    KMeans.readShards(spark, snap)
       .repartition(n, col("cluster"))
       .write.partitionBy("cluster").parquet(s"$outDir/base")
   }
@@ -271,31 +276,35 @@ object Compaction {
 
   /** Retention for the streaming near-dup band store
     * ([[graft.streaming.StreamPipeline.incrementalNearDups]] with a
-    * time column): delete every `batch_<id>` dir whose NEWEST signature
-    * is older than `minTs`. The store is already one independent,
-    * overwrite-keyed dir per micro-batch, so retention is a whole-dir
-    * delete — nothing is rewritten. The bound is per batch: a batch
-    * that straddles `minTs` stays until its newest row ages out, and
-    * until then the ingest's pair-time ttl filter still excludes its
-    * aged rows. With both, the steady-state store is bounded by the
-    * window's document arrival volume (plus one straddling batch), not
-    * corpus history. Run it between batches. */
+    * time column): delete every committed batch dir whose NEWEST
+    * signature is older than `minTs`. The store is one independent
+    * staged batch per micro-batch, so retention is a whole-dir delete
+    * — nothing is rewritten. A pruned batch's key goes with its dir:
+    * its files delivered again would stage again. The bound is per
+    * batch: a batch that straddles `minTs` stays until its newest row
+    * ages out, and until then the ingest's pair-time ttl filter still
+    * excludes its aged rows. With both, the steady-state store is
+    * bounded by the window's document arrival volume (plus one
+    * straddling batch), not corpus history. Run it between batches. */
   def pruneBandStore(spark: SparkSession, dir: String, minTs: Long): Unit = {
-    val store = spark.read.option("recursiveFileLookup", "true").parquet(dir)
-    // fail with intent, not an analysis error: a band store built
-    // without tsCol has no ts column and cannot be age-pruned
-    if (!store.columns.contains("ts")) sys.error(
-      s"pruneBandStore: band store at $dir has no ts column — it was " +
-      "built without retention (incrementalNearDups tsCol); rebuild the " +
-      "store with a time column to enable pruning")
-    val (fs, root) = fsFor(spark, dir)
-    // one job: the newest ts of every batch dir, keyed by its name
-    store
-      .groupBy(regexp_extract(col("_metadata.file_path"), "/(batch_[0-9]+)/", 1)
-        .as("batch"))
-      .agg(max(col("ts")).as("newest"))
-      .filter(col("batch") =!= "" && col("newest") < minTs)
-      .collect()
-      .foreach(r => fs.delete(new org.apache.hadoop.fs.Path(root, r.getString(0)), true))
+    val batches = StagedBatches.committedDirs(spark, dir)
+    if (batches.nonEmpty) {
+      val store = spark.read.parquet(batches.map(b => s"$b/bands"): _*)
+      // fail with intent, not an analysis error: a band store built
+      // without tsCol has no ts column and cannot be age-pruned
+      if (!store.columns.contains("ts")) sys.error(
+        s"pruneBandStore: band store at $dir has no ts column — it was " +
+        "built without retention (incrementalNearDups tsCol); rebuild the " +
+        "store with a time column to enable pruning")
+      val (fs, root) = fsFor(spark, s"$dir/batches")
+      // one job: the newest ts of every batch dir, keyed by its name
+      store
+        .groupBy(regexp_extract(col("_metadata.file_path"), "/batches/(b_[^/]+)/", 1)
+          .as("batch"))
+        .agg(max(col("ts")).as("newest"))
+        .filter(col("newest") < minTs)
+        .collect()
+        .foreach(r => fs.delete(new org.apache.hadoop.fs.Path(root, r.getString(0)), true))
+    }
   }
 }

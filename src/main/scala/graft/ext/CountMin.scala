@@ -49,46 +49,42 @@ object CountMin {
       .groupBy(col("pos").as("r"), col("col").as("b"))
       .agg(count(lit(1)).as("cnt"))
 
-  /** STAGE one batch's PARTIAL sketch under `batches/<id>/sketch` and
-    * commit it with one atomic `_COMMITTED` create ([[StagedBatches]]).
-    * CMS is mergeable — counters of independent sketches sum — so
-    * maintenance is append-only; staging (rather than the earlier
-    * plain `mode("append")`) closes the one hole mergeability does NOT
-    * cover: a reader folding the store while an append's files become
-    * visible one job-commit rename at a time sees a TORN partial
-    * sketch — SOME counters of the batch added, others not — which
-    * breaks the min-over-rows estimate's "never under-counts relative
-    * to the folded state" reading, and a crashed append's partial rows
-    * would double-count on retry. With staging a batch folds entirely
-    * or not at all. The store grows ≤ Depth·Width rows per batch
-    * between compactions; [[storeSketch]] folds committed batches (+
-    * the compacted `base/`, when one exists) back to one sketch. */
-  def ingestIntoStore(dir: String, batch: DataFrame, textCol: String): Unit = {
-    val spark = batch.sparkSession
-    val batchDir = StagedBatches.freshBatchDir(dir)
-    sketch(tokens(batch, textCol)).write.parquet(s"$batchDir/sketch")
-    StagedBatches.commit(spark, batchDir)
-  }
-
-  /** The store's readable relation paths: the compacted `base/` (when
-    * a compaction has produced one) + every COMMITTED staged batch. */
-  def sketchPaths(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(s"$dir/base")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (if (fs.exists(base)) Seq(base.toString) else Seq.empty) ++
-      StagedBatches.committedDirs(spark, dir).map(b => s"$b/sketch")
-  }
+  /** STAGE one batch's PARTIAL sketch as batch `key` under
+    * `batches/b_<key>/sketch` ([[StagedBatches.stage]]: one exclusive
+    * `_COMMITTED` create, a no-op for a key already applied). CMS is
+    * mergeable — counters of independent sketches sum — so maintenance
+    * is append-only; staging (rather than the earlier plain
+    * `mode("append")`) closes the holes mergeability does NOT cover: a
+    * reader folding the store while an append's files become visible
+    * one job-commit rename at a time sees a TORN partial sketch — SOME
+    * counters of the batch added, others not — which breaks the
+    * min-over-rows estimate's "never under-counts relative to the
+    * folded state" reading, and a crashed or redelivered batch would
+    * double-count. With staging a batch folds once, entirely or not at
+    * all. The store grows ≤ Depth·Width rows per batch between
+    * compactions; [[storeSketch]] folds committed batches (+ the
+    * compacted `base/`, when one exists) back to one sketch. */
+  def ingestIntoStore(dir: String, batch: DataFrame, textCol: String,
+                      key: String = StagedBatches.freshKey()): Boolean =
+    StagedBatches.stage(batch.sparkSession, dir, key) { batchDir =>
+      sketch(tokens(batch, textCol)).write.parquet(s"$batchDir/sketch")
+    }
 
   /** The merged sketch of everything ingested: SUM per counter before
     * any min — the mergeability identity sum-of-sketches =
     * sketch-of-union. */
-  def storeSketch(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val paths = sketchPaths(spark, dir)
-    require(paths.nonEmpty, s"count-min store at $dir is empty (no base, no committed batches)")
+  private[ext] def storeSketch(spark: org.apache.spark.sql.SparkSession,
+                               snap: StagedBatches.Snapshot): DataFrame = {
+    val paths = snap.withBase(spark, "sketch")
+    require(paths.nonEmpty,
+      s"count-min store at ${snap.dir} is empty (no base, no committed batches)")
     spark.read.parquet(paths: _*)
       .groupBy(col("r"), col("b")).agg(sum(col("cnt")).as("cnt"))
   }
+
+  /** [[storeSketch]] over the store's current committed batches. */
+  def storeSketch(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    storeSketch(spark, StagedBatches.snapshot(spark, dir))
 
   /** Column names [[estimates]] uses internally — a candidate relation
     * carrying any of them would collide with the explode/join plumbing

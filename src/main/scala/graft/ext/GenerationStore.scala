@@ -45,9 +45,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Immutability has one sanctioned relaxation: APPEND-ONLY extensions
   * of a committed generation that carry their own atomic commit
-  * markers — the staged `batches/<id>/` dirs with per-batch
-  * `_COMMITTED` files that [[Bm25.ingestIntoIndex]] and
-  * [[Ivf.ingestIntoIndex]] write. A reader that resolved the
+  * markers — the staged `batches/b_<key>/` dirs with per-batch
+  * `_COMMITTED` files that [[StagedBatches.stage]] writes. A reader that resolved the
   * generation folds only the batches committed at its own listing
   * time; a batch landing mid-read is simply not folded (it is a
   * LATER state, exactly as a later generation would be), never a
@@ -109,22 +108,22 @@ object GenerationStore {
       .filter(_.startsWith("m_")).map(seqOf).maxOption
   }
 
-  /** Atomically claim manifest sequence `seq`: returns a stream to
-    * write the entry content, or null when the seq is already taken.
-    * On HDFS `create(overwrite=false)` is the atomic primitive; on the
+  /** Create `path` EXCLUSIVELY: a stream to write the new file, or
+    * null when it already exists. The one exclusive-create primitive of
+    * the store protocols: manifest claims ([[claimSeq]]) and
+    * staged-batch commits ([[StagedBatches]]) both go through it. On
+    * HDFS `create(overwrite=false)` is the atomic primitive; on the
     * LOCAL filesystem it is NOT (RawLocalFileSystem implements it as a
     * non-atomic exists() probe + plain FileOutputStream), so the local
     * path goes through NIO `Files.createFile`, which is guaranteed
     * O_CREAT|O_EXCL. Any failure other than "already exists"
     * propagates — a permission or disk error must fail the commit
-    * loudly, not masquerade as 1000 seq collisions. */
-  private[ext] def claimSeq(fs: org.apache.hadoop.fs.FileSystem,
-                            root: String, seq: Long): java.io.OutputStream = {
-    val dst = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(manifestDir(root)), mName(seq))
+    * loudly, not masquerade as a collision. */
+  private[ext] def createExclusive(fs: org.apache.hadoop.fs.FileSystem,
+                                   path: org.apache.hadoop.fs.Path)
+      : java.io.OutputStream =
     if (fs.getScheme == "file") {
-      val nio = java.nio.file.Paths.get(
-        fs.makeQualified(dst).toUri.getPath)
+      val nio = java.nio.file.Paths.get(fs.makeQualified(path).toUri.getPath)
       try {
         java.nio.file.Files.createFile(nio)
         java.nio.file.Files.newOutputStream(nio,
@@ -133,10 +132,17 @@ object GenerationStore {
         case _: java.nio.file.FileAlreadyExistsException => null
       }
     } else {
-      try fs.create(dst, false)
+      try fs.create(path, false)
       catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => null }
     }
-  }
+
+  /** Atomically claim manifest sequence `seq` ([[createExclusive]]):
+    * returns a stream to write the entry content, or null when the seq
+    * is already taken. */
+  private[ext] def claimSeq(fs: org.apache.hadoop.fs.FileSystem,
+                            root: String, seq: Long): java.io.OutputStream =
+    createExclusive(fs, new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(manifestDir(root)), mName(seq)))
 
   /** (seq, content) of EVERY manifest file, ascending by seq — content
     * `""` marks an in-flight or crashed commit (see [[commit]]): it

@@ -402,62 +402,60 @@ object Ivf {
 
   /** Committed staged-batch dirs under `dir/batches` — the
     * [[Bm25.committedBatchDirs]] contract on the ANN tier: ingest
-    * stages each batch under `batches/<id>/corpus` and commits it with
-    * ONE atomic `_COMMITTED` file create, so a reader folds a batch
-    * entirely or not at all. Driver-side listing, bounded by batches
-    * since the last compaction. */
+    * stages each batch under `batches/b_<key>/corpus` and commits it
+    * with ONE exclusive `_COMMITTED` file create, so a reader folds a
+    * batch entirely or not at all. Driver-side listing, bounded by
+    * batches since the last compaction. */
   def committedBatchDirs(spark: SparkSession, dir: String): Seq[String] =
     StagedBatches.committedDirs(spark, dir)
 
-  /** The corpus read paths: base build + every COMMITTED staged batch.
-    * All serving and compaction reads of a float index go through
-    * this, so an uncommitted (in-flight or crashed) batch is invisible
-    * everywhere by construction. */
-  def corpusPaths(spark: SparkSession, dir: String): Seq[String] =
-    s"$dir/corpus" +: committedBatchDirs(spark, dir).map(b => s"$b/corpus")
-
-  /** Union over [[corpusPaths]] — for FOLDS (compaction), where
-    * pruning is irrelevant because every row is rewritten anyway.
+  /** The corpus of one listing — base build + every COMMITTED staged
+    * batch, `snap.paths("corpus")` — as one union, for FOLDS
+    * (compaction), where pruning is irrelevant because every row is
+    * rewritten anyway. All serving and compaction reads of a float
+    * index read the paths of a snapshot, so an uncommitted (in-flight
+    * or crashed) batch is invisible everywhere by construction.
     * Partition discovery cannot host roots of different depths in one
     * FileIndex, so each root reads separately; serving joins each
     * root against the query side INSTEAD of using this union, keeping
     * DPP on the base scan (see [[topKIndexed]]). */
+  private[ext] def readCorpus(spark: SparkSession,
+                              snap: StagedBatches.Snapshot): DataFrame =
+    snap.paths("corpus").map(spark.read.parquet(_)).reduce(_.unionByName(_))
+
+  /** [[readCorpus]] over the index's current committed batches. */
   def readCorpus(spark: SparkSession, dir: String): DataFrame =
-    corpusPaths(spark, dir).map(spark.read.parquet(_))
-      .reduce(_.unionByName(_))
+    readCorpus(spark, StagedBatches.snapshot(spark, dir))
 
   /** Appends new vectors to an existing FLOAT index WITHOUT
     * retraining: cells come from the frozen centroid model (the
     * standard IVF maintenance contract — centroids drift only at the
     * next full rebuild) and rows take the same (nid, nvec, nn2, cell)
-    * shape [[buildIndex]] writes — but STAGED under a fresh
-    * `batches/<id>/corpus` dir and committed by one atomic
-    * `_COMMITTED` file create (the [[Bm25.ingestIntoIndex]]
-    * discipline), NOT appended in place: Spark's job commit makes a
-    * plain `mode("append")`'s files visible one rename at a time, so
-    * a concurrent reader that resolved the index mid-commit could
-    * list a TORN batch. With staging, serving ([[topKIndexed]] via
-    * [[corpusPaths]]) folds only the batches committed at its own
+    * shape [[buildIndex]] writes — but STAGED as batch `key` under
+    * `batches/b_<key>/corpus` ([[StagedBatches.stage]]: one exclusive
+    * `_COMMITTED` create, a no-op for a key already applied), NOT
+    * appended in place: Spark's job commit makes a plain
+    * `mode("append")`'s files visible one rename at a time, so a
+    * concurrent reader that resolved the index mid-commit could list a
+    * TORN batch. With staging, serving ([[topKIndexed]], over one
+    * snapshot) folds only the batches committed at its own
     * listing time — a batch landing mid-read is a LATER state, never
     * a torn one, which is exactly the append-only relaxation
     * [[GenerationStore]] sanctions. One narrow map + one
     * cell-clustered write per batch — no shuffle of existing index
     * data, no driver collect beyond the cached k-row model. A crashed
     * ingest leaves an uncommitted dir serving ignores and compaction
-    * never folds; a RETRIED batch that committed twice double-appends
-    * (harmless to top-k: duplicate rows of one nid rank adjacently). */
+    * never folds. Returns whether the batch was staged. */
   def ingestIntoIndex(spark: SparkSession, indexDir: String, batch: DataFrame,
-                      idCol: String, vecCol: String): Unit = {
-    val model = loadModel(spark, indexDir)
-    val batchDir = StagedBatches.freshBatchDir(indexDir)
-    Similarity.prepared(batch, idCol, vecCol, "nid", "nvec", "nn2")
-      .withColumn("cell", assignUdf(model, 1)(col("nvec")).getItem(0))
-      .repartition(Compaction.writerWidth(batch), col("cell"))
-      .write.partitionBy("cell").parquet(s"$batchDir/corpus")
-    // the commit point: the batch is invisible until this single
-    // atomic create succeeds
-    StagedBatches.commit(spark, batchDir)
-  }
+                      idCol: String, vecCol: String,
+                      key: String = StagedBatches.freshKey()): Boolean =
+    StagedBatches.stage(spark, indexDir, key) { batchDir =>
+      val model = loadModel(spark, indexDir)
+      Similarity.prepared(batch, idCol, vecCol, "nid", "nvec", "nn2")
+        .withColumn("cell", assignUdf(model, 1)(col("nvec")).getItem(0))
+        .repartition(Compaction.writerWidth(batch), col("cell"))
+        .write.partitionBy("cell").parquet(s"$batchDir/corpus")
+    }
 
   /** Centroids load once per JVM per index (k rows — bounded model
     * metadata, not corpus data) and are reused by every query. */
@@ -521,7 +519,7 @@ object Ivf {
     // filters); join count is bounded by the staged batches since the
     // last compaction — the bounded-delta fold the BM25 df/stats
     // serving pays.
-    val scored = corpusPaths(spark, indexDir)
+    val scored = StagedBatches.snapshot(spark, indexDir).paths("corpus")
       .map { p =>
         spark.read.parquet(p).join(broadcast(q), "cell")
           .filter(col("qid") =!= col("nid"))

@@ -154,48 +154,43 @@ object KMeans {
     assign(quantPoints(em, idCol, vecCol), cents)
       .select(col("vec_id"), col("cluster"))
 
-  /** STAGE one batch of assignments into the topic-shard store under
-    * `batches/<id>/shards` (cluster-partitioned, the serving layout)
-    * and commit with one atomic `_COMMITTED` create
-    * ([[StagedBatches]]) — the plain `mode("append")` this replaces
-    * made a batch's files visible one job-commit rename at a time (a
-    * concurrent shard reader could see a torn batch) and left a
-    * crashed append's partial rows behind to double on retry; with
-    * staging a batch is visible entirely or not at all. Map-only:
-    * centroids ride the expression tree, one cluster-clustered write
-    * per batch. */
+  /** STAGE one batch of assignments into the topic-shard store as
+    * batch `key` under `batches/b_<key>/shards` (cluster-partitioned,
+    * the serving layout) and commit with one exclusive `_COMMITTED`
+    * create ([[StagedBatches.stage]], a no-op for a key already
+    * applied) — the plain `mode("append")` this replaces made a batch's
+    * files visible one job-commit rename at a time (a concurrent shard
+    * reader could see a torn batch) and left a crashed append's partial
+    * rows behind to double on retry; with staging a batch is visible
+    * entirely or not at all. Map-only: centroids ride the expression
+    * tree, one cluster-clustered write per batch. */
   def ingestIntoShards(dir: String, batch: DataFrame, idCol: String,
-                       vecCol: String, cents: Array[Array[Long]]): Unit = {
-    val spark = batch.sparkSession
-    val batchDir = StagedBatches.freshBatchDir(dir)
+                       vecCol: String, cents: Array[Array[Long]],
+                       key: String = StagedBatches.freshKey()): Boolean =
     // map-only like the append it replaces — no per-batch shuffle; the
     // compaction fold restores file-per-cluster locality
-    assignWith(batch, idCol, vecCol, cents)
-      .write.partitionBy("cluster").parquet(s"$batchDir/shards")
-    StagedBatches.commit(spark, batchDir)
-  }
+    StagedBatches.stage(batch.sparkSession, dir, key) { batchDir =>
+      assignWith(batch, idCol, vecCol, cents)
+        .write.partitionBy("cluster").parquet(s"$batchDir/shards")
+    }
 
-  /** The shard store's readable roots: the compacted `base/` (when a
-    * compaction has produced one) + every COMMITTED staged batch. */
-  def shardPaths(spark: org.apache.spark.sql.SparkSession,
-                 dir: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(s"$dir/base")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (if (fs.exists(base)) Seq(base.toString) else Seq.empty) ++
-      StagedBatches.committedDirs(spark, dir).map(b => s"$b/shards")
-  }
-
-  /** The maintained shard store as one relation — per-root reads
-    * unioned (partition discovery cannot host roots of different
-    * depths in one FileIndex; each root contributes its own
-    * cluster-partitioned scan). */
-  def readShards(spark: org.apache.spark.sql.SparkSession,
-                 dir: String): DataFrame = {
-    val paths = shardPaths(spark, dir)
+  /** The maintained shard store as one relation: the compacted `base/`
+    * (when a compaction has produced one) + every COMMITTED staged
+    * batch of `snap`, per-root reads unioned (partition discovery
+    * cannot host roots of different depths in one FileIndex; each root
+    * contributes its own cluster-partitioned scan). */
+  private[ext] def readShards(spark: org.apache.spark.sql.SparkSession,
+                              snap: StagedBatches.Snapshot): DataFrame = {
+    val paths = snap.withBase(spark, "shards")
     require(paths.nonEmpty,
-      s"k-means shard store at $dir is empty (no base, no committed batches)")
+      s"k-means shard store at ${snap.dir} is empty (no base, no committed batches)")
     paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
   }
+
+  /** [[readShards]] over the store's current committed batches. */
+  def readShards(spark: org.apache.spark.sql.SparkSession,
+                 dir: String): DataFrame =
+    readShards(spark, StagedBatches.snapshot(spark, dir))
 
   /** Lloyd k-means: [[fitCentroids]] then the final (idCol, cluster)
     * assignment against the post-update centroids. The final

@@ -277,11 +277,11 @@ object Packing {
     * materializing them lazily re-runs the two-level scan once per
     * write. Here the relation persists around the three writes and
     * releases before returning — no cache leak across micro-batches.
-    * Writes `seqs/`, `carry/`, `meta/` under `genDir` (the caller owns
+    * Writes `seqs/`, `carry/`, `meta/` under `batchDir` (the caller owns
     * the commit marker). */
   def packCarryBatch(toks: DataFrame, idCol: String, seqLen: Int,
                      offset: Long, carried: DataFrame,
-                     genDir: String): (Long, Seq[(Long, Long)]) = {
+                     batchDir: String): (Long, Seq[(Long, Long)]) = {
     val spark = toks.sparkSession
     import spark.implicits._
     val seqs = carrySeqs(toks, idCol, seqLen, offset, carried).persist()
@@ -298,14 +298,14 @@ object Packing {
       @volatile var tail: Seq[(Long, Long)] = null
       @volatile var t = 0L
       ParJobs.run(
-        () => complete.write.parquet(s"$genDir/seqs"),
+        () => complete.write.parquet(s"$batchDir/seqs"),
         () => {
           tail = newCarry.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-          tail.toDF("gp", "tid").coalesce(1).write.parquet(s"$genDir/carry")
+          tail.toDF("gp", "tid").coalesce(1).write.parquet(s"$batchDir/carry")
         },
         () => {
           t = newMeta.collect()(0).getLong(0)
-          Seq(t).toDF("t").coalesce(1).write.parquet(s"$genDir/meta")
+          Seq(t).toDF("t").coalesce(1).write.parquet(s"$batchDir/meta")
         })
       (t, tail)
     } finally { seqs.unpersist(); () }

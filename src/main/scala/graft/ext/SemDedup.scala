@@ -417,9 +417,9 @@ object SemDedup {
   //
   // Layout under `root`:
   //   centroids/              frozen unit-space model (cell, c)
-  //   batches/<b>/reps        the batch's KEPT representatives (id, cell, v)
-  //   batches/<b>/verdicts    the batch's verdicts (id, cell, kept)
-  //   batches/<b>/_COMMITTED  the single atomic commit marker
+  //   batches/b_<key>/reps        the batch's KEPT representatives (id, cell, v)
+  //   batches/b_<key>/verdicts    the batch's verdicts (id, cell, kept)
+  //   batches/b_<key>/_COMMITTED  the single exclusive commit marker
   //
   // Verdict semantics — FIRST-WINS streaming discipline: an incoming
   // doc DROPS iff some already-committed representative in its cell,
@@ -440,10 +440,10 @@ object SemDedup {
   // model is the only driver-resident object (the IVF serving
   // contract); centroid drift is handled by the next full rebuild,
   // the standard IVF maintenance split. A crashed attempt leaves an
-  // uncommitted dir every read ignores; a retried-after-commit batch
-  // double-appends — verdicts dedup on read ([[readStreamVerdicts]]'s
-  // distinct) and a re-delivered doc never pairs with its own earlier
-  // representative (the id guard).
+  // uncommitted dir every read ignores, and a redelivered batch is a
+  // no-op ([[StagedBatches.stage]]); a doc id that arrives again in a
+  // NEW file never pairs with its own earlier representative (the id
+  // guard).
 
   private val RepSchema = "id LONG, cell INT, v ARRAY<DOUBLE>"
   private val StreamVerdictSchema = "id LONG, cell INT, kept BOOLEAN"
@@ -481,42 +481,43 @@ object SemDedup {
 
   /** One micro-batch step: assign cells under the frozen model,
     * compare within-cell against the committed representatives plus
-    * the batch's own smaller ids, stage verdicts + new representatives
-    * under a fresh batch dir, commit with ONE atomic marker create. */
+    * the batch's own smaller ids, and stage verdicts + new
+    * representatives as batch `key` ([[StagedBatches.stage]]: one
+    * exclusive commit, a no-op for a key already applied). */
   def ingestBatch(root: String, batch: DataFrame, idCol: String,
-                  vecCol: String, tau: Double): Unit = {
+                  vecCol: String, tau: Double,
+                  key: String = StagedBatches.freshKey()): Boolean = {
     val s = batch.sparkSession
-    val assign = udf(loadAssigner(s, root))
-    // persisted: feeds the cross join, the self join, and both writes
-    val asg = unitRows(batch, idCol, vecCol)
-      .withColumn("cell", assign(col("v"))).persist()
-    try {
-      val repPaths = StagedBatches.committedDirs(s, root).map(d => s"$d/reps")
-      val store =
-        if (repPaths.isEmpty) emptyOf(s, RepSchema)
-        else s.read.schema(RepSchema).parquet(repPaths: _*)
-      // cross-batch: the store holds only EARLIER batches (this
-      // batch's dir is uncommitted until the end), so first-wins is
-      // structural; the id guard keeps a redelivered doc from pairing
-      // with its own earlier representative
-      val cross = asg.as("a").join(store.as("b"),
-          col("a.cell") === col("b.cell") && col("a.id") =!= col("b.id"))
-        .filter(Similarity.dotUdf(col("a.v"), col("b.v")) >= tau)
-        .select(col("a.id").as("id"))
-      // in-batch: the batch operator's i<j rule within this batch
-      val inBatch = asg.select(col("cell"), col("id").as("i"), col("v").as("va"))
-        .join(asg.select(col("cell"), col("id").as("j"), col("v").as("vb")),
-          Seq("cell"))
-        .filter(col("i") < col("j"))
-        .filter(Similarity.dotUdf(col("va"), col("vb")) >= tau)
-        .select(col("j").as("id"))
-      val dropped = cross.unionByName(inBatch).distinct().persist()
+    StagedBatches.stage(s, root, key) { bd =>
+      val assign = udf(loadAssigner(s, root))
+      // persisted: feeds the cross join, the self join, and both writes
+      val asg = unitRows(batch, idCol, vecCol)
+        .withColumn("cell", assign(col("v"))).persist()
       try {
-        val bd = StagedBatches.freshBatchDir(root)
+        val repPaths = StagedBatches.committedDirs(s, root).map(d => s"$d/reps")
+        val store =
+          if (repPaths.isEmpty) emptyOf(s, RepSchema)
+          else s.read.schema(RepSchema).parquet(repPaths: _*)
+        // cross-batch: the store holds only EARLIER batches (this
+        // batch's dir is uncommitted until the end), so first-wins is
+        // structural; the id guard keeps a doc id seen again from
+        // pairing with its own earlier representative
+        val cross = asg.as("a").join(store.as("b"),
+            col("a.cell") === col("b.cell") && col("a.id") =!= col("b.id"))
+          .filter(Similarity.dotUdf(col("a.v"), col("b.v")) >= tau)
+          .select(col("a.id").as("id"))
+        // in-batch: the batch operator's i<j rule within this batch
+        val inBatch = asg.select(col("cell"), col("id").as("i"), col("v").as("va"))
+          .join(asg.select(col("cell"), col("id").as("j"), col("v").as("vb")),
+            Seq("cell"))
+          .filter(col("i") < col("j"))
+          .filter(Similarity.dotUdf(col("va"), col("vb")) >= tau)
+          .select(col("j").as("id"))
+        val dropped = cross.unionByName(inBatch).distinct().persist()
         // both staged writes read the persisted asg + dropped and write
         // disjoint dirs — overlap them (guide §2.6); the commit marker
         // stays strictly after the join
-        ParJobs.run(
+        try ParJobs.run(
           () => asg.join(dropped.withColumn("d", lit(true)), Seq("id"), "left")
             .select(col("id"), col("cell").cast("int").as("cell"),
               (!coalesce(col("d"), lit(false))).as("kept"))
@@ -524,20 +525,17 @@ object SemDedup {
           () => asg.join(dropped, Seq("id"), "left_anti")
             .select(col("id"), col("cell").cast("int").as("cell"), col("v"))
             .write.parquet(s"$bd/reps"))
-        // the commit point: both relations are invisible until this
-        // single atomic create succeeds
-        StagedBatches.commit(s, bd)
-      } finally { dropped.unpersist(); () }
-    } finally { asg.unpersist(); () }
+        finally { dropped.unpersist(); () }
+      } finally { asg.unpersist(); () }
+    }
   }
 
-  /** All committed verdicts so far: (id, cell, kept). `distinct`
-    * absorbs a retried-after-commit batch's identical re-emission. */
+  /** All committed verdicts so far: (id, cell, kept). */
   def readStreamVerdicts(spark: org.apache.spark.sql.SparkSession,
                          root: String): DataFrame = {
     val paths = StagedBatches.committedDirs(spark, root)
       .map(d => s"$d/verdicts")
     if (paths.isEmpty) emptyOf(spark, StreamVerdictSchema)
-    else spark.read.schema(StreamVerdictSchema).parquet(paths: _*).distinct()
+    else spark.read.schema(StreamVerdictSchema).parquet(paths: _*)
   }
 }

@@ -127,7 +127,7 @@ object StreamQueries {
       // invocations reuse one directory instead of leaking a tempdir each.
       val out = freshScratchDir(d, "window").toString
       // state = |windows|×|types| ≈ 3600 rows: 8 state partitions, not
-      // the session's relational 32 (see withStateParts' measurement)
+      // one per core (see StreamPipeline.onStateParts' measurement)
       StreamPipeline.runAppendToDir(s, agg, out, Seq("event_type"),
           stateParts = Some(8))
         // terminal decimal → double for engine-stable hashing (exact value)
@@ -136,16 +136,16 @@ object StreamQueries {
         .orderBy(col("window_start_us"), col("event_type"))
     }),
 
-    // the same watermarked window through the EXACTLY-ONCE sink
-    // (per-batch batch_id dirs + overwrite instead of blind append):
-    // replay-safe delivery must not change a single emitted row, so
-    // this declares the idempotent path under the same oracle as
-    // q_stream_window.
+    // the same watermarked window, declared as the replay-safe path:
+    // runAppendToDir writes every micro-batch to its own batch_id dir
+    // with overwrite (StreamPipeline.idempotentBatchWriter), so a
+    // replayed batch rewrites rather than duplicates, and the emitted
+    // rows stay those of q_stream_window's oracle.
     "q_stream_window_once" -> ((s, d) => {
       val agg = StreamPipeline.windowedCounts(
         StreamPipeline.readEvents(s, d), watermark = Some("30 minutes"))
       val out = freshScratchDir(d, "windowonce").toString
-      StreamPipeline.runAppendToDirExactlyOnce(s, agg, out, Seq("event_type"),
+      StreamPipeline.runAppendToDir(s, agg, out, Seq("event_type"),
           stateParts = Some(8))
         .withColumn("total_value", col("total_value").cast("double"))
         .select("window_start_us", "event_type", "n", "total_value")
@@ -717,7 +717,7 @@ object StreamQueries {
     // full IVF build published as generation 0, a +1M-id copy of every
     // vector STAGE-ingested into the committed generation (the
     // sanctioned append-only relaxation: cell assignment from the
-    // frozen centroids, per-batch batches/<id>/ dir committed by one
+    // frozen centroids, per-batch batches/b_<key>/ dir committed by one
     // atomic _COMMITTED create — readers fold only committed batches,
     // so a concurrent lister can never see a torn batch), then
     // compaction-as-publish folding centroids + base + committed
@@ -1042,7 +1042,7 @@ object StreamQueries {
         .option("maxFilesPerTrigger", "1").parquet(p.toString)
       StreamPipeline.packIngest(s, stream, outDir, wids,
         "doc_id", "text", seqLen = 512)
-      s.read.parquet(outDir)
+      StreamPipeline.packSeqs(s, outDir)
         .select(col("bat"), col("seq_id"), col("seq_len"), col("n_docs"),
           md5(col("ids")).as("ids_md5"))
         .orderBy(col("bat"), col("seq_id"))
@@ -1100,7 +1100,7 @@ object StreamQueries {
         .option("maxFilesPerTrigger", "1").parquet(p.toString)
       StreamPipeline.packIngest(s, stream, outDir, wids,
         "doc_id", "text", seqLen = 512)
-      s.read.parquet(outDir)
+      StreamPipeline.packSeqs(s, outDir)
         .select(col("bat"), col("seq_id"), col("seq_len"), col("n_docs"),
           md5(col("ids")).as("ids_md5"))
         .orderBy(col("bat"), col("seq_id"))
@@ -1126,7 +1126,7 @@ object StreamQueries {
         .option("maxFilesPerTrigger", "1").parquet(p.toString)
       StreamPipeline.packIngest(s, stream, outDir, wids,
         "doc_id", "text", seqLen = 512)
-      s.read.parquet(outDir)
+      StreamPipeline.packSeqs(s, outDir)
         .select(col("bat"), col("seq_id"), col("seq_len"), col("n_docs"),
           md5(col("ids")).as("ids_md5"))
         .orderBy(col("bat"), col("seq_id"))

@@ -77,11 +77,37 @@ object StreamPipeline {
     spark.table(name)
   }
 
+  /** `agg` re-planned on a new session of `spark`'s context whose
+    * shuffle width is `stateParts`, when given. Spark pins a stream's
+    * STATE partition count from `spark.sql.shuffle.partitions` at first
+    * start and keeps it for the checkpoint's lifetime — state width is
+    * a PER-STREAM property sized by state volume, not the session's
+    * relational shuffle width. A windowed aggregation with a few
+    * thousand state rows at one partition per core pays one
+    * HDFS-backed store commit (file create + fsync + rename) per
+    * partition per micro-batch for ~100 rows of state apiece —
+    * measured at 32 partitions: 9–36 s of summed commit time per
+    * trigger vs ~1 s at 8, 4.3 s → 2.7 s wall on the events window
+    * query. A 100 TB stream with large keyed state passes a LARGER
+    * number for the same reason. The width is set on a session of its
+    * own before anything plans there, so a query planned concurrently
+    * on `spark` keeps `spark`'s width. */
+  private def onStateParts(spark: SparkSession, agg: DataFrame,
+                           stateParts: Option[Int]): DataFrame =
+    stateParts match {
+      case None => agg
+      case Some(n) => DatasetBridge.onSession(graft.GraftSession.derived(
+        spark, "spark.sql.shuffle.partitions" -> n.toString), agg)
+    }
+
   /** The scale path for streaming aggregation: event-time watermark +
-    * Append output + foreachBatch writing partitioned parquet. State
-    * stays bounded by the watermark (closed windows are evicted each
-    * trigger) and nothing materializes on the driver — each micro-batch
-    * appends its finalized windows straight to the distributed sink.
+    * Append output + foreachBatch writing partitioned parquet through
+    * [[idempotentBatchWriter]]. State stays bounded by the watermark
+    * (closed windows are evicted each trigger) and nothing
+    * materializes on the driver — each micro-batch writes its
+    * finalized windows straight to the distributed sink; the read-back
+    * drops the writer's `batch_id` column. `stateParts` sizes the
+    * stream's state ([[onStateParts]]).
     *
     * Bounded-input contract: Append emits exactly the windows the
     * watermark has closed, i.e. window_end ≤ max(event time) − delay;
@@ -89,43 +115,15 @@ object StreamPipeline {
     * they'd emit when later data advances the watermark). The engine's
     * no-data micro-batch performs the final eviction after the last
     * data batch; [[drainAndStop]] waits for it. */
-  /** Plan-and-start `start` under `stateParts` shuffle partitions
-    * (restoring the session conf after), when given. Spark pins a
-    * stream's STATE partition count from `spark.sql.shuffle.partitions`
-    * at first start and keeps it for the checkpoint's lifetime — state
-    * width is a PER-STREAM property sized by state volume, not the
-    * session's relational shuffle width. A windowed aggregation with a
-    * few thousand state rows under the session default of 32 pays 32
-    * HDFS-backed store commits (file create + fsync + rename each) per
-    * micro-batch for ~100 rows of state apiece — measured 9–36 s of
-    * summed commit time per trigger vs ~1 s at 8 partitions, 4.3 s →
-    * 2.7 s wall on the events window query. A 100 TB stream with large
-    * keyed state passes a LARGER number for the same reason. */
-  private def withStateParts[A](spark: SparkSession,
-                                stateParts: Option[Int])(start: => A): A =
-    stateParts match {
-      case None => start
-      case Some(n) =>
-        val key = "spark.sql.shuffle.partitions"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, n)
-        try start finally spark.conf.set(key, prev)
-    }
-
   def runAppendToDir(spark: SparkSession, agg: DataFrame, outDir: String,
                      partitionCols: Seq[String],
                      stateParts: Option[Int] = None): DataFrame = {
     val schema = agg.schema
-    val q = withStateParts(spark, stateParts) {
-      agg.writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            batch.write.mode("append").partitionBy(partitionCols: _*).parquet(outDir)
-        }
-        .start()
-    }
+    val q = onStateParts(spark, agg, stateParts).writeStream
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.ProcessingTime(0))
+      .foreachBatch(idempotentBatchWriter(outDir, partitionCols))
+      .start()
     drainAndStop(q)
     // No window may have closed (watermark never passed a window end) —
     // then no batch wrote and the dir has no parquet to infer from.
@@ -134,48 +132,27 @@ object StreamPipeline {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.exists(p) && fs.listStatus(p).nonEmpty
     }
-    if (wrote) spark.read.parquet(outDir)
+    if (wrote) spark.read.parquet(outDir).drop("batch_id")
     else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
   }
 
-  /** Idempotent batch writer — the exactly-once sink recipe.
-    * foreachBatch delivery is AT-LEAST-once: after a crash between the
-    * sink write and the offset commit, the same batchId replays.
-    * [[runAppendToDir]]'s blind append would duplicate those rows;
-    * landing every micro-batch in its own `batch_id=<n>` directory
-    * with OVERWRITE mode makes a replay rewrite instead of duplicate —
-    * output = input exactly once for any crash point. Exposed
-    * standalone so the replay property is testable without crashing a
-    * live engine (StreamingSpec invokes it twice with one batchId). */
+  /** Idempotent batch writer — the exactly-once sink for stateful
+    * aggregation outputs. foreachBatch delivery is AT-LEAST-once: after
+    * a crash between the sink write and the offset commit, the same
+    * batchId replays. Landing every micro-batch in its own
+    * `batch_id=<n>` directory with OVERWRITE mode makes a replay
+    * rewrite instead of duplicate — output = input exactly once for
+    * any crash point. Its replay key is the engine's batch id under the
+    * query's checkpoint, not the input files
+    * ([[graft.ext.StagedBatches]]): an aggregation's eviction batch
+    * scans no file at all. Exposed standalone so the replay property
+    * is testable without crashing a live engine (StreamingSpec invokes
+    * it twice with one batchId). */
   def idempotentBatchWriter(outDir: String, partitionCols: Seq[String])
       : (DataFrame, Long) => Unit = (batch, batchId) =>
     if (!batch.isEmpty)
       batch.write.mode("overwrite").partitionBy(partitionCols: _*)
         .parquet(s"$outDir/batch_id=$batchId")
-
-  /** [[runAppendToDir]] through the idempotent per-batch sink; the
-    * synthetic `batch_id` partition column is dropped on read-back. */
-  def runAppendToDirExactlyOnce(spark: SparkSession, agg: DataFrame,
-                                outDir: String,
-                                partitionCols: Seq[String],
-                                stateParts: Option[Int] = None): DataFrame = {
-    val schema = agg.schema
-    val q = withStateParts(spark, stateParts) {
-      agg.writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.ProcessingTime(0))
-        .foreachBatch(idempotentBatchWriter(outDir, partitionCols))
-        .start()
-    }
-    drainAndStop(q)
-    val wrote = {
-      val p = new org.apache.hadoop.fs.Path(outDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).nonEmpty
-    }
-    if (wrote) spark.read.parquet(outDir).drop("batch_id")
-    else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-  }
 
   /** processAllAvailable returns when all source data is committed, but
     * watermark eviction happens in a trailing NO-DATA micro-batch —
@@ -249,10 +226,10 @@ object StreamPipeline {
     * (a) computes LSH band signatures for its documents, (b) joins
     * them against the PERSISTED signature store (every prior batch's
     * bands) plus itself for candidate pairs, (c) exact-Jaccard-verifies
-    * survivors against the content store by id, appends confirmed
-    * pairs to `outDir`, and (d) appends its own bands to the store —
-    * so each pair is found exactly once, whichever batches its two
-    * sides arrive in.
+    * survivors against the content store by id and stages the
+    * confirmed pairs into `outDir`, and (d) stages its own bands into
+    * the store — so each pair is found exactly once, whichever batches
+    * its two sides arrive in.
     *
     * The 100 TB shape: state is the compact (id, band, key) relation —
     * 16 rows of 20 bytes per document, on distributed storage, NOT in
@@ -265,18 +242,17 @@ object StreamPipeline {
     * the corpus seen so far (StreamingSpec pins the cross-batch path
     * with maxFilesPerTrigger=1).
     *
-    * Fault tolerance: both sinks are keyed by `batchId`
-    * (`…/batch_<id>` subdirectories, written with overwrite after
-    * deleting any half-written attempt), so a failed-and-retried
-    * micro-batch replaces its own output instead of double-appending —
-    * each pair lands exactly once per run. Across RESTARTS the engine
-    * only redelivers stable batchIds when the query has a
-    * `checkpointLocation`; this harness runs checkpoint-free over
-    * wiped scratch dirs (each run starts from batch 0 on empty
-    * stores), so production use on a durable store must set one. A
-    * re-delivered doc joining its own stored bands is excluded by the
-    * `a.id =!= b.id` guard rather than surfacing as an (i, i)
-    * self-pair.
+    * Fault tolerance: both sinks are staged stores
+    * ([[graft.ext.StagedBatches.stage]]) keyed by the micro-batch's
+    * files — pairs first, then bands. A crash before the pairs commit
+    * leaves nothing visible; a crash between the two commits leaves
+    * the pairs committed, and the retry skips them and stages the
+    * bands. A redelivered batch — a retry, or a fresh query over the
+    * same files without a checkpoint — finds both committed and does
+    * nothing, so each pair lands exactly once. A doc id that arrives
+    * again in a NEW file is kept from pairing with its own stored
+    * bands by the `a.id =!= b.id` guard rather than surfacing as an
+    * (i, i) self-pair.
     *
     * `corpus` must resolve text for every id the stream will carry.
     *
@@ -296,105 +272,105 @@ object StreamPipeline {
                           n: Int = 3, minJ: Double = 0.8,
                           tsCol: Option[String] = None,
                           ttl: Option[Long] = None): DataFrame = {
-    import graft.ext.Dedup
+    import graft.ext.{Dedup, StagedBatches}
     require(tsCol.isDefined == ttl.isDefined,
       "incrementalNearDups: tsCol and ttl come together (both or neither)")
     val bandSchema =
       if (tsCol.isDefined) "id LONG, band INT, key LONG, ts LONG"
       else "id LONG, band INT, key LONG"
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        if (!batch.isEmpty) {
-          val rawBands = Dedup.bandRows(batch, "doc_id", "text", n)
-          val newBands = (tsCol match {
-            case Some(tc) => rawBands.join(
-              batch.groupBy(col("doc_id").as("id"))
-                .agg(max(col(tc).cast("long")).as("ts")), "id")
-            case None => rawBands
-          }).persist()
-          try {
-            val storePath = new org.apache.hadoop.fs.Path(storeDir)
-            val fs = storePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-            // a crashed prior attempt of THIS batch may have left its
-            // own bands behind — remove them before reading the store
-            // so "store excludes this batch" stays exact on retry
-            val ownBands = new org.apache.hadoop.fs.Path(storeDir, s"batch_$batchId")
-            if (fs.exists(ownBands)) fs.delete(ownBands, true)
-            val store =
-              if (fs.exists(storePath) && fs.listStatus(storePath).nonEmpty)
-                s.read.schema(bandSchema)
-                  .option("recursiveFileLookup", "true").parquet(storeDir)
-              else s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-                org.apache.spark.sql.types.StructType.fromDDL(bandSchema))
-            // retention: pair only against store signatures inside the
-            // ttl window behind this batch's max event time (one-row
-            // driver collect; aged-out rows stay until pruneBandStore)
-            val liveStore = ttl match {
-              case Some(window) =>
-                // max(ts) is NULL when every event time in the batch is
-                // NULL (or the batch is empty): there is no "now" to
-                // anchor the window, so skip the age filter for this
-                // batch rather than NPE-killing the stream — pairing
-                // against the whole store is correct, just unpruned
-                val mxRow = newBands.agg(max(col("ts"))).head
-                if (mxRow.isNullAt(0)) store
-                else store.filter(col("ts") >= mxRow.getLong(0) - window)
-              case None => store
-            }
-            // cross-batch: new docs vs the store (store excludes this
-            // batch, so no double-count with the self-join; the id
-            // guard keeps a redelivered doc from pairing with itself)
-            val cross = newBands.as("a").join(liveStore.as("b"),
-                col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-                  col("a.id") =!= col("b.id"))
-              .select(least(col("a.id"), col("b.id")).as("i"),
-                greatest(col("a.id"), col("b.id")).as("j"))
-            val self = newBands.as("a").join(newBands.as("b"),
-                col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-                  col("a.id") < col("b.id"))
-              .select(col("a.id").as("i"), col("b.id").as("j"))
-            val cand = cross.unionByName(self).distinct()
-            // unconditional write: an isEmpty probe would execute the
-            // verify join twice (once to check, once to write) — the
-            // most expensive per-batch step; an empty write is cheap
-            val verified = Dedup.verifyJaccard(cand, corpus, "doc_id", "text", n, minJ)
-            // the pair sink and the band store are disjoint dirs, both
-            // keyed by batchId with overwrite semantics — a crash
-            // before either completes replays the batch and rewrites
-            // both, so overlapping the two jobs (guide §2.6) preserves
-            // the exactly-once contract
-            graft.ext.ParJobs.run(
-              () => verified.write.mode("overwrite")
-                .parquet(s"$outDir/batch_$batchId"),
-              () => newBands.write.mode("overwrite")
-                .parquet(s"$storeDir/batch_$batchId"))
-          } finally { newBands.unpersist(); () }
+    drainIngest(stream) { (batch, _, key) =>
+      val s = batch.sparkSession
+      val rawBands = Dedup.bandRows(batch, "doc_id", "text", n)
+      val newBands = (tsCol match {
+        case Some(tc) => rawBands.join(
+          batch.groupBy(col("doc_id").as("id"))
+            .agg(max(col(tc).cast("long")).as("ts")), "id")
+        case None => rawBands
+      }).persist()
+      try {
+        StagedBatches.stage(s, outDir, key) { bd =>
+          // the committed store never holds this batch: its bands
+          // commit only after its pairs
+          val storePaths = StagedBatches.committedDirs(s, storeDir).map(b => s"$b/bands")
+          val store =
+            if (storePaths.nonEmpty) s.read.schema(bandSchema).parquet(storePaths: _*)
+            else s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+              org.apache.spark.sql.types.StructType.fromDDL(bandSchema))
+          // retention: pair only against store signatures inside the
+          // ttl window behind this batch's max event time (one-row
+          // driver collect; aged-out rows stay until pruneBandStore)
+          val liveStore = ttl match {
+            case Some(window) =>
+              // max(ts) is NULL when every event time in the batch is
+              // NULL: there is no "now" to anchor the window, so skip
+              // the age filter for this batch rather than NPE-killing
+              // the stream — pairing against the whole store is
+              // correct, just unpruned
+              val mxRow = newBands.agg(max(col("ts"))).head
+              if (mxRow.isNullAt(0)) store
+              else store.filter(col("ts") >= mxRow.getLong(0) - window)
+            case None => store
+          }
+          // cross-batch: new docs vs the store (no double-count with
+          // the self-join; the id guard keeps a doc id seen again from
+          // pairing with itself)
+          val cross = newBands.as("a").join(liveStore.as("b"),
+              col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+                col("a.id") =!= col("b.id"))
+            .select(least(col("a.id"), col("b.id")).as("i"),
+              greatest(col("a.id"), col("b.id")).as("j"))
+          val self = newBands.as("a").join(newBands.as("b"),
+              col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+                col("a.id") < col("b.id"))
+            .select(col("a.id").as("i"), col("b.id").as("j"))
+          val cand = cross.unionByName(self).distinct()
+          // unconditional write: an isEmpty probe would execute the
+          // verify join twice (once to check, once to write) — the
+          // most expensive per-batch step; an empty write is cheap
+          Dedup.verifyJaccard(cand, corpus, "doc_id", "text", n, minJ)
+            .write.parquet(s"$bd/pairs")
         }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(outPath) && fs.listStatus(outPath).nonEmpty)
-      spark.read.option("recursiveFileLookup", "true").parquet(outDir)
+        StagedBatches.stage(s, storeDir, key)(bd => newBands.write.parquet(s"$bd/bands"))
+      } finally { newBands.unpersist(); () }
+    }
+    val pairs = StagedBatches.committedDirs(spark, outDir).map(b => s"$b/pairs")
+    if (pairs.nonEmpty) spark.read.parquet(pairs: _*)
     else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType.fromDDL("i LONG, j LONG, jaccard DOUBLE"))
+  }
+
+  /** The replay key of a micro-batch: an md5 of the sorted, distinct
+    * paths of the files its scan read. foreachBatch hands the body a
+    * `LogicalRDD` over the engine's executed batch, so the key comes
+    * from that RDD's lineage — the `FileScanRDD`s' file partitions —
+    * and costs no Spark job. The same files give the same key in any
+    * query, with or without a checkpoint. */
+  private def batchKey(raw: DataFrame): String = {
+    import org.apache.spark.rdd.RDD
+    def files(rdd: RDD[_]): Seq[String] = rdd match {
+      case scan: org.apache.spark.sql.execution.datasources.FileScanRDD =>
+        scan.filePartitions.flatMap(_.files.map(_.filePath.toString))
+      case other => other.dependencies.flatMap(d => files(d.rdd))
+    }
+    val paths = raw.queryExecution.logical
+      .collect { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+      .flatMap(files).distinct.sorted
+    require(paths.nonEmpty, "stream ingest: a micro-batch scanned no file — " +
+      "the ingest stores key each batch by its source files, so the stream " +
+      "must read a file source")
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(paths.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
   }
 
   /** The shared ingest drain: run `body` on every non-empty
     * micro-batch until the sources are fully committed, returning the
     * non-empty batch count (the cross-batch contracts in StreamingSpec
-    * and the ingest queries pin ≥ 2). Each plain-dir store-maintenance
-    * ingest below is this loop plus one store call. */
-  private def drainIngest(stream: DataFrame)(body: DataFrame => Unit): Long =
-    drainIngestWithId(stream)((batch, _) => body(batch))
-
-  /** [[drainIngest]] exposing the engine's micro-batch id to the body —
-    * for stores whose rows are SCOPED to their ingest batch (the
-    * packed-sequence store: sequence ids restart per batch).
+    * and the ingest queries pin ≥ 2). `body` gets the batch, the
+    * engine's micro-batch id and the batch's file key ([[batchKey]]),
+    * which every store maintainer below stages under
+    * ([[graft.ext.StagedBatches.stage]]) — so a redelivered batch is a
+    * no-op in every store.
     *
     * Each micro-batch is re-planned on the session that created
     * `stream` before `body` sees it. The engine hands foreachBatch a
@@ -407,8 +383,8 @@ object StreamPipeline {
     * session's conf, AQE included: small batches get their exchanges
     * coalesced without any per-batch conf change, so nothing here
     * writes the shared session's conf that concurrent readers use. */
-  private def drainIngestWithId(stream: DataFrame)
-                               (body: (DataFrame, Long) => Unit): Long = {
+  private def drainIngest(stream: DataFrame)
+                         (body: (DataFrame, Long, String) => Unit): Long = {
     val session = stream.sparkSession
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
     val q = stream.writeStream
@@ -418,7 +394,7 @@ object StreamPipeline {
         val batch = DatasetBridge.onSession(session, raw)
         if (!batch.isEmpty) {
           batches.incrementAndGet()
-          body(batch, id)
+          body(batch, id, batchKey(raw))
         }
       }
       .start()
@@ -427,7 +403,7 @@ object StreamPipeline {
   }
 
   /** Streaming IVF index maintenance: each micro-batch of new vectors
-    * is cell-assigned with the FROZEN centroid model and appended to
+    * is cell-assigned with the FROZEN centroid model and staged into
     * the index's cell-partitioned corpus
     * ([[graft.ext.Ivf.ingestIntoIndex]]) — probes launched after a
     * batch commits see its vectors with the same DPP-pruned scan as
@@ -440,9 +416,9 @@ object StreamPipeline {
     * @return number of non-empty micro-batches ingested. */
   def ivfIngest(spark: SparkSession, stream: DataFrame, indexDir: String,
                 idCol: String, vecCol: String): Long =
-    drainIngest(stream) { batch =>
+    drainIngest(stream) { (batch, _, key) =>
       graft.ext.Ivf.ingestIntoIndex(batch.sparkSession, indexDir, batch,
-        idCol, vecCol)
+        idCol, vecCol, key)
     }
 
   /** Streaming BM25 index maintenance — [[ivfIngest]]'s pattern
@@ -456,31 +432,32 @@ object StreamPipeline {
     * batches into a new generation. */
   def bm25Ingest(spark: SparkSession, stream: DataFrame, indexDir: String,
                  idCol: String, textCol: String): Long =
-    drainIngest(stream) { batch =>
+    drainIngest(stream) { (batch, _, key) =>
       graft.ext.Bm25.ingestIntoIndex(batch.sparkSession, indexDir, batch,
-        idCol, textCol)
+        idCol, textCol, key)
     }
 
   /** The generation-store maintainer loop of [[bm25IngestGen]] and
     * [[spanIngestGen]]: every micro-batch RE-RESOLVES the current
     * generation of `root` (a compaction may have published a new one
-    * since the last batch) and `ingest`s into it; when that
-    * generation's committed-batch count reaches `autoCompactEvery`,
-    * `compact` publishes a folded generation and the age-gated GC
-    * runs. Resolve + append + compact run SEQUENTIALLY inside one
-    * foreachBatch, so an appended batch can never land in a
-    * generation a concurrent fold has already superseded — the
-    * single-MAINTAINER contract; concurrent readers need no
-    * coordination at all. */
+    * since the last batch) and `ingest`s into it under the batch's
+    * key; when that generation's committed-batch count reaches
+    * `autoCompactEvery`, `compact` publishes a folded generation (which
+    * records the folded keys, so a redelivered batch stays a no-op)
+    * and the age-gated GC runs. Resolve + append + compact run
+    * SEQUENTIALLY inside one foreachBatch, so an appended batch can
+    * never land in a generation a concurrent fold has already
+    * superseded — the single-MAINTAINER contract; concurrent readers
+    * need no coordination at all. */
   private def drainIntoGeneration(stream: DataFrame, root: String,
                                   autoCompactEvery: Int, gcAgeMs: Long,
                                   compact: (SparkSession, String) => String)
-                                 (ingest: (DataFrame, String) => Unit): Long =
-    drainIngest(stream) { batch =>
+                                 (ingest: (DataFrame, String, String) => Unit): Long =
+    drainIngest(stream) { (batch, _, key) =>
       val sp = batch.sparkSession
       val cur = graft.ext.GenerationStore.currentGenDir(sp, root)
         .getOrElse(sys.error(s"generation ingest: no committed generation under $root"))
-      ingest(batch, cur)
+      ingest(batch, cur, key)
       if (autoCompactEvery > 0 &&
           graft.ext.StagedBatches.committedDirs(sp, cur).length
             >= autoCompactEvery) {
@@ -504,9 +481,9 @@ object StreamPipeline {
                     autoCompactEvery: Int = 0,
                     gcAgeMs: Long = 3600L * 1000): Long =
     drainIntoGeneration(stream, root, autoCompactEvery, gcAgeMs,
-        graft.ext.Compaction.compactBm25ToGeneration) { (batch, cur) =>
+        graft.ext.Compaction.compactBm25ToGeneration) { (batch, cur, key) =>
       graft.ext.Bm25.ingestIntoIndex(batch.sparkSession, cur, batch,
-        idCol, textCol)
+        idCol, textCol, key)
     }
 
   /** Streaming topic-shard routing — [[ivfIngest]]'s pattern applied
@@ -521,8 +498,8 @@ object StreamPipeline {
   def kmeansIngest(spark: SparkSession, stream: DataFrame, outDir: String,
                    cents: Array[Array[Long]],
                    idCol: String, vecCol: String): Long =
-    drainIngest(stream) { batch =>
-      graft.ext.KMeans.ingestIntoShards(outDir, batch, idCol, vecCol, cents)
+    drainIngest(stream) { (batch, _, key) =>
+      graft.ext.KMeans.ingestIntoShards(outDir, batch, idCol, vecCol, cents, key)
     }
 
   /** Streaming SemDeDup maintenance — the semantic-dedup analogue of
@@ -538,32 +515,32 @@ object StreamPipeline {
     * [[graft.ext.SemDedup.ingestBatch]]). */
   def semDedupIngest(spark: SparkSession, stream: DataFrame, root: String,
                      idCol: String, vecCol: String, tau: Double): Long =
-    drainIngest(stream) { batch =>
-      graft.ext.SemDedup.ingestBatch(root, batch, idCol, vecCol, tau)
+    drainIngest(stream) { (batch, _, key) =>
+      graft.ext.SemDedup.ingestBatch(root, batch, idCol, vecCol, tau, key)
     }
 
   /** Streaming count-min maintenance: each micro-batch's PARTIAL
-    * sketch (bounded Depth·Width rows of batch-local counting) appends
-    * to the store — the sketch-mergeability identity makes this the
-    * rare ingest with NO read side at all; serving folds the log with
-    * one bounded groupBy ([[graft.ext.CountMin.storeSketch]]). */
+    * sketch (bounded Depth·Width rows of batch-local counting) is
+    * staged into the store — the sketch-mergeability identity makes
+    * this the rare ingest with NO read side at all; serving folds the
+    * log with one bounded groupBy ([[graft.ext.CountMin.storeSketch]]). */
   def cmsIngest(spark: SparkSession, stream: DataFrame, storeDir: String,
                 textCol: String): Long =
-    drainIngest(stream) { batch =>
-      graft.ext.CountMin.ingestIntoStore(storeDir, batch, textCol)
+    drainIngest(stream) { (batch, _, key) =>
+      graft.ext.CountMin.ingestIntoStore(storeDir, batch, textCol, key)
     }
 
   /** Streaming Dolma-attributes maintenance: per micro-batch, tag the
-    * batch and append its attribute rows to the persisted relation
+    * batch and stage its attribute rows into the persisted relation
     * ([[graft.ext.Attributes.ingestIntoAttributes]]). */
   def attrsIngest(spark: SparkSession, stream: DataFrame,
                   attrsDir: String): Long =
-    drainIngest(stream) { batch =>
-      graft.ext.Attributes.ingestIntoAttributes(attrsDir, batch)
+    drainIngest(stream) { (batch, _, key) =>
+      graft.ext.Attributes.ingestIntoAttributes(attrsDir, batch, key)
     }
 
   /** Streaming SPAN-attributes maintenance: each micro-batch's span
-    * rows (tagged against the static `benchmark`) append to the
+    * rows (tagged against the static `benchmark`) are staged into the
     * persisted relation — the [[attrsIngest]] pattern at span
     * granularity. The benchmark's hashed gram set is computed and
     * persisted ONCE for the stream's lifetime (it is static), not
@@ -571,9 +548,9 @@ object StreamPipeline {
   def spanIngest(spark: SparkSession, stream: DataFrame, spanDir: String,
                  benchmark: DataFrame, n: Int = 3): Long = {
     val benchGrams = graft.ext.Attributes.benchGramSet(benchmark, n = n).persist()
-    try drainIngest(stream) { batch =>
+    try drainIngest(stream) { (batch, _, key) =>
       graft.ext.Attributes.ingestIntoSpanAttributes(spanDir, batch,
-        benchGrams, n = n)
+        benchGrams, n = n, key = key)
     }
     finally { benchGrams.unpersist(); () }
   }
@@ -593,9 +570,9 @@ object StreamPipeline {
                     gcAgeMs: Long = 3600L * 1000): Long = {
     val benchGrams = graft.ext.Attributes.benchGramSet(benchmark, n = n).persist()
     try drainIntoGeneration(stream, root, autoCompactEvery, gcAgeMs,
-        graft.ext.Compaction.compactSpansToGeneration) { (batch, cur) =>
+        graft.ext.Compaction.compactSpansToGeneration) { (batch, cur, key) =>
       graft.ext.Attributes.ingestIntoSpanAttributes(cur, batch,
-        benchGrams, n = n)
+        benchGrams, n = n, key = key)
     }
     finally { benchGrams.unpersist(); () }
   }
@@ -606,43 +583,53 @@ object StreamPipeline {
     * ([[graft.ext.Bpe.wordIdRelation]], trained before the stream
     * starts — the production train-once/encode-forever split) and
     * packed into fixed-length sequences SCOPED TO THE BATCH (`bat` =
-    * micro-batch id; sequence ids restart per batch — each batch's
-    * tail sequence closes short rather than waiting for future data,
-    * the per-shard packing a real pipeline does). Appended rows:
-    * (bat, seq_id, seq_len, n_docs, ids). Per batch: one word join +
-    * the two-level scan over the BATCH, never the corpus. */
+    * the engine's micro-batch id; sequence ids restart per batch — each
+    * batch's tail sequence closes short rather than waiting for future
+    * data, the per-shard packing a real pipeline does), staged under
+    * the batch's file key ([[graft.ext.StagedBatches.stage]]) as
+    * (bat, seq_id, seq_len, n_docs, ids) rows; read them with
+    * [[packSeqs]]. Per batch: one word join + the two-level scan over
+    * the BATCH, never the corpus. `bat` numbers the batches of one
+    * query: a query that starts without a checkpoint counts from 0
+    * again, though the batches it skips as already staged keep theirs. */
   def packIngest(spark: SparkSession, stream: DataFrame, outDir: String,
                  wids: DataFrame, idCol: String, textCol: String,
                  seqLen: Int): Long =
-    drainIngestWithId(stream) { (batch, id) =>
-      val toks = graft.ext.Bpe.encodeIdsAgainst(batch, idCol, textCol, wids)
-      graft.ext.Packing.packSequences(toks, idCol, seqLen)
-        .withColumn("bat", lit(id))
-        .select(col("bat"), col("seq_id"), col("seq_len"),
-          col("n_docs"), col("ids"))
-        .write.mode("append").parquet(outDir)
+    drainIngest(stream) { (batch, id, key) =>
+      graft.ext.StagedBatches.stage(batch.sparkSession, outDir, key) { bd =>
+        val toks = graft.ext.Bpe.encodeIdsAgainst(batch, idCol, textCol, wids)
+        graft.ext.Packing.packSequences(toks, idCol, seqLen)
+          .withColumn("bat", lit(id))
+          .select(col("bat"), col("seq_id"), col("seq_len"),
+            col("n_docs"), col("ids"))
+          .write.parquet(s"$bd/seqs")
+      }
     }
 
-  private def hadoopFs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  /** The committed sequences of a [[packIngest]] store. */
+  def packSeqs(spark: SparkSession, outDir: String): DataFrame = {
+    val paths = graft.ext.StagedBatches.committedDirs(spark, outDir)
+      .map(b => s"$b/seqs")
+    require(paths.nonEmpty, s"no committed pack batches under $outDir")
+    spark.read.parquet(paths: _*)
   }
 
-  /** Numeric batch id of a `gen_<id>` generation dir name — ordering
-    * and the strictly-before recovery filter compare PARSED ids, never
-    * name strings: a batch id past the zero-pad width would produce a
-    * longer name that sorts lexicographically BEFORE shorter ones and
-    * silently corrupt recovery. */
-  private def genIdOf(name: String): Long = name.stripPrefix("gen_").toLong
-
-  private def committedGens(spark: SparkSession, outDir: String): Seq[String] = {
-    val (fs, p) = hadoopFs(spark, outDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("gen_"))
-      .filter(gp => fs.exists(new org.apache.hadoop.fs.Path(gp, "_COMMITTED")))
-      .sortBy(gp => genIdOf(gp.getName)).map(_.toString).toSeq
-  }
+  /** The running token total and dir of the newest of the committed
+    * pack-carry `batches`: the one with the highest total (`meta/`).
+    * Totals never fall, and a batch that adds no token leaves the
+    * carry state as it was, so a tie is between equal states. One job
+    * reads every batch's total. */
+  private def newestCarry(spark: SparkSession,
+                          batches: Seq[String]): Option[(Long, String)] =
+    if (batches.isEmpty) None
+    else {
+      val (t, file) = spark.read.schema("t LONG")
+        .parquet(batches.map(b => s"$b/meta"): _*)
+        .select(col("t"), col("_metadata.file_path")).collect()
+        .map(r => (r.getLong(0), r.getString(1))).maxBy(_._1)
+      Some((t, batches.find(b =>
+        file.contains(s"/${new org.apache.hadoop.fs.Path(b).getName}/")).get))
+    }
 
   /** [[packIngest]] with CROSS-BATCH TAIL CARRY: instead of closing
     * each micro-batch's last sequence short (per-shard packing — small
@@ -651,15 +638,13 @@ object StreamPipeline {
     * packed store equals the BATCH packing of the concatenated stream
     * ([[graft.ext.Packing.packWithCarry]]). Sequence ids are GLOBAL.
     *
-    * State is a tiny on-disk generation per batch (the staged-commit
-    * discipline of [[graft.ext.Bm25.ingestIntoIndex]]):
-    * `outDir/gen_<batch>/` holds the batch's completed sequences
-    * (`seqs/`), the new partial tail (`carry/`, ≤ seqLen-1 rows), the
-    * running token total (`meta/`, 1 row) and a `_COMMITTED` marker
-    * created LAST — output rows and carry state commit together
-    * atomically, so a crash mid-batch can neither drop nor duplicate a
-    * boundary sequence; the batch re-runs from the previous committed
-    * generation. Serve with [[packCarryServe]]. Default remains
+    * Each batch is staged under its file key
+    * ([[graft.ext.StagedBatches.stage]]): `seqs/` holds the batch's
+    * completed sequences, `carry/` the new partial tail (≤ seqLen-1
+    * rows) and `meta/` the running token total (1 row). Output rows
+    * and carry state commit together, so a crash mid-batch can neither
+    * drop nor duplicate a boundary sequence, and a redelivered batch is
+    * a no-op. Serve with [[packCarryServe]]. Default remains
     * [[packIngest]] (per-shard): at scale each shard packs
     * independently in parallel, while carry mode serializes on the
     * tail — the right trade when batches are SMALL relative to seqLen
@@ -668,64 +653,42 @@ object StreamPipeline {
                       wids: DataFrame, idCol: String, textCol: String,
                       seqLen: Int): Long = {
     // carry state rides the driver between micro-batches (≤ seqLen-1
-    // (gp, tid) rows + the running total — model-metadata sized); the
-    // committed generation dirs are the RECOVERY source, read only on
-    // the first batch of a (re)started stream. Recovery is keyed to
-    // the BATCH ID: a redelivered batch whose generation is already
-    // committed SKIPS (idempotent — covers both a restart without a
-    // source checkpoint, which redelivers from batch 0, and a crash
-    // between our marker and the source's offset commit), and prior
-    // state comes from the newest committed generation STRICTLY BEFORE
-    // this batch — never from this batch's own or a later generation,
-    // which would double-pack the tokens. Requires the source's
-    // file→batch mapping to be restart-deterministic (the harness
-    // stamps strictly increasing mtimes; a production source keyed by
-    // offsets satisfies it via its checkpoint).
+    // (gp, tid) rows + the running total — model-metadata sized). The
+    // committed batches are the RECOVERY source, read when a stream
+    // stages its first batch or follows a batch it skipped as already
+    // staged: prior state is the newest committed batch's.
     var mem: Option[(Long, Seq[(Long, Long)])] = None
-    drainIngestWithId(stream) { (batch, id) =>
+    drainIngest(stream) { (batch, _, key) =>
       val sp = batch.sparkSession
       import sp.implicits._
-      def genState(g: String): (Long, Seq[(Long, Long)]) =
-        (sp.read.parquet(s"$g/meta").collect()(0).getLong(0),
-          sp.read.parquet(s"$g/carry").collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSeq)
-      val genName = "gen_" + "%012d".format(id)
-      val genDir = s"$outDir/$genName"
-      val (fs, gp) = hadoopFs(sp, genDir)
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$genDir/_COMMITTED"))) {
-        mem = Some(genState(genDir)) // redelivered, already applied
-      } else {
-        val (offset, carriedSeq) = mem.getOrElse {
-          committedGens(sp, outDir)
-            .filter(g => genIdOf(g.split('/').last) < id)
-            .lastOption.map(genState)
-            .getOrElse((0L, Seq.empty[(Long, Long)]))
-        }
-        val carried = carriedSeq.toDF("gp", "tid")
-        if (fs.exists(gp)) fs.delete(gp, true) // uncommitted crash debris
+      var next: Option[(Long, Seq[(Long, Long)])] = None
+      graft.ext.StagedBatches.stage(sp, outDir, key) { bd =>
+        val (offset, carried) = mem.getOrElse(
+          newestCarry(sp, graft.ext.StagedBatches.committedDirs(sp, outDir))
+            .map { case (t, b) => (t, sp.read.parquet(s"$b/carry").collect()
+              .map(r => (r.getLong(0), r.getLong(1))).toSeq) }
+            .getOrElse((0L, Seq.empty[(Long, Long)])))
         val toks = graft.ext.Bpe
           .encodeIdsAgainst(batch, idCol, textCol, wids).persist()
-        try {
-          val next = graft.ext.Packing.packCarryBatch(toks, idCol, seqLen,
-            offset, carried, genDir)
-          val mp = new org.apache.hadoop.fs.Path(s"$genDir/_COMMITTED")
-          fs.create(mp, false).close()
-          mem = Some(next)
-        } finally { toks.unpersist(); () }
+        try next = Some(graft.ext.Packing.packCarryBatch(toks, idCol, seqLen,
+          offset, carried.toDF("gp", "tid"), bd))
+        finally { toks.unpersist(); () }
       }
+      mem = next
     }
   }
 
   /** Read a [[packIngestCarry]] store: all committed complete
-    * sequences plus the final partial tail materialized as its short
-    * last sequence — together exactly the batch packing of the
-    * concatenated stream. */
+    * sequences plus the newest batch's partial tail materialized as
+    * its short last sequence — together exactly the batch packing of
+    * the concatenated stream. */
   def packCarryServe(spark: SparkSession, outDir: String,
                      seqLen: Int): DataFrame = {
-    val gens = committedGens(spark, outDir)
-    require(gens.nonEmpty, s"no committed pack generations under $outDir")
-    val seqs = spark.read.parquet(gens.map(g => s"$g/seqs"): _*)
-    val tail = spark.read.parquet(s"${gens.last}/carry")
+    val batches = graft.ext.StagedBatches.committedDirs(spark, outDir)
+    val (_, newest) = newestCarry(spark, batches).getOrElse(
+      sys.error(s"no committed pack batches under $outDir"))
+    val seqs = spark.read.parquet(batches.map(b => s"$b/seqs"): _*)
+    val tail = spark.read.parquet(s"$newest/carry")
     seqs.unionByName(graft.ext.Packing.carryTailSequence(tail, seqLen))
   }
 

@@ -86,7 +86,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
 
   test("staged IVF serving keeps DPP partition pruning on base AND staged-batch scans") {
     // The plan-shape contract behind Ivf.topKIndexed's per-root join
-    // design (Ivf.scala: corpusPaths roots join the broadcast query
+    // design (Ivf.scala: the snapshot's corpus roots join the broadcast query
     // side SEPARATELY): every root — the corpus-sized base AND each
     // committed staged batch — must carry a dynamic partition-pruning
     // filter on `cell`, so serving scans only probed cells. A refactor

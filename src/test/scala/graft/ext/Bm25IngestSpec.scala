@@ -91,15 +91,22 @@ class Bm25IngestSpec extends AnyFunSuite with SparkSuite {
       sorted(reference(corpus)._1))
   }
 
-  /** A fresh one-file stream of `n` documents; `seed` varies ids and
-    * text, not the shape. */
-  private def oneFileStream(seed: Int, n: Int): DataFrame = {
-    val src = tmp(s"bm25_stream_$seed")
+  /** A one-file source of `n` documents; `seed` varies ids and text,
+    * not the shape. */
+  private def oneFileSource(seed: Int, n: Int): String = {
+    val src = tmp(s"bm25_stream_$seed").resolve("in").toString
     (0 until n).map(i => (seed * 100000L + i, s"w${i % 7} w${(i + seed) % 11} x$seed"))
-      .toDF("doc_id", "text").coalesce(1).write.parquet(src.resolve("in").toString)
-    spark.readStream.schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1").parquet(src.resolve("in").toString)
+      .toDF("doc_id", "text").coalesce(1).write.parquet(src)
+    src
   }
+
+  /** A fresh query's stream over `src`. */
+  private def streamOf(src: String): DataFrame =
+    spark.readStream.schema("doc_id BIGINT, text STRING")
+      .option("maxFilesPerTrigger", "1").parquet(src)
+
+  private def oneFileStream(seed: Int, n: Int): DataFrame =
+    streamOf(oneFileSource(seed, n))
 
   test("a second drain compiles nothing and stages a plain batch in at most 7 jobs") {
     val dir = tmp("bm25_compile").resolve("idx").toString
@@ -117,5 +124,20 @@ class Bm25IngestSpec extends AnyFunSuite with SparkSuite {
       "the second query re-planned on the caller's session must hit the code cache")
     assert(jobs.length <= 7, jobs)
     assert(Bm25.committedBatchDirs(spark, dir).length == 2)
+  }
+
+  test("a fresh query over an already staged file runs only the emptiness probe") {
+    val dir = tmp("bm25_redeliver").resolve("idx").toString
+    Bm25.ensureIndex(Seq((1L, "w1 w2"), (2L, "w3")).toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    val src = oneFileSource(3, 40)
+    def drain(): Long = StreamPipeline.bm25Ingest(spark, streamOf(src), dir, "doc_id", "text")
+    assert(drain() == 1)
+    val staged = Bm25.committedBatchDirs(spark, dir)
+    var n = 0L
+    val jobs = ListenerBusDrain.jobsOf(spark.sparkContext) { n = drain() }
+    assert(n == 1)
+    assert(jobs.length == 1, jobs)
+    assert(Bm25.committedBatchDirs(spark, dir) == staged)
   }
 }

@@ -192,7 +192,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     def mix(dir: String) = sortedRows(
       Attributes.mixed(spark, dir, union, col("clf_keep") && col("gopher_keep"))
         .select(col("doc_id"), col("n_words"), col("quality_q4"), col("lang")))
-    // staged ingest batches live under batches/<id>/ — count the store
+    // staged ingest batches live under batches/b_<key>/ — count the store
     def attrFiles(dir: String) = Attributes.attrsPaths(spark, dir)
       .map(Compaction.parquetFileCount(spark, _)).sum
     val cur = Compaction.compactAttrsToGeneration(spark, root)
@@ -242,7 +242,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
       Ivf.topKIndexed(spark, dir, queries, "vec_id", "embedding",
         k = 3, nProbe = 2))
     val before = probe(held)
-    // ingest STAGES batches under batches/<id>/ — a reader folds only
+    // ingest STAGES batches under batches/b_<key>/ — a reader folds only
     // committed ones, so deleting a marker must hide that batch and
     // restoring it must bring the rows back (the torn-batch guard)
     val batches = Ivf.committedBatchDirs(spark, held)
@@ -291,7 +291,9 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
   test("pruneBandStore on a store built without tsCol fails with intent") {
     import spark.implicits._
     val dir = tmpDir("notscol") + "/bands"
-    Seq((1L, "x", 0)).toDF("id", "key", "band").write.parquet(dir)
+    StagedBatches.stage(spark, dir) { bd =>
+      Seq((1L, "x", 0)).toDF("id", "key", "band").write.parquet(s"$bd/bands")
+    }
     val e = intercept[RuntimeException](
       Compaction.pruneBandStore(spark, dir, minTs = 0L))
     assert(e.getMessage.contains("built without retention"))

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import scala.jdk.CollectionConverters._
 
 /** Streaming behaviors the batch oracle can't check: incremental
   * micro-batches through the file source, watermark-gated append
@@ -44,8 +45,12 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val e = expected.orderBy("window_start_us", "event_type").collect().map(_.toString)
     assert(a.nonEmpty)
     assert(a.sameElements(e))
-    // partitioned sink: one directory per event_type
-    assert(out.listFiles().exists(f => f.isDirectory && f.getName.startsWith("event_type=")))
+    // partitioned sink: one batch_id dir per micro-batch, one
+    // event_type dir per type inside it
+    val batchDirs = out.listFiles().filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
+    assert(batchDirs.nonEmpty)
+    assert(batchDirs.exists(_.listFiles().exists(f =>
+      f.isDirectory && f.getName.startsWith("event_type="))))
   }
 
   test("exactly-once sink: a replayed micro-batch rewrites, not duplicates") {
@@ -64,19 +69,35 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(spark.read.parquet(out.getAbsolutePath).count() == 4)
   }
 
-  test("exactly-once streamed run equals the append-sink run") {
+  test("stateParts sizes the stream's own session; a concurrent query keeps the caller's width") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val sf = "/root/testdata/sf0.001"
-    def agg = StreamPipeline.windowedCounts(
-      StreamPipeline.readEvents(spark, sf), watermark = Some("30 minutes"))
-    val once = StreamPipeline.runAppendToDirExactlyOnce(spark, agg,
-        tmpDir().getAbsolutePath, Seq("event_type"))
-      .select("window_start_us", "event_type", "n", "total_value")
-      .orderBy("window_start_us", "event_type").collect().map(_.toString)
-    val append = StreamPipeline.runAppendToDir(spark, agg,
-        tmpDir().getAbsolutePath, Seq("event_type"))
-      .select("window_start_us", "event_type", "n", "total_value")
-      .orderBy("window_start_us", "event_type").collect().map(_.toString)
-    assert(once.nonEmpty && once.sameElements(append))
+    val own = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(own != 8)
+    // a second thread plans a shuffle while the stream starts and runs
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    @volatile var done = false
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val planner = new Thread(() => try while (!done) {
+      val plan = spark.range(100).groupBy(col("id") % 3).count()
+        .queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }
+      plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+        .foreach(widths.add)
+    } catch { case e: Throwable => errors.add(e); () })
+    planner.start()
+    val out = try StreamPipeline.runAppendToDir(spark,
+      StreamPipeline.windowedCounts(
+        StreamPipeline.readEvents(spark, sf), watermark = Some("30 minutes")),
+      tmpDir().getAbsolutePath, Seq("event_type"), stateParts = Some(8))
+    finally { done = true; planner.join() }
+    assert(out.count() > 0)
+    assert(errors.isEmpty, errors)
+    assert(!widths.isEmpty)
+    assert(widths.asScala.toSet == Set(own))
   }
 
   test("file source delivers files incrementally (ListFile state analogue)") {
@@ -459,7 +480,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val nBatches = StreamPipeline.bm25Ingest(spark, stream, idxDir,
       "doc_id", "text")
     assert(nBatches >= 2, s"expected >= 2 micro-batches, saw $nBatches")
-    // each batch stages under batches/<id>/ and commits atomically;
+    // each batch stages under batches/b_<key>/ and commits atomically;
     // the SERVING fold over base + committed batches — column sums,
     // per-token sums — sees every streamed doc: n_docs and total
     // length both exactly double (copies are verbatim)
