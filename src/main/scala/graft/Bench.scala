@@ -118,7 +118,7 @@ object Bench {
     "q_semdedup_dist", "q_extract_heavy",
     // round-19 additions
     "q_stream_semdedup",
-    // round-20 addition: the cold-build rung for the ArtifactDir
+    // round-20 addition: the cold-build rung for the build-once
     // stores — the only place the bench times the store BUILD path
     // (serve queries ensure-probe a content-keyed store that survives
     // across iterations AND runs), so §6 writer-sizing wins/regressions

@@ -22,17 +22,19 @@ import org.apache.spark.sql.functions._
   * relation is ~5 columns × |corpus| rows, sorted by doc_id for
   * row-group pruning on id-range probes.
   *
-  * Build-once mechanics are the [[Bm25.ensureIndex]] pattern:
-  * content-signature-keyed directory, `_BUILT` guard, same-corpus
-  * sibling GC, same SINGLE-WRITER assumption (see that scaladoc).
+  * Build-once mechanics are the [[Bm25.indexFor]] pattern: one
+  * generation of the corpus's build-once store per corpus content
+  * ([[attributesFor]], [[spansFor]]).
   */
 object Attributes {
 
-  /** Deterministic attributes location: corpus path + content
-    * signature (a regenerated corpus keys to a NEW dir). */
-  def attrDirFor(corpusDir: String,
-                 root: String = sys.props("java.io.tmpdir")): String =
-    s"$root/${Ivf.indexPrefix("graft_attrs_v1", corpusDir)}_${Ivf.md5hex(Ivf.contentSig(corpusDir), 8)}"
+  /** The attributes of `docs` (doc_id, text), the corpus at
+    * `corpusDir`, served from their build-once store
+    * ([[GenerationStore.ensureForCorpus]]). Returns the generation dir
+    * to serve. */
+  def attributesFor(docs: DataFrame, corpusDir: String): String =
+    GenerationStore.ensureForCorpus(docs.sparkSession, "graft_attrs_v1",
+      corpusDir)(ensureAttributes(docs, _))
 
   /** One tagging pass over (doc_id, text): every tagger's signal in a
     * staged projection (token arrays materialize before their
@@ -58,15 +60,11 @@ object Attributes {
       (col("__sw") > lit(LinearGate.Threshold) * col("__nf")).as("clf_keep"))
   }
 
-  /** Persist the attributes relation; `_BUILT`-guarded no-op when it
-    * already exists. Single-writer (see [[ArtifactDir]]). */
+  /** Write the attributes relation into `dir`. */
   def ensureAttributes(docs: DataFrame, dir: String): Unit =
-    ArtifactDir.ensure(docs.sparkSession, dir,
-      "^(graft_attrs_v1_[0-9a-f]+_).*".r) {
-      tagFrame(docs)
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite").parquet(s"$dir/attrs")
-    }
+    tagFrame(docs)
+      .sortWithinPartitions(col("doc_id"))
+      .write.mode("overwrite").parquet(s"$dir/attrs")
 
   /** The attrs relation's read paths: base build + every COMMITTED
     * staged ingest batch ([[StagedBatches]]). */
@@ -141,16 +139,20 @@ object Attributes {
 
   /** Span-store version — part of the persisted-relation contract: bump
     * whenever the TAGGER SET or span schema changes, or an existing
-    * `_BUILT`-guarded store silently serves rows the current taggers
-    * would no longer produce (v1 → v2: the pii_email tagger joined;
+    * store silently serves rows the current taggers would no longer
+    * produce (v1 → v2: the pii_email tagger joined;
     * v2 → v3: pii_phone + pii_ip). */
   val SpanStoreVersion = "graft_spans_v3"
 
-  /** Deterministic span-attributes location (corpus signature keyed,
-    * like [[attrDirFor]] — a regenerated corpus keys to a new dir). */
-  def spanDirFor(corpusDir: String,
-                 root: String = sys.props("java.io.tmpdir")): String =
-    s"$root/${Ivf.indexPrefix(SpanStoreVersion, corpusDir)}_${Ivf.md5hex(Ivf.contentSig(corpusDir), 8)}"
+  /** The span relation of `candidates` against `benchmark`, keyed on
+    * the corpus at `corpusDir` like [[attributesFor]] and served from
+    * its build-once store. Returns the generation dir to serve. */
+  def spansFor(candidates: DataFrame, benchmark: DataFrame,
+               corpusDir: String, n: Int): String =
+    GenerationStore.ensureForCorpus(candidates.sparkSession,
+        SpanStoreVersion, corpusDir) {
+      ensureSpanAttributes(candidates, benchmark, _, n = n)
+    }
 
   /** Character offset (0-based) where 1-based token `p` starts, under
     * the single-space join convention (`split(text, " ")` round-trips
@@ -290,28 +292,26 @@ object Attributes {
     spanTagFrameOn(tokenized(candidates, idCol, textCol),
       Dedup.hashedShingleSet(benchmark, textCol, n), n)
 
-  /** Persist the span relation, `_BUILT`-guarded ([[ArtifactDir]]).
-    * The tokenized frame is persisted around the (eager) write so the
-    * input text column — a full corpus scan, plus whatever per-row
-    * transform the caller stacked on it — evaluates once, not once per
-    * tagger pass (measured 4.9 s → see SCALE.md on the sf0.1 planted
-    * corpus), and released before returning. */
+  /** Write the span relation into `dir`. The tokenized frame is
+    * persisted around the (eager) write so the input text column — a
+    * full corpus scan, plus whatever per-row transform the caller
+    * stacked on it — evaluates once, not once per tagger pass
+    * (measured 4.9 s → see SCALE.md on the sf0.1 planted corpus), and
+    * released before returning. */
   def ensureSpanAttributes(candidates: DataFrame, benchmark: DataFrame,
                            dir: String, idCol: String = "doc_id",
-                           textCol: String = "text", n: Int = 3): Unit =
-    ArtifactDir.ensure(candidates.sparkSession, dir,
-      ("^(" + SpanStoreVersion + "_[0-9a-f]+_).*").r) {
-      val toked = tokenized(candidates, idCol, textCol).persist()
-      try
-        spanTagFrameOn(toked, Dedup.hashedShingleSet(benchmark, textCol, n), n)
-          // write width from source bytes (Compaction's file-size
-          // policy), not the session shuffle width
-          .repartitionByRange(Compaction.writerWidth(candidates),
-            col("doc_id"))
-          .sortWithinPartitions(col("doc_id"), col("tag"), col("start"))
-          .write.mode("overwrite").parquet(s"$dir/spans")
-      finally { toked.unpersist(); () }
-    }
+                           textCol: String = "text", n: Int = 3): Unit = {
+    val toked = tokenized(candidates, idCol, textCol).persist()
+    try
+      spanTagFrameOn(toked, Dedup.hashedShingleSet(benchmark, textCol, n), n)
+        // write width from source bytes (Compaction's file-size
+        // policy), not the session shuffle width
+        .repartitionByRange(Compaction.writerWidth(candidates),
+          col("doc_id"))
+        .sortWithinPartitions(col("doc_id"), col("tag"), col("start"))
+        .write.mode("overwrite").parquet(s"$dir/spans")
+    finally { toked.unpersist(); () }
+  }
 
   /** The span relation's read paths: base build + every COMMITTED
     * staged ingest batch ([[StagedBatches]]). */

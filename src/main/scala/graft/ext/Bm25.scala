@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * aggregation in every branch that consumed it (tf, df, the query
   * term set) — ~4 full corpus scans per invocation, which is the wrong
   * shape at 100 TB where the tokenize+aggregate pass IS the cost. Here
-  * the index persists once per corpus (content-signature keyed,
-  * `_BUILT`-guarded, stale siblings GC'd — all exactly as the IVF
-  * index) and every probe reads only:
+  * the index persists once per corpus content (a generation of its
+  * build-once store, [[indexFor]] — exactly as the IVF index) and every
+  * probe reads only:
   *  - `tf/`: (tok, doc_id, tf, dl) REPARTITIONED BY tok and sorted
   *    within partitions — each parquet file covers a token range, so a
   *    probe's pushed `tok IN (…)` filter prunes most files and row
@@ -57,32 +57,23 @@ object Bm25 {
   val StatsSchema: StructType = StructType(Seq(
     StructField("n_docs", LongType), StructField("tot_dl", LongType)))
 
-  /** Deterministic index location: corpus path + content signature
-    * (a regenerated corpus keys to a NEW dir, never a stale reuse). */
-  def indexDirFor(corpusDir: String,
-                  root: String = sys.props("java.io.tmpdir")): String =
-    s"$root/${Ivf.indexPrefix("graft_bm25_v1", corpusDir)}_${Ivf.md5hex(Ivf.contentSig(corpusDir), 8)}"
+  /** The index of `docs` (`doc_id`, `text`), the corpus at
+    * `corpusDir`, served from its build-once store
+    * ([[GenerationStore.ensureForCorpus]]). Returns the generation dir
+    * to serve. */
+  def indexFor(docs: DataFrame, corpusDir: String): String =
+    GenerationStore.ensureForCorpus(docs.sparkSession, "graft_bm25_v1",
+      corpusDir)(ensureIndex(docs, "doc_id", "text", _))
 
-  /** Build the inverted index on disk; `_BUILT`-guarded no-op when
-    * it already exists. One tokenize pass feeds both aggregates; df
-    * derives from the WRITTEN tf relation (no second corpus scan).
-    *
-    * SINGLE-WRITER assumption (like the IVF precedent): there is no
-    * lock between the `_BUILT` probe, the sibling GC, and the build —
-    * two drivers building concurrently can overwrite each other's
-    * partial output, and the GC can delete a stale-signature sibling
-    * out from under a reader still probing it. Correct for this
-    * harness (one driver owns the corpus) and for any deployment where
-    * index builds are serialized by an external scheduler; a
-    * multi-writer serving tier builds inside a
-    * [[GenerationStore.publish]] instead. */
+  /** Build the inverted index into `dir`. One tokenize pass feeds both
+    * aggregates; df derives from the WRITTEN tf relation (no second
+    * corpus scan). A plain writer: [[indexFor]] and the generation
+    * stores' publishes decide when it runs. */
   def ensureIndex(docs: DataFrame, idCol: String, textCol: String,
-                  dir: String): Unit =
-    ArtifactDir.ensure(docs.sparkSession, dir,
-      "^(graft_bm25_v1_[0-9a-f]+_).*".r) {
-      writeTf(docs, idCol, textCol, dir)
-      deriveFromTf(docs.sparkSession, dir)
-    }
+                  dir: String): Unit = {
+    writeTf(docs, idCol, textCol, dir)
+    deriveFromTf(docs.sparkSession, dir)
+  }
 
   /** The (tok, doc_id, tf, dl) posting rows of `docs`, in [[TfSchema]]
     * (`doc_id` cast to `long`), from one tokenize pass: `dl` is a

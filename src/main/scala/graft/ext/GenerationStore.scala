@@ -60,6 +60,12 @@ import org.apache.spark.sql.SparkSession
   * space: both generations sit on disk until [[gc]] collects the old
   * one.
   *
+  * Build-once artifacts (the BM25, trigram and IVF indexes, the
+  * attribute and span relations, the tokenizer models) are publishes
+  * as well: [[ensure]] serves the current generation while it was
+  * built from the same source, and publishes a new one otherwise —
+  * one protocol for every store, with no writer count to assume.
+  *
   * MANIFEST GROWTH IS BOUNDED BY GC, not by the publish count: [[gc]]
   * deletes manifest entries whose generation no longer exists (dead
   * pointers below the oldest survivor) alongside the aged generations
@@ -184,10 +190,10 @@ object GenerationStore {
 
   /** Publish a new generation: `build` materializes the data under the
     * provided fresh directory (a parquet write does); the commit is
-    * the atomic manifest rename. Returns the committed generation's
-    * data dir. Safe under concurrent publishers — seq collisions
-    * retry; generation names carry a random nonce so two builders
-    * never share a directory. */
+    * [[claimSeq]]'s exclusive create of the next manifest entry.
+    * Returns the committed generation's data dir. Safe under
+    * concurrent publishers — seq collisions retry; generation names
+    * carry a random nonce so two builders never share a directory. */
   def publish(spark: SparkSession, root: String)
              (build: String => Unit): String = {
     val nonce = java.util.UUID.randomUUID().toString.take(8)
@@ -200,9 +206,83 @@ object GenerationStore {
     genDir
   }
 
-  /** Commit an already-materialized generation name (exposed for
-    * multi-directory builds that stage their own layout). */
-  def commit(spark: SparkSession, root: String, gen: String): Unit = {
+  /** The age gate of the build-once stores: how long a superseded
+    * generation stays readable. [[ensure]] collects with it, and so do
+    * the store queries and stream maintainers. */
+  val MinAgeMs: Long = 3600L * 1000
+
+  /** Serve the build of `source` from the store at `root`: the current
+    * generation when its one-line `_SOURCE` file equals `source`, else
+    * a new generation [[publish]]ed from `build` (which writes into the
+    * dir it is handed) with `_SOURCE` written after it, before the
+    * commit. Collects aged generations ([[gc]], [[MinAgeMs]]) first.
+    * A build that dies leaves uncommitted debris the age gate clears,
+    * never a half-built generation; concurrent ensures each publish a
+    * complete one; a reader keeps the dir it resolved for at least the
+    * gate. Returns the dir to serve. */
+  def ensure(spark: SparkSession, root: String, source: String)
+            (build: String => Unit): String = {
+    gc(spark, root, MinAgeMs)
+    currentGenDir(spark, root).filter(sourceOf(spark, _).contains(source))
+      .getOrElse(publish(spark, root) { dir =>
+        build(dir)
+        val (fs, p) = fsFor(spark, s"$dir/$SourceFile")
+        val out = fs.create(p, true)
+        try out.write(source.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      })
+  }
+
+  private val SourceFile = "_SOURCE"
+
+  private def sourceOf(spark: SparkSession, genDir: String): Option[String] = {
+    val (fs, p) = fsFor(spark, s"$genDir/$SourceFile")
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    }
+  }
+
+  /** [[ensure]] for the build-once store of `family` (a name carrying
+    * the format version and every build parameter) over the corpus at
+    * `corpusDir` — the one place the content-keyed stores are keyed.
+    * The root is `<java.io.tmpdir>/<family>_<md5(corpus path)>`; the
+    * source is the md5 of [[contentSig]], so a corpus regenerated at
+    * the same path publishes a new generation instead of serving the
+    * stale build. */
+  private[ext] def ensureForCorpus(spark: SparkSession, family: String,
+                                   corpusDir: String)
+                                  (build: String => Unit): String =
+    ensure(spark,
+      s"${sys.props("java.io.tmpdir")}/${family}_${md5hex(corpusDir, 6)}",
+      md5hex(contentSig(spark, corpusDir), 16))(build)
+
+  private def md5hex(s: String, nBytes: Int): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8"))
+      .take(nBytes).map("%02x".format(_)).mkString
+
+  /** The corpus's content signature: every file under `corpusDir`,
+    * listed RECURSIVELY (nested part files rewritten in place must
+    * change it), with its length and mtime. One driver-side metadata
+    * listing, no data read. */
+  private def contentSig(spark: SparkSession, corpusDir: String): String = {
+    val (fs, p) = fsFor(spark, corpusDir)
+    if (fs.exists(p)) {
+      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val s = it.next()
+        buf += s"${s.getPath}:${s.getLen}:${s.getModificationTime}"
+      }
+      buf.sorted.mkString("|")
+    } else ""
+  }
+
+  /** Commit an already-materialized generation name. */
+  private[ext] def commit(spark: SparkSession, root: String, gen: String): Unit = {
     val (fs, _) = fsFor(spark, root)
     val genPath = new org.apache.hadoop.fs.Path(s"${generationsDir(root)}/$gen")
     // a publish whose generation was GC'd mid-build (or that never

@@ -224,81 +224,41 @@ object Ivf {
     PqModel(books)
   }
 
-  private[ext] def md5hex(s: String, nBytes: Int): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-      .take(nBytes).map("%02x".format(_)).mkString
+  /** The float index of `emb` (`vec_id`, `embedding`), the corpus at
+    * `corpusDir`, served from its build-once store
+    * ([[GenerationStore.ensureForCorpus]]; k and iters join the key).
+    * Returns the generation dir to serve. */
+  def indexFor(emb: DataFrame, corpusDir: String, k: Int, iters: Int): String =
+    GenerationStore.ensureForCorpus(emb.sparkSession,
+        s"graft_ivf_v1_k${k}_i$iters", corpusDir) {
+      buildIndex(emb, "vec_id", "embedding", _, k, iters)
+    }
 
-  /** Session Hadoop config when available (s3a credentials etc. live
-    * there), else a default — index-dir resolution must see the same
-    * filesystems the session does. */
-  private def hadoopConf(): org.apache.hadoop.conf.Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+  /** [[indexFor]] for the int8-quantized inverted file. */
+  def quantizedIndexFor(emb: DataFrame, corpusDir: String, k: Int,
+                        iters: Int): String =
+    GenerationStore.ensureForCorpus(emb.sparkSession,
+        s"graft_ivfq8_v1_k${k}_i$iters", corpusDir) {
+      buildQuantizedIndex(emb, "vec_id", "embedding", _, k, iters)
+    }
 
-  /** The per-corpus-PATH name prefix every index of `family` for
-    * `corpusDir` shares regardless of content signature or parameters —
-    * the GC key: [[buildIndex]] deletes stale same-prefix siblings
-    * (indexes of earlier generations of the same corpus, unreachable
-    * forever once the content signature changed). The float and
-    * quantized indexes use DIFFERENT families, so neither build ever
-    * garbage-collects the other's live index. */
-  private[ext] def indexPrefix(family: String, corpusDir: String): String =
-    s"${family}_${md5hex(corpusDir, 6)}"
-
-  private[ext] def indexPrefixFor(corpusDir: String): String =
-    indexPrefix("graft_ivf_v1", corpusDir)
-
-  private[ext] def contentSig(corpusDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = p.getFileSystem(hadoopConf())
-    if (fs.exists(p)) {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(p, true) // recursive
-      while (it.hasNext) {
-        val s = it.next()
-        buf += s"${s.getPath}:${s.getLen}:${s.getModificationTime}"
-      }
-      buf.sorted.mkString("|")
-    } else ""
-  }
-
-  /** Deterministic on-disk location for a corpus's inverted file —
-    * keyed by corpus path + CONTENT signature (RECURSIVE file listing:
-    * paths, lengths, mtimes — nested part files rewritten in place must
-    * change the signature even when top-level entries don't churn) +
-    * index parameters (+ a format version so a layout change
-    * invalidates old indexes instead of misreading them). The content
-    * part matters: a corpus regenerated at the same path must key to a
-    * NEW directory, not silently reuse the stale index built from the
-    * old data. One driver-side metadata listing, no data read. */
-  def indexDirFor(corpusDir: String, k: Int, iters: Int,
-                  root: String = sys.props("java.io.tmpdir")): String =
-    s"$root/${indexPrefixFor(corpusDir)}_${md5hex(contentSig(corpusDir), 8)}_k${k}_i$iters"
-
-  /** [[indexDirFor]] for the int8-quantized inverted file (its own
-    * family name, so float/quantized indexes of one corpus coexist). */
-  def quantizedIndexDirFor(corpusDir: String, k: Int, iters: Int,
-                           root: String = sys.props("java.io.tmpdir")): String =
-    s"$root/${indexPrefix("graft_ivfq8_v1", corpusDir)}_${md5hex(contentSig(corpusDir), 8)}_k${k}_i$iters"
-
-  /** [[indexDirFor]] for the product-quantized inverted file — m and
-    * ks join the key because the code layout changes with them. */
-  def pqIndexDirFor(corpusDir: String, k: Int, iters: Int,
-                    m: Int = 8, ks: Int = 16,
-                    root: String = sys.props("java.io.tmpdir")): String =
-    s"$root/${indexPrefix("graft_ivfpq_v1", corpusDir)}_${md5hex(contentSig(corpusDir), 8)}_k${k}_i${iters}_m${m}_ks$ks"
+  /** [[indexFor]] for the product-quantized inverted file — m and ks
+    * join the key because the code layout changes with them. */
+  def pqIndexFor(emb: DataFrame, corpusDir: String, k: Int, iters: Int,
+                 m: Int = 8, ks: Int = 16): String =
+    GenerationStore.ensureForCorpus(emb.sparkSession,
+        s"graft_ivfpq_v1_k${k}_i${iters}_m${m}_ks$ks", corpusDir) {
+      buildPqIndex(emb, "vec_id", "embedding", _, k, iters, m, ks)
+    }
 
   /** Train-once / query-many: build the inverted file ON DISK — the
     * centroid table plus the corpus re-written with `cell` as a
     * PARTITION column — so queries reuse the model and prune to their
     * probed cells AT THE SCAN (partition pruning / DPP) instead of
-    * retraining and re-assigning per invocation. Idempotent: keyed on
-    * the `_BUILT` marker, a second build is a no-op — this is
-    * the once-per-corpus step, everything per-query lives in
-    * [[topKIndexed]]. The 100 TB shape: the rewrite is one narrow pass
-    * over (id, vec), and each of the k cell directories is written by
+    * retraining and re-assigning per invocation. A plain writer into
+    * `dir`: [[indexFor]] runs it once per corpus content, everything
+    * per-query lives in [[topKIndexed]]. The 100 TB shape: the rewrite
+    * is one narrow pass over (id, vec), and each of the k cell directories is written by
     * the tasks that hold its rows. */
   def buildIndex(emb: DataFrame, idCol: String, vecCol: String, dir: String,
                  k: Int = 16, iters: Int = 3, sampleTarget: Int = 4096): Unit =
@@ -356,23 +316,10 @@ object Ivf {
         .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
     }
 
-  /** Shared train-once skeleton: _BUILT idempotence guard, stale-
-    * sibling GC (within the index FAMILY the dir name carries — float
-    * and quantized prefixes differ, so they never GC each other),
-    * deterministic training, centroid table write; `writeCorpus`
-    * receives the cell-assigned prepared corpus (nid, nvec, nn2, cell)
-    * and owns the partitioned layout. */
+  /** Shared train-once body: deterministic training, centroid table
+    * write; `writeCorpus` receives the cell-assigned prepared corpus
+    * (nid, nvec, nn2, cell) and owns the partitioned layout. */
   private def buildIndexWith(emb: DataFrame, idCol: String, vecCol: String,
-                             dir: String, k: Int, iters: Int, sampleTarget: Int)(
-      writeCorpus: (DataFrame, Model, Array[Array[Double]]) => Unit): Unit = {
-    val spark = emb.sparkSession
-    ArtifactDir.ensure(spark, dir,
-      "^((?:graft_ivf_v1|graft_ivfq8_v1|graft_ivfpq_v1)_[0-9a-f]+_).*".r) {
-      buildIndexBody(emb, idCol, vecCol, dir, k, iters, sampleTarget)(writeCorpus)
-    }
-  }
-
-  private def buildIndexBody(emb: DataFrame, idCol: String, vecCol: String,
                              dir: String, k: Int, iters: Int, sampleTarget: Int)(
       writeCorpus: (DataFrame, Model, Array[Array[Double]]) => Unit): Unit = {
     val spark = emb.sparkSession
@@ -399,15 +346,6 @@ object Ivf {
         .repartition(Compaction.writerWidth(emb), col("cell")),
       model, sample)
   }
-
-  /** Committed staged-batch dirs under `dir/batches` — the
-    * [[Bm25.committedBatchDirs]] contract on the ANN tier: ingest
-    * stages each batch under `batches/b_<key>/corpus` and commits it
-    * with ONE exclusive `_COMMITTED` file create, so a reader folds a
-    * batch entirely or not at all. Driver-side listing, bounded by
-    * batches since the last compaction. */
-  def committedBatchDirs(spark: SparkSession, dir: String): Seq[String] =
-    StagedBatches.committedDirs(spark, dir)
 
   /** The corpus of one listing — base build + every COMMITTED staged
     * batch, `snap.paths("corpus")` — as one union, for FOLDS

@@ -270,36 +270,31 @@ object Unigram {
   }
 
   /** Model-store version — bump when training constants or the model
-    * schema change (a `_BUILT`-guarded store must never silently
-    * serve a model the current trainer would not produce). */
+    * schema change (a store must never silently serve a model the
+    * current trainer would not produce). */
   val ModelStoreVersion = "graft_unigram_v1"
 
-  /** Deterministic model location: vocab cap + corpus path + content
-    * signature. The cap sits INSIDE the GC'd family prefix (before the
-    * path hash), so models differing only in cap are DIFFERENT
-    * families that coexist — the stale-sibling GC clears only old
-    * SIGNATURES of the same (version, cap, corpus) family, never a
-    * live sibling cap (the Ivf precedent: graft_ivf_v1 vs
-    * graft_ivfq8_v1 coexist the same way). */
-  def modelDirFor(corpusDir: String, vocabSize: Int = 0,
-                  root: String = sys.props("java.io.tmpdir")): String =
-    s"$root/${Ivf.indexPrefix(s"${ModelStoreVersion}c$vocabSize", corpusDir)}" +
-      s"_${Ivf.md5hex(Ivf.contentSig(corpusDir), 8)}"
+  /** The model trained on `docs`' `text`, the corpus at `corpusDir`,
+    * served from its build-once store
+    * ([[GenerationStore.ensureForCorpus]]; the vocab cap joins the key,
+    * so models differing only in cap coexist). Returns the generation
+    * dir to serve. */
+  def modelFor(docs: DataFrame, corpusDir: String, vocabSize: Int = 0): String =
+    GenerationStore.ensureForCorpus(docs.sparkSession,
+        s"${ModelStoreVersion}c$vocabSize", corpusDir) {
+      ensureModel(docs, "text", _, vocabSize)
+    }
 
-  /** Train once and persist the (piece, cnt) model table —
-    * `_BUILT`-guarded no-op when it already exists (the
-    * [[Bm25.ensureIndex]] ArtifactDir discipline, single-writer). The
+  /** Train and write the (piece, cnt) model table into `dir`. The
     * artifact IS the tokenizer a pipeline ships: |vocab| rows, loaded
     * by [[wordPieceRelationFrom]] in any later session/run. */
   def ensureModel(docs: DataFrame, textCol: String, dir: String,
-                  vocabSize: Int = 0): Unit =
-    ArtifactDir.ensure(docs.sparkSession, dir,
-      ("^(" + ModelStoreVersion + "c[0-9]+_[0-9a-f]+_).*").r) {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      trainModel(docs, textCol, vocabSize).toDF("piece", "cnt")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
-    }
+                  vocabSize: Int = 0): Unit = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    trainModel(docs, textCol, vocabSize).toDF("piece", "cnt")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
+  }
 
   /** Freeze an already-trained (piece, count) model against `df`'s
     * distinct words — the re-import path of the [[TokenizerExport]]

@@ -245,28 +245,22 @@ object WordPiece {
     * discipline). */
   val ModelStoreVersion = "graft_wordpiece_v1"
 
-  /** Deterministic model location keyed by corpus path + content
-    * signature — same family/GC semantics as [[Unigram.modelDirFor]]. */
-  def modelDirFor(corpusDir: String,
-                  root: String = sys.props("java.io.tmpdir")): String =
-    s"$root/${Ivf.indexPrefix(ModelStoreVersion, corpusDir)}" +
-      s"_${Ivf.md5hex(Ivf.contentSig(corpusDir), 8)}"
+  /** The model trained on `docs`' `text`, the corpus at `corpusDir`,
+    * served from its build-once store (the [[Unigram.modelFor]]
+    * keying). Returns the generation dir to serve. */
+  def modelFor(docs: DataFrame, corpusDir: String): String =
+    GenerationStore.ensureForCorpus(docs.sparkSession, ModelStoreVersion,
+      corpusDir)(ensureModel(docs, "text", _))
 
-  /** Train once and persist the (surface, cont) model table —
-    * `_BUILT`-guarded no-op when present (single-writer ArtifactDir
-    * discipline). */
-  def ensureModel(docs: DataFrame, textCol: String, dir: String): Unit =
-    ArtifactDir.ensure(docs.sparkSession, dir,
-      // capture version + corpus-path hash: stale-signature GC clears
-      // only old SIGNATURES of this corpus family (the Unigram rule)
-      ("^(" + ModelStoreVersion + "_[0-9a-f]+_).*").r) {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val words = Bpe.wordCounts(docs, textCol).persist()
-      try selectVocab(words).toDF("surface", "cont")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
-      finally { words.unpersist(); () }
-    }
+  /** Train and write the (surface, cont) model table into `dir`. */
+  def ensureModel(docs: DataFrame, textCol: String, dir: String): Unit = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val words = Bpe.wordCounts(docs, textCol).persist()
+    try selectVocab(words).toDF("surface", "cont")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
+    finally { words.unpersist(); () }
+  }
 
   /** Load a persisted model and freeze it against `df`'s distinct
     * words — encode-forever across sessions (the

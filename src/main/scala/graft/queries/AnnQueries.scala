@@ -55,8 +55,8 @@ object AnnQueries {
         .orderBy(col("qid"))
     }),
 
-    // IVF probes its persisted index (train-once: buildIndex is a
-    // _SUCCESS-guarded no-op after the first call; topKIndexed has no
+    // IVF probes its persisted index (train-once: indexFor serves the
+    // corpus content's existing generation; topKIndexed has no
     // count/collect — the scan prunes to probed cells via DPP). The
     // uniform-random corpus is IVF's adversarial case (true neighbors
     // scatter across cells: one query's 5-NN set plateaus at 3/5 even
@@ -65,8 +65,7 @@ object AnnQueries {
     "q_knn_ivf" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val queries = emb.filter(col("vec_id") < 10)
-      val idxDir = graft.ext.Ivf.indexDirFor(d, k = 16, iters = 2)
-      graft.ext.Ivf.buildIndex(emb, "vec_id", "embedding", idxDir, k = 16, iters = 2)
+      val idxDir = graft.ext.Ivf.indexFor(emb, d, k = 16, iters = 2)
       val ann = graft.ext.Ivf.topKIndexed(s, idxDir, queries,
         "vec_id", "embedding", k = 5, nProbe = 8)
       val brute = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, k = 5)
@@ -90,8 +89,7 @@ object AnnQueries {
     "q_knn_ivf_planted" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val queries = plantedIvfQueries(emb)
-      val idxDir = graft.ext.Ivf.indexDirFor(d, k = 16, iters = 2)
-      graft.ext.Ivf.buildIndex(emb, "vec_id", "embedding", idxDir, k = 16, iters = 2)
+      val idxDir = graft.ext.Ivf.indexFor(emb, d, k = 16, iters = 2)
       graft.ext.Ivf.topKIndexed(s, idxDir, queries,
           "vec_id", "embedding", k = 1, nProbe = 4)
         .filter(col("rank") === 1)
@@ -109,9 +107,7 @@ object AnnQueries {
     "q_knn_ivf_quantized" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val queries = plantedIvfQueries(emb)
-      val idxDir = graft.ext.Ivf.quantizedIndexDirFor(d, k = 16, iters = 2)
-      graft.ext.Ivf.buildQuantizedIndex(emb, "vec_id", "embedding", idxDir,
-        k = 16, iters = 2)
+      val idxDir = graft.ext.Ivf.quantizedIndexFor(emb, d, k = 16, iters = 2)
       graft.ext.Ivf.topKQuantized(s, idxDir, emb, queries,
           "vec_id", "embedding", k = 1, nProbe = 4, rerank = 4)
         .filter(col("rank") === 1)
@@ -134,9 +130,7 @@ object AnnQueries {
     "q_knn_ivf_pq" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val queries = plantedIvfQueries(emb)
-      val idxDir = graft.ext.Ivf.pqIndexDirFor(d, k = 16, iters = 2)
-      graft.ext.Ivf.buildPqIndex(emb, "vec_id", "embedding", idxDir,
-        k = 16, iters = 2)
+      val idxDir = graft.ext.Ivf.pqIndexFor(emb, d, k = 16, iters = 2)
       graft.ext.Ivf.topKPq(s, idxDir, emb, queries,
           "vec_id", "embedding", k = 1, nProbe = 4, rerank = 4)
         .filter(col("rank") === 1)

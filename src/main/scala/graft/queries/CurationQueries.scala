@@ -72,8 +72,7 @@ object CurationQueries {
     // classifier AND the Gopher structural gate.
     "q_dolma_mix" -> ((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val dir = graft.ext.Attributes.attrDirFor(d)
-      graft.ext.Attributes.ensureAttributes(docs, dir)
+      val dir = graft.ext.Attributes.attributesFor(docs, d)
       graft.ext.Attributes
         .mixed(s, dir, docs, col("clf_keep") && col("gopher_keep"))
         .select(col("doc_id"), col("n_words"), col("quality_q4"),
@@ -87,8 +86,7 @@ object CurationQueries {
     // (MixPlanSpec pins that this plan contains no tagger lambdas).
     "q_dolma_remix" -> ((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val dir = graft.ext.Attributes.attrDirFor(d)
-      graft.ext.Attributes.ensureAttributes(docs, dir)
+      val dir = graft.ext.Attributes.attributesFor(docs, d)
       graft.ext.Attributes.mixed(s, dir, docs,
         col("quality_q4") >= 5000L && col("n_words") >= 30 && !col("clf_keep"))
         .select(col("doc_id"), col("n_words"), col("quality_q4"),
@@ -551,10 +549,9 @@ object CurationQueries {
     "q_span_attrs" -> ((s, d) => {
       val all = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), spanPlantedCol.as("text"))
-      val dir = graft.ext.Attributes.spanDirFor(d)
-      graft.ext.Attributes.ensureSpanAttributes(
+      val dir = graft.ext.Attributes.spansFor(
         all.filter(col("source") =!= "src0"),
-        all.filter(col("source") === "src0"), dir, n = 3)
+        all.filter(col("source") === "src0"), d, n = 3)
       graft.ext.Attributes.readSpans(s, dir)
         .orderBy(col("doc_id"), col("tag"), col("start"))
     }),
@@ -569,9 +566,8 @@ object CurationQueries {
       val all = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), spanPlantedCol.as("text"))
       val cand = all.filter(col("source") =!= "src0")
-      val dir = graft.ext.Attributes.spanDirFor(d)
-      graft.ext.Attributes.ensureSpanAttributes(
-        cand, all.filter(col("source") === "src0"), dir, n = 3)
+      val dir = graft.ext.Attributes.spansFor(
+        cand, all.filter(col("source") === "src0"), d, n = 3)
       val spans = graft.ext.Attributes.readSpans(s, dir)
         .filter(col("tag").like("pii_%") || col("score") >= 6.0)
       graft.ext.Attributes.exciseSpans(cand, spans)

@@ -267,13 +267,7 @@ object PipelineQueries {
     // recovered from the directory layout — every doc must land in
     // exactly its sentiment's partition and survive the cycle.
     "q_route_sink_roundtrip" -> ((s, d) => {
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_routes_${Integer.toHexString(d.hashCode)}")
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-        f.delete(); ()
-      }
-      deleteRec(dir.toFile)
+      val dir = Scratch.freshScratchDir(d, "routes")
       val records = docsWithSentiment(s, d)
         .select(col("doc_id"), col("lang"), col("sentiment"))
       graft.pipeline.Sinks.putFilePartitioned(records, dir.toString, "sentiment")

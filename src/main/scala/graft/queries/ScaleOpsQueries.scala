@@ -472,14 +472,13 @@ object ScaleOpsQueries {
     }),
 
     // the PERSISTED tokenizer artifact: train-once to a corpus-
-    // signature-keyed model store (the Bm25/IVF ArtifactDir
+    // signature-keyed model store (the Bm25/IVF build-once store
     // discipline), then encode from the LOADED model — the output must
     // hash-equal q_unigram_tokenize's in-memory training, which only a
     // lossless persist/load round trip can produce
     "q_unigram_store" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = graft.ext.Unigram.modelDirFor(d)
-      graft.ext.Unigram.ensureModel(docs, "text", dir)
+      val dir = graft.ext.Unigram.modelFor(docs, d)
       val (wids, _) = graft.ext.Unigram.wordPieceRelationFrom(
         s, dir, docs, "text")
       tokenIdSummary(
@@ -599,8 +598,7 @@ object ScaleOpsQueries {
     // q_unigram_store gate on the third family)
     "q_wordpiece_store" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = graft.ext.WordPiece.modelDirFor(d)
-      graft.ext.WordPiece.ensureModel(docs, "text", dir)
+      val dir = graft.ext.WordPiece.modelFor(docs, d)
       val (wids, _) = graft.ext.WordPiece.wordPieceRelationFrom(
         s, dir, docs, "text")
       tokenIdSummary(

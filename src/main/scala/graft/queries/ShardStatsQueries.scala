@@ -296,13 +296,7 @@ object ShardStatsQueries {
     // through JSON escaping (md5-pinned). Scratch shard written by
     // Spark itself (no driver materialization).
     "q_jsonl_ingest" -> ((s, d) => {
-      val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_jsonl_${Integer.toHexString(d.hashCode)}")
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-        f.delete(); ()
-      }
-      deleteRec(p.toFile)
+      val p = Scratch.freshScratchDir(d, "jsonl")
       Tables.documents(s, d)
         .select(col("doc_id"),
           to_json(struct(col("doc_id"),
@@ -338,13 +332,7 @@ object ShardStatsQueries {
     // keeps its parsed id. Probed semantics: non-numeric id → doc_id
     // NULL + _bad set; token underflow → text NULL + _bad set.
     "q_csv_ingest" -> ((s, d) => {
-      val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_csv_${Integer.toHexString(d.hashCode)}")
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-        f.delete(); ()
-      }
-      deleteRec(p.toFile)
+      val p = Scratch.freshScratchDir(d, "csv")
       val aug = Tables.documents(s, d).select(col("doc_id"),
         when(col("doc_id") % 11 === 0,
           concat(coalesce(col("text"), lit("")), lit(" quoted \"part\" end")))

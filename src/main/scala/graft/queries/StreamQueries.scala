@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamPipeline
+import Scratch.{deleteRec, freshScratchDir, writeOnePart}
 
 /** Streaming-operator queries. q_stream_window runs through the REAL
   * Structured Streaming engine — file source → 30-min event-time
@@ -17,59 +18,6 @@ import graft.streaming.StreamPipeline
   */
 object StreamQueries {
 
-  /** Deterministic per-sf scratch path, WIPED — every streaming query
-    * that writes a sink or source dir funnels through this one wipe
-    * implementation (previously four divergent inline copies). Returns
-    * the path without recreating it; callers that need the directory
-    * to exist call createDirectories. */
-  private def freshScratchDir(d: String, suffix: String): java.nio.file.Path = {
-    val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_${suffix}_${Integer.toHexString(d.hashCode)}")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-      f.delete(); ()
-    }
-    deleteRec(p.toFile)
-    p
-  }
-
-  /** Write `df` as the single parquet file `name`.parquet inside
-    * `srcDir` — one file per planned micro-batch for the
-    * maxFilesPerTrigger=1 ingest harnesses. */
-  private def writeOnePart(srcDir: java.nio.file.Path, name: String,
-                           df: DataFrame): Unit = {
-    val build = srcDir.resolve(s"${name}_build")
-    df.coalesce(1).write.parquet(build.toString)
-    val part = Option(build.toFile.listFiles)
-      .getOrElse(Array.empty[java.io.File])
-      .find(x => x.getName.startsWith("part-") && x.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no part file written under $build"))
-    val target = srcDir.resolve(s"$name.parquet")
-    java.nio.file.Files.move(part.toPath, target)
-    // FileStreamSource orders files by modification time at MILLISECOND
-    // granularity: two files written back-to-back can land in the same
-    // millisecond, making which becomes micro-batch 0 nondeterministic
-    // (q_stream_pack's oracle pins batch 0 = the first-written file).
-    // Stamp each file one minute after the previous one in this dir so
-    // write order IS processing order, always. Recent timestamps keep
-    // the source's maxFileAge window comfortably satisfied.
-    val seq = Option(srcDir.toFile.listFiles)
-      .getOrElse(Array.empty[java.io.File])
-      .count(_.getName.endsWith(".parquet"))
-    // setLastModified returns false (rather than throwing) on
-    // filesystems that refuse mtime updates — there the stamping fix
-    // would silently no-op and batch-0 pinning would go flaky again, so
-    // a degraded filesystem must fail LOUDLY here instead
-    require(target.toFile.setLastModified(
-        System.currentTimeMillis() - 3600L * 1000 + seq * 60L * 1000),
-      s"cannot stamp mtime on $target — filesystem refuses setLastModified")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-      f.delete(); ()
-    }
-    deleteRec(build.toFile); ()
-  }
-
   /** Scratch dir holding `table`.parquet TWICE — verbatim (every row a
     * planted exact duplicate) or once verbatim + once through
     * `variant` (planted transformed duplicates) — the doubled-source
@@ -80,10 +28,6 @@ object StreamQueries {
   private def doubledSourceDir(s: SparkSession, d: String, table: String,
       suffix: String, variant: Option[DataFrame => DataFrame] = None): String = {
     val p = freshScratchDir(d, suffix)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-      f.delete(); ()
-    }
     java.nio.file.Files.createDirectories(p)
     val src = java.nio.file.Paths.get(d, s"$table.parquet")
     java.nio.file.Files.copy(src, p.resolve("a.parquet"))
@@ -700,7 +644,7 @@ object StreamQueries {
       val held = graft.ext.GenerationStore.currentGenDir(s, root)
         .getOrElse(sys.error(s"no committed generation under $root"))
       graft.ext.Compaction.compactBm25ToGeneration(s, root)
-      graft.ext.GenerationStore.gc(s, root, minAgeMs = 3600L * 1000)
+      graft.ext.GenerationStore.gc(s, root, graft.ext.GenerationStore.MinAgeMs)
       require(java.nio.file.Files.exists(java.nio.file.Paths.get(held)),
         "superseded generation must survive the GC age gate for its readers")
       val cur = graft.ext.GenerationStore.currentGenDir(s, root)
@@ -739,7 +683,7 @@ object StreamQueries {
       val held = graft.ext.GenerationStore.currentGenDir(s, root)
         .getOrElse(sys.error(s"no committed generation under $root"))
       val cur = graft.ext.Compaction.compactIvfToGeneration(s, root)
-      graft.ext.GenerationStore.gc(s, root, minAgeMs = 3600L * 1000)
+      graft.ext.GenerationStore.gc(s, root, graft.ext.GenerationStore.MinAgeMs)
       require(java.nio.file.Files.exists(java.nio.file.Paths.get(held)),
         "superseded generation must survive the GC age gate for its readers")
       require(cur != held, "compaction must publish a NEW generation")
@@ -781,7 +725,7 @@ object StreamQueries {
       val held = graft.ext.GenerationStore.currentGenDir(s, root)
         .getOrElse(sys.error(s"no committed generation under $root"))
       graft.ext.Compaction.compactSpansToGeneration(s, root)
-      graft.ext.GenerationStore.gc(s, root, minAgeMs = 3600L * 1000)
+      graft.ext.GenerationStore.gc(s, root, graft.ext.GenerationStore.MinAgeMs)
       require(java.nio.file.Files.exists(java.nio.file.Paths.get(held)),
         "superseded generation must survive the GC age gate for its readers")
       val cur = graft.ext.GenerationStore.currentGenDir(s, root)
@@ -812,7 +756,7 @@ object StreamQueries {
       val held = graft.ext.GenerationStore.currentGenDir(s, root)
         .getOrElse(sys.error(s"no committed generation under $root"))
       graft.ext.Compaction.compactAttrsToGeneration(s, root)
-      graft.ext.GenerationStore.gc(s, root, minAgeMs = 3600L * 1000)
+      graft.ext.GenerationStore.gc(s, root, graft.ext.GenerationStore.MinAgeMs)
       require(java.nio.file.Files.exists(java.nio.file.Paths.get(held)),
         "superseded generation must survive the GC age gate for its readers")
       val cur = graft.ext.GenerationStore.currentGenDir(s, root)
@@ -895,7 +839,7 @@ object StreamQueries {
       val held = graft.ext.GenerationStore.currentGenDir(s, root)
         .getOrElse(sys.error(s"no committed generation under $root"))
       graft.ext.Compaction.compactCmsToGeneration(s, root)
-      graft.ext.GenerationStore.gc(s, root, minAgeMs = 3600L * 1000)
+      graft.ext.GenerationStore.gc(s, root, graft.ext.GenerationStore.MinAgeMs)
       require(java.nio.file.Files.exists(java.nio.file.Paths.get(held)),
         "superseded generation must survive the GC age gate for its readers")
       val cur = graft.ext.GenerationStore.currentGenDir(s, root)
@@ -935,7 +879,7 @@ object StreamQueries {
       val held = graft.ext.GenerationStore.currentGenDir(s, root)
         .getOrElse(sys.error(s"no committed generation under $root"))
       graft.ext.Compaction.compactKmeansToGeneration(s, root)
-      graft.ext.GenerationStore.gc(s, root, minAgeMs = 3600L * 1000)
+      graft.ext.GenerationStore.gc(s, root, graft.ext.GenerationStore.MinAgeMs)
       require(java.nio.file.Files.exists(java.nio.file.Paths.get(held)),
         "superseded generation must survive the GC age gate for its readers")
       val cur = graft.ext.GenerationStore.currentGenDir(s, root)
@@ -997,21 +941,8 @@ object StreamQueries {
         graft.ext.CurationFilters.gopherPlanted)
       val p = freshScratchDir(d, "gopherstream")
       java.nio.file.Files.createDirectories(p)
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-        f.delete(); ()
-      }
-      Seq(0, 1).foreach { par =>
-        val build = p.resolve(s"build_$par")
-        in.filter(pmod(col("doc_id"), lit(2)) === par).coalesce(1)
-          .write.parquet(build.toString)
-        val part = Option(build.toFile.listFiles)
-          .getOrElse(Array.empty[java.io.File])
-          .find(x => x.getName.startsWith("part-") && x.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $build"))
-        java.nio.file.Files.move(part.toPath, p.resolve(s"$par.parquet"))
-        deleteRec(build.toFile)
-      }
+      Seq(0, 1).foreach(par => writeOnePart(p, par.toString,
+        in.filter(pmod(col("doc_id"), lit(2)) === par)))
       val stream = s.readStream.schema(in.schema)
         .option("maxFilesPerTrigger", "1").parquet(p.toString)
       val gated = graft.ext.CurationFilters.gopherFrame(stream, "text")
@@ -1208,21 +1139,8 @@ object StreamQueries {
       val docs = s.read.parquet(s"$d/documents.parquet")
       val p = freshScratchDir(d, "cdcstream")
       java.nio.file.Files.createDirectories(p)
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-        f.delete(); ()
-      }
-      Seq(0, 1).foreach { par =>
-        val build = p.resolve(s"build_$par")
-        docs.filter(col("doc_id") % 2 === par).coalesce(1)
-          .write.parquet(build.toString)
-        val part = Option(build.toFile.listFiles)
-          .getOrElse(Array.empty[java.io.File])
-          .find(x => x.getName.startsWith("part-") && x.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $build"))
-        java.nio.file.Files.move(part.toPath, p.resolve(s"$par.parquet"))
-        deleteRec(build.toFile)
-      }
+      Seq(0, 1).foreach(par => writeOnePart(p, par.toString,
+        docs.filter(col("doc_id") % 2 === par)))
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(p.toString)
       val chunks = graft.ext.Chunking.cdcChunks(stream, "doc_id", "text")
@@ -1341,22 +1259,9 @@ object StreamQueries {
       val docs = s.read.parquet(s"$d/documents.parquet")
       val p = freshScratchDir(d, "decon")
       java.nio.file.Files.createDirectories(p)
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-        f.delete(); ()
-      }
       val cand = docs.filter(col("source") =!= "src0")
-      Seq(0, 1).foreach { par =>
-        val build = p.resolve(s"build_$par")
-        cand.filter(col("doc_id") % 2 === par).coalesce(1)
-          .write.parquet(build.toString)
-        val part = Option(build.toFile.listFiles)
-          .getOrElse(Array.empty[java.io.File])
-          .find(x => x.getName.startsWith("part-") && x.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $build"))
-        java.nio.file.Files.move(part.toPath, p.resolve(s"$par.parquet"))
-        deleteRec(build.toFile)
-      }
+      Seq(0, 1).foreach(par => writeOnePart(p, par.toString,
+        cand.filter(col("doc_id") % 2 === par)))
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(p.toString)
       val screened = graft.ext.Contamination.screenStateless(

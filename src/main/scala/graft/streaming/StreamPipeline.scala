@@ -479,7 +479,7 @@ object StreamPipeline {
   def bm25IngestGen(spark: SparkSession, stream: DataFrame, root: String,
                     idCol: String, textCol: String,
                     autoCompactEvery: Int = 0,
-                    gcAgeMs: Long = 3600L * 1000): Long =
+                    gcAgeMs: Long = graft.ext.GenerationStore.MinAgeMs): Long =
     drainIntoGeneration(stream, root, autoCompactEvery, gcAgeMs,
         graft.ext.Compaction.compactBm25ToGeneration) { (batch, cur, key) =>
       graft.ext.Bm25.ingestIntoIndex(batch.sparkSession, cur, batch,
@@ -567,7 +567,7 @@ object StreamPipeline {
   def spanIngestGen(spark: SparkSession, stream: DataFrame, root: String,
                     benchmark: DataFrame, n: Int = 3,
                     autoCompactEvery: Int = 0,
-                    gcAgeMs: Long = 3600L * 1000): Long = {
+                    gcAgeMs: Long = graft.ext.GenerationStore.MinAgeMs): Long = {
     val benchGrams = graft.ext.Attributes.benchGramSet(benchmark, n = n).persist()
     try drainIntoGeneration(stream, root, autoCompactEvery, gcAgeMs,
         graft.ext.Compaction.compactSpansToGeneration) { (batch, cur, key) =>

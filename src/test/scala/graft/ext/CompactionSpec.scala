@@ -245,12 +245,12 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     // ingest STAGES batches under batches/b_<key>/ — a reader folds only
     // committed ones, so deleting a marker must hide that batch and
     // restoring it must bring the rows back (the torn-batch guard)
-    val batches = Ivf.committedBatchDirs(spark, held)
+    val batches = StagedBatches.committedDirs(spark, held)
     assert(batches.length == 2, s"expected 2 committed batches: $batches")
     val marker = new org.apache.hadoop.fs.Path(s"${batches.head}/_COMMITTED")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(marker, false)
-    assert(Ivf.committedBatchDirs(spark, held).length == 1)
+    assert(StagedBatches.committedDirs(spark, held).length == 1)
     assert(probe(held) != before, "an uncommitted batch must be invisible")
     fs.create(marker, false).close()
     assert(probe(held) == before)
@@ -260,7 +260,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     val filesBefore = Compaction.parquetFileCount(spark, held)
     val filesAfter = Compaction.parquetFileCount(spark, cur)
     assert(filesAfter < filesBefore, s"$filesAfter !< $filesBefore")
-    assert(Ivf.committedBatchDirs(spark, cur).isEmpty,
+    assert(StagedBatches.committedDirs(spark, cur).isEmpty,
       "the folded generation must carry no staged batches")
   }
 

@@ -147,9 +147,7 @@ class CurationFiltersSpec extends AnyFunSuite with SparkSuite {
     val d = "/root/testdata/sf0.001"
     val docs = graft.queries.Tables.documents(spark, d)
       .select(col("doc_id"), col("text"))
-    val dir = Attributes.attrDirFor(d)
-    Attributes.ensureAttributes(docs, dir)
-    Attributes.ensureAttributes(docs, dir) // idempotent: _SUCCESS guard
+    val dir = Attributes.attributesFor(docs, d)
     val mixed = Attributes.mixed(spark, dir, docs,
       col("quality_q4") >= 5000L)
     val plan = mixed.queryExecution.executedPlan.toString

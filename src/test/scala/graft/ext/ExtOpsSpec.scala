@@ -255,10 +255,8 @@ class ExtOpsSpec extends AnyFunSuite with SparkSuite {
 
   test("quantized IVF index is a fraction of the float index's bytes and serves exactly") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val fDir = Ivf.indexDirFor(sf, k = 16, iters = 2)
-    val qDir = Ivf.quantizedIndexDirFor(sf, k = 16, iters = 2)
-    Ivf.buildIndex(emb, "vec_id", "embedding", fDir, k = 16, iters = 2)
-    Ivf.buildQuantizedIndex(emb, "vec_id", "embedding", qDir, k = 16, iters = 2)
+    val fDir = Ivf.indexFor(emb, sf, k = 16, iters = 2)
+    val qDir = Ivf.quantizedIndexFor(emb, sf, k = 16, iters = 2)
     def corpusBytes(dir: String): Long = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/corpus")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -299,10 +297,8 @@ class ExtOpsSpec extends AnyFunSuite with SparkSuite {
 
   test("PQ index stores m-byte codes, ADC is in lockstep, serving stays exact") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val fDir = Ivf.indexDirFor(sf, k = 16, iters = 2)
-    val pDir = Ivf.pqIndexDirFor(sf, k = 16, iters = 2)
-    Ivf.buildIndex(emb, "vec_id", "embedding", fDir, k = 16, iters = 2)
-    Ivf.buildPqIndex(emb, "vec_id", "embedding", pDir, k = 16, iters = 2)
+    val fDir = Ivf.indexFor(emb, sf, k = 16, iters = 2)
+    val pDir = Ivf.pqIndexFor(emb, sf, k = 16, iters = 2)
     // the code column really is an m-byte BINARY word
     val corpus = spark.read.parquet(s"$pDir/corpus")
     assert(corpus.schema("codes").dataType ==
@@ -689,10 +685,6 @@ class ExtOpsSpec extends AnyFunSuite with SparkSuite {
     val queries = emb.filter(col("vec_id") < 10)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
     Ivf.buildIndex(emb, "vec_id", "embedding", dir, k = 16, iters = 2)
-    // idempotent: second build must be a no-op (train-once contract)
-    val corpusFiles = new java.io.File(s"$dir/corpus").list().sorted.toSeq
-    Ivf.buildIndex(emb, "vec_id", "embedding", dir, k = 16, iters = 2)
-    assert(new java.io.File(s"$dir/corpus").list().sorted.toSeq == corpusFiles)
 
     val indexed = Ivf.topKIndexed(spark, dir, queries, "vec_id", "embedding",
       k = 5, nProbe = 8)

