@@ -155,21 +155,12 @@ object Bpe {
     val spark = wc.sparkSession
     import spark.implicits._
     val splitChars = udf((w: String) => codePoints(w))
-    // localCheckpoint persists internal RDD blocks that Dataset
-    // .unpersist does NOT free (the checkpointed RDD is not in the
-    // CacheManager); without explicit freeing, k rounds of
-    // vocabulary-sized blocks linger until driver GC. Track the RDD
-    // ids each checkpoint creates and unpersist the previous round's
-    // deterministically.
-    val sc = spark.sparkContext
-    def persistedIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def freeIds(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    var before = persistedIds
+    // each round's localCheckpoint is freed once the next one exists
+    // (CacheScope.releaseCheckpoint): k rounds of vocabulary-sized
+    // blocks would otherwise linger until driver GC
     var words = wc
       .select(splitChars(col("w")).as("syms"), col("wc"))
       .localCheckpoint() // eager: materializes AND truncates lineage
-    var wordsIds = persistedIds -- before
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     try {
       var round = 0
@@ -202,17 +193,14 @@ object Bpe {
             }
             out.toArray
           })
-          before = persistedIds
           val next = words.select(applyMerge(col("syms")).as("syms"), col("wc"))
             .localCheckpoint() // eager; truncates the per-round UDF lineage
-          val nextIds = persistedIds -- before
-          freeIds(wordsIds) // previous round's blocks, freed NOW not at GC
-          wordsIds = nextIds
+          CacheScope.releaseCheckpoint(words)
           words = next
           round += 1
         }
       }
-    } finally { freeIds(wordsIds) }
+    } finally CacheScope.releaseCheckpoint(words)
     merges.toList
   }
 

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Scoped release for the library's shared-core caches — the loan
   * pattern that finishes the CACHE CONTRACT story on
@@ -82,6 +83,24 @@ object CacheScope {
     scopes.get.headOption.foreach(_ += ds)
     ds
   }
+
+  /** Free the blocks behind an eager `localCheckpoint` — the trainers'
+    * per-iteration lineage cut. Dataset.unpersist does not free them
+    * (a checkpointed RDD is not in the CacheManager), so without this
+    * they linger until driver GC. The RDD comes from the checkpoint's
+    * OWN plan: an eager checkpoint collapses to one LogicalRDD over
+    * exactly that RDD. A before/after diff of the context-global
+    * persistent-RDD map would also free whatever was persisted
+    * meanwhile — a caller's `cache()` first materialized by the
+    * training (its CacheManager entry then silently recomputes on
+    * every read), or another thread's checkpoint, whose only copy it
+    * destroys. `ckpt` must not be read afterwards. */
+  private[graft] def releaseCheckpoint(ckpt: Dataset[_]): Unit =
+    ckpt.queryExecution.analyzed match {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false); ()
+      case p => throw new IllegalArgumentException(
+        s"releaseCheckpoint: not an eager checkpoint (plan root ${p.nodeName})")
+    }
 
   /** Relations registered in the innermost scope so far — spec hook. */
   private[graft] def activeRelations: Seq[Dataset[_]] =

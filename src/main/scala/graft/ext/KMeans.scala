@@ -93,13 +93,6 @@ object KMeans {
       .sortBy(_.getLong(0))
       .map(_.getSeq[Long](1).map(_ * CScale).toArray)
     require(cents.length == k, s"KMeans: k=$k but only ${cents.length} points")
-    // size ObjectHashAggregateExec's sort-fallback threshold for the
-    // M-step's k fixed-width d-long buffers (see
-    // LongVecSum.withGroupBudget — the default 128 sorts every
-    // partition's points once k > 128)
-    val d0 = cents.headOption.map(_.length).getOrElse(1)
-    graft.functions.LongVecSum.withGroupBudget(pts.sparkSession,
-      k.toLong, 8L * d0) {
     for (_ <- 1 to iters) {
       // vector-summing aggregate over the unfanned (cluster, q) rows:
       // the posexplode form paid the hash aggregate per ELEMENT (d×
@@ -124,26 +117,21 @@ object KMeans {
       }
       cents = next
     }
-    }
     cents
   }
 
   /** Train and return the centroid model alone — k·d longs of driver
     * metadata, the broadcastable artifact a serving/streaming tier
     * assigns against ([[assignWith]]). The quantized-points
-    * localCheckpoint lives only for the iters+1 training passes:
-    * Dataset.unpersist does NOT free checkpoint blocks (the Bpe
-    * precedent), so the blocks are freed deterministically here
-    * instead of lingering until driver GC. */
+    * localCheckpoint lives only for the iters+1 training passes and is
+    * freed here ([[CacheScope.releaseCheckpoint]]) instead of lingering
+    * until driver GC. */
   def fitCentroids(em: DataFrame, idCol: String, vecCol: String,
                    k: Int, iters: Int): Array[Array[Long]] = {
     require(k >= 1 && iters >= 0, s"KMeans: need k >= 1, iters >= 0 (got $k, $iters)")
-    val sc = em.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
     val pts = quantPoints(em, idCol, vecCol).localCheckpoint()
     try lloyd(pts, k, iters)
-    finally (sc.getPersistentRDDs.keySet.toSet -- before)
-      .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    finally CacheScope.releaseCheckpoint(pts)
   }
 
   /** Map-only assignment of a (possibly streaming) relation against a

@@ -36,26 +36,12 @@ object PageRank {
     * an edge relation that typically comes out of link extraction
     * (measured at sf0.1: summed task time 4.8 s → 1.1 s, bench median
     * 4.1 s → 2.8 s).
-    * Checkpoint blocks are freed deterministically (Dataset.unpersist
-    * does not free them — the KMeans/Bpe precedent): each iteration
-    * frees the previous iteration's rank blocks, and the static
-    * relations free on exit; only the RETURNED rank's blocks live on,
-    * |nodes| rows backing the result. */
+    * Checkpoint blocks are freed deterministically
+    * ([[CacheScope.releaseCheckpoint]]): each iteration frees the
+    * previous iteration's rank blocks, and the static relations free on
+    * exit; only the RETURNED rank's blocks live on, |nodes| rows
+    * backing the result. */
   def ranks(edgesIn: DataFrame): DataFrame = {
-    val sc = edgesIn.sparkSession.sparkContext
-    // The ids to free come from the checkpointed Datasets THEMSELVES
-    // (an eager localCheckpoint collapses the plan to one LogicalRDD —
-    // its rdd id is the persisted block set), never from diffing the
-    // context-global persistent-RDD map: that map is shared across
-    // threads, and a concurrent persist landing inside the diff window
-    // would be unpersisted by us — destroying the only copy of a
-    // foreign localCheckpoint's data (ADVICE r19).
-    def ckptIds(df: DataFrame): Set[Int] =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.toSet
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
     val edges = edgesIn.localCheckpoint()
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
@@ -64,31 +50,27 @@ object PageRank {
     // instead of re-aggregating the edge relation ten times
     val outdeg = edges.groupBy(col("src")).agg(sum(col("w")).as("deg"))
       .localCheckpoint()
-    val staticIds = ckptIds(edges) ++ ckptIds(nodes) ++ ckptIds(outdeg)
     val nNodes = nodes.count()
     val base = (1.0 - Damping) / nNodes
     var rank = nodes.withColumn("rank",
       floor(lit(1.0) / nNodes * 1e12 + 0.5) / 1e12)
-    var prevIds = Set.empty[Int]
-    for (_ <- 1 to Iters) {
+    for (i <- 1 to Iters) {
       val contrib = edges.join(rank.withColumnRenamed("node", "src"), Seq("src"))
         .join(outdeg, Seq("src"))
         .select(col("dst").as("node"),
           (floor(lit(Damping) * col("rank") * col("w") / col("deg") * 1e12 + 0.5) / 1e12)
             .cast("decimal(28,12)").as("c"))
-      rank = nodes.join(contrib.groupBy(col("node")).agg(sum(col("c")).as("sc")),
+      val next = nodes.join(contrib.groupBy(col("node")).agg(sum(col("c")).as("sc")),
           Seq("node"), "left")
         .select(col("node"),
           (floor((lit(base) + coalesce(col("sc").cast("double"), lit(0.0)))
             * 1e12 + 0.5) / 1e12).as("rank"))
         .localCheckpoint() // eager: the previous rank's blocks are now free-able
-      // the fresh checkpoint's own id, never the loop-static ones (the
-      // initial, un-checkpointed rank's plan contains nodes' LogicalRDD)
-      val newIds = ckptIds(rank) -- staticIds
-      free(prevIds)
-      prevIds = newIds
+      // the initial rank is a plan over nodes, not a checkpoint of its own
+      if (i > 1) CacheScope.releaseCheckpoint(rank)
+      rank = next
     }
-    free(staticIds)
+    Seq(edges, nodes, outdeg).foreach(CacheScope.releaseCheckpoint)
     rank
   }
 

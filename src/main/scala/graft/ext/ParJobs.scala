@@ -27,7 +27,8 @@ package graft.ext
   * caller's session ([[graft.streaming.StreamPipeline]] re-plans each
   * micro-batch there), and no thunk writes conf. Concurrent
   * first-materialization of a shared persisted relation is safe: the
-  * BlockManager locks per block, one thread computes, the rest block.
+  * BlockManager locks per block, one thread computes, the rest block
+  * (ParJobsSpec counts one computation per row).
   */
 private[graft] object ParJobs {
 

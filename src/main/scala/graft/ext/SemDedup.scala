@@ -124,8 +124,6 @@ object SemDedup {
     * runs and partitionings. */
   private[ext] def trainDistributedCells(unit: DataFrame, k: Int,
                                          iters: Int): DataFrame = {
-    val spark = unit.sparkSession
-    val sc = spark.sparkContext
     if (unit.isEmpty) {
       // empty input: no sample to train on ([[Ivf.train]] requires a
       // non-empty sample) and no groups to allocate — return the empty
@@ -138,7 +136,6 @@ object SemDedup {
     val g = math.max(1, math.round(math.sqrt(k.toDouble)).toInt)
     val coarse = Ivf.train(unit, "id", "v", g, iters)
     val grpUdf = udf((v: Seq[Double]) => coarse.nearest(v, 1)(0))
-    val before = sc.getPersistentRDDs.keySet.toSet
     // quantized points with their FIXED coarse group: iters+2 passes
     // re-read them (the KMeans localCheckpoint rationale)
     val pts = unit.select(col("id"), KMeans.quantCol(col("v")).as("q"),
@@ -201,7 +198,10 @@ object SemDedup {
     // point, centroids pinned as the shuffled-hash BUILD side (k·d
     // rows total, bounded per group; never a driver broadcast).
     // Partial-aggregation collapses each point's candidate rows
-    // map-side (all rows of one id share its group's partition).
+    // map-side (all rows of one id share its group's partition). It
+    // plans as a SortAggregate: min(struct) and first(array) keep
+    // non-primitive buffers and no typed-imperative aggregate, so no
+    // ObjectHashAggregate fallback threshold applies to it.
     def estep(cents: DataFrame): DataFrame =
       pts.join(cents.hint("shuffle_hash"), Seq("grp"))
         .withColumn("d", dist)
@@ -231,26 +231,11 @@ object SemDedup {
     }
 
     var cents = seeds.localCheckpoint()
-    // BOTH trainer aggregates are object-buffered and BOUNDED: the
-    // E-step's groupBy(id).agg(min(struct), first(q)) holds ≈ n/width
-    // point buffers per partition, the M-step's LongVecSum ≤ k d-long
-    // sums. Size ObjectHashAggregateExec's sort-fallback threshold to
-    // the larger group count (memory-capped in withGroupBudget) — the
-    // default 128 sorted every partition's E-step join rows each
-    // iteration (measured same-window at the k=4688 ladder rung:
-    // 403 s → 237 s). Scope covers the loop AND the final assignment,
-    // which runs the same E-step aggregation once more.
-    val d = coarse.centroids.headOption.map(_.length).getOrElse(1)
-    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
-    // ×8 headroom over the even-split average: the E-step's MAP-side
-    // partial aggregation runs on grp-partitioned join output, where a
-    // partition holds whole groups (≈√k groups hash onto width
-    // partitions — the occupancy is skewed, not uniform). The memory
-    // cap inside withGroupBudget still bounds the worst case.
-    val groupKeys = math.max(k.toLong, (total / width + 1) * 8)
-    graft.functions.LongVecSum.withGroupBudget(spark, groupKeys, 8L * d + 64) {
-    for (_ <- 1 to iters)
-      cents = mstep(estep(cents), cents).localCheckpoint()
+    for (_ <- 1 to iters) {
+      val next = mstep(estep(cents), cents).localCheckpoint()
+      CacheScope.releaseCheckpoint(cents) // superseded: free it now, not at GC
+      cents = next
+    }
     // dense int cell labels, renumbered PER COARSE GROUP plus a
     // driver-computed group offset from the ≤√k allocation table
     // (groups are fixed and emptied cells keep their previous centroid
@@ -274,18 +259,12 @@ object SemDedup {
       (row_number().over(Window.partitionBy(col("grp")).orderBy(col("cell")))
         - lit(1) + offUdf(col("grp"))).cast("int"))
       .select(col("grp"), col("cell_i").as("cell"), col("c"))
-    // snapshot the training-checkpoint ids BEFORE asg persists, so
-    // freeing them cannot touch asg's own cache
-    val ckpts = sc.getPersistentRDDs.keySet.toSet -- before
     val asg = CacheScope.register(
       estep(renum).select(col("id"), col("cell")).persist())
     asg.count() // materialize BEFORE the checkpoint blocks are freed
-    // free the training checkpoints deterministically (Dataset
-    // .unpersist does not free checkpoint blocks — the KMeans
-    // .fitCentroids precedent)
-    ckpts.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    CacheScope.releaseCheckpoint(pts)
+    CacheScope.releaseCheckpoint(cents)
     asg
-    } // withGroupBudget
   }
 
   /** The per-vector cell-assignment function: flat O(k·d) nearest for

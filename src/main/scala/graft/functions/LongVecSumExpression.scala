@@ -122,44 +122,4 @@ object LongVecSum {
   def sumCol(vec: Column): Column =
     ColumnBridge.column(
       LongVecSum(ColumnBridge.expression(vec)).toAggregateExpression())
-
-  /** Run `body` with ObjectHashAggregateExec's sort-fallback threshold
-    * sized for aggregations whose per-partition group count and
-    * per-group buffer size are KNOWN.
-    *
-    * Object-buffered aggregates (TypedImperativeAggregate like
-    * [[LongVecSum]], and DeclarativeAggregates with non-primitive
-    * buffers like `min(struct(...))` / `first(array)`) plan through
-    * ObjectHashAggregateExec, which abandons its hash map for
-    * SORT-based aggregation once a partition holds more than
-    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` keys —
-    * default 128, sized for arbitrary-payload aggregates like
-    * collect_list whose buffers grow with the data. A Lloyd iteration's
-    * aggregates have BOUNDED buffers (the M-step: one d-long sum per
-    * cell; the E-step: one (min-struct, q) pair per point id), so the
-    * default turns every partition into a full sort of its rows per
-    * iteration (measured at the n=2.4M/k=4688/d=64 ladder rung, same
-    * window: 403 s with the default vs 237 s with the threshold sized
-    * to the group counts). The threshold is raised to `keys` while
-    * keys·bufBytes — the per-partition worst-case map payload — stays
-    * within a 256 MB budget; past that cap the sort fallback is
-    * genuinely the memory-safe path and is left in place (a
-    * scale-parameterised bound, not a local tuning). Conf restored on
-    * exit. */
-  def withGroupBudget[T](spark: org.apache.spark.sql.SparkSession,
-                         keys: Long, bufBytes: Long)(body: => T): T = {
-    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val maxKeys = math.max(128L, (256L << 20) / math.max(1L, bufBytes))
-    val thresh = math.max(128L, math.min(keys, maxKeys))
-      .min(Int.MaxValue.toLong)
-    // getAll holds only the keys set on the session; getOption would
-    // return the default of an unset key and the restore would set it
-    val prev = spark.conf.getAll.get(key)
-    spark.conf.set(key, thresh.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 }

@@ -100,4 +100,39 @@ class CacheScopeSpec extends AnyFunSuite with SparkSuite {
     spark.catalog.clearCache()
     assert(toks.count() > 0)
   }
+
+  test("releaseCheckpoint frees the checkpoint's own blocks, not a cache beside it") {
+    val sc = spark.sparkContext
+    val cached = docs.cache() // first materialized by the checkpoint below
+    try {
+      val ckpt = cached.select($"doc_id").localCheckpoint()
+      val ckptRdd = ckpt.queryExecution.analyzed
+        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+      assert(sc.getPersistentRDDs.contains(ckptRdd))
+      CacheScope.releaseCheckpoint(ckpt)
+      assert(!sc.getPersistentRDDs.contains(ckptRdd))
+      assert(sc.getPersistentRDDs.contains(CacheScopeSpec.cacheRdd(cached)))
+      intercept[IllegalArgumentException](CacheScope.releaseCheckpoint(cached))
+    } finally { cached.unpersist(); () }
+  }
+}
+
+object CacheScopeSpec {
+
+  /** Run `body`; return its value and the ids of the RDDs it created
+    * that are still persisted when it returns (RDD ids grow
+    * monotonically per context). */
+  def persistedBy[T](spark: org.apache.spark.sql.SparkSession)(body: => T): (T, Set[Int]) = {
+    val sc = spark.sparkContext
+    val mark = sc.emptyRDD[Int].id
+    val out = body
+    (out, sc.getPersistentRDDs.keys.filter(_ > mark).toSet)
+  }
+
+  /** The id of the RDD that holds `ds`'s `cache()` blocks. */
+  def cacheRdd(ds: org.apache.spark.sql.Dataset[_]): Int =
+    ds.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        r.cacheBuilder.cachedColumnBuffers.id
+    }.get
 }

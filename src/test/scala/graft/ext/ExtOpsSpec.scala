@@ -580,6 +580,16 @@ class ExtOpsSpec extends AnyFunSuite with SparkSuite {
       graft.ext.Bpe.trainMergesLocal(realVocab, 300))
   }
 
+  test("distributed BPE training inside a scope leaves no checkpoint block of its own") {
+    import spark.implicits._
+    val wc = graft.ext.Bpe.wordCounts(Seq("low lower newest widest").toDF("text"), "text")
+    val (merges, live) = CacheScopeSpec.persistedBy(spark) {
+      CacheScope.withScope(graft.ext.Bpe.trainMergesDistributed(wc, k = 5))
+    }
+    assert(merges.size == 5)
+    assert(live.isEmpty, s"blocks left behind: $live")
+  }
+
   test("BPE encode: trained merges give per-doc subword token counts") {
     import spark.implicits._
     val corpus = Seq(

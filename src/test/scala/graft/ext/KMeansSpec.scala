@@ -92,6 +92,19 @@ class KMeansSpec extends AnyFunSuite with SparkSuite {
     assert(streamed == direct)
   }
 
+  test("training frees its checkpoint and keeps a caller's cache() it first materialized") {
+    // lazy: the training's own checkpoint is the first job to read it
+    val em = blobs.cache()
+    try {
+      val (cents, live) = CacheScopeSpec.persistedBy(spark) {
+        CacheScope.withScope(KMeans.fitCentroids(em, "vec_id", "embedding", k = 3, iters = 2))
+      }
+      assert(cents.length == 3)
+      // the caller's cache blocks survive training; nothing else does
+      assert(live == Set(CacheScopeSpec.cacheRdd(em)))
+    } finally { em.unpersist(); () }
+  }
+
   test("null components and null vectors fail loudly, not by quantizing to null") {
     // a null would otherwise propagate through every distance and let
     // array_min silently assign the row while dragging its centroid

@@ -126,6 +126,20 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
     assert(spokes.size == 1) // symmetric spokes rank identically
   }
 
+  test("pagerank frees every checkpoint but the one behind the returned ranks") {
+    import spark.implicits._
+    val edges = Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "a", 1L))
+      .toDF("src", "dst", "w")
+    val (ranks, live) = graft.ext.CacheScopeSpec.persistedBy(spark) {
+      graft.ext.CacheScope.withScope(graft.ext.PageRank.ranks(edges))
+    }
+    val own = ranks.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(own.size == 1 && live == own, s"blocks left behind: ${live -- own}")
+    assert(ranks.count() == 3)
+  }
+
   test("pagerank ranks on the corpus graph are positive and ref hubs lead") {
     val out = graft.SparkEntry.queries("q_pagerank_hosts")(spark, sf).collect()
     assert(out.nonEmpty)
