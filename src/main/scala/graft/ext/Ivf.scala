@@ -74,9 +74,9 @@ object Ivf {
 
   /** Deterministic Lloyd on a driver-side sample: every (|s|/k)-th
     * vector seeds, `iters` assign/average steps. Shared by the coarse
-    * quantizer ([[train]]) and each PQ subspace ([[trainPq]]). */
-  /** Lloyd over an explicit point set — exposed to [[SemDedup]]'s
-    * two-level assignment, which clusters the CENTROIDS themselves. */
+    * quantizer ([[train]]), each PQ subspace ([[trainPq]]) and
+    * [[SemDedup]]'s two-level assignment, which clusters the CENTROIDS
+    * themselves. */
   private[ext] def lloyd(sample: Array[Array[Double]], k: Int, iters: Int): Model = {
     val stride = math.max(sample.length / k, 1)
     val seeds = sample.indices.collect {
@@ -422,13 +422,6 @@ object Ivf {
       PqModel(Array.tabulate(m, ks)((j, c) => byKey((j, c))))
     })
 
-  /** ANN top-k over a persisted index: NO training, counting, or corpus
-    * collect in the query body. Queries hash to their nProbe cells via
-    * the broadcast centroid model; the corpus side is a scan of the
-    * cell-partitioned parquet joined on the partition column, so
-    * Catalyst's dynamic partition pruning restricts the scan to the
-    * probed cells (visible as `PartitionFilters: [dynamicpruning#…]`
-    * in the formatted plan). */
   /** Shared top-k tail: rank `scored` (qid, nid, score) per query,
     * keep the k best, round the reported score. */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
@@ -440,6 +433,13 @@ object Ivf {
       .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
   }
 
+  /** ANN top-k over a persisted index: NO training, counting, or corpus
+    * collect in the query body. Queries hash to their nProbe cells via
+    * the broadcast centroid model; the corpus side is a scan of the
+    * cell-partitioned parquet joined on the partition column, so
+    * Catalyst's dynamic partition pruning restricts the scan to the
+    * probed cells (visible as `PartitionFilters: [dynamicpruning#…]`
+    * in the formatted plan). */
   def topKIndexed(spark: SparkSession, indexDir: String, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int = 5,
                   nProbe: Int = 4): DataFrame = {

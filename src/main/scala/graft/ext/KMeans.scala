@@ -1,12 +1,16 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{CentroidUpdate, QuantArgmin}
 
-/** Distributed Lloyd k-means over an embedding column — the topic
-  * clustering / cluster-balanced-sampling primitive of a training-data
-  * pipeline (the SemDeDup cells are a driver-sample variant; this is
-  * the full-corpus operator).
+/** Lloyd k-means over an embedding column — the topic clustering /
+  * cluster-balanced-sampling primitive of a training-data pipeline.
+  * [[lloyd]] is the engine's one integer Lloyd program: it trains
+  * independent groups of centroids, and k-means here is its one-group
+  * case, SemDeDup's distributed trainer
+  * ([[SemDedup.trainDistributedCells]]) its ⌈√k⌉-group case.
   *
   * Cross-engine discipline: everything after quantization is INTEGER.
   * Points quantize once to non-negative longs
@@ -16,22 +20,22 @@ import org.apache.spark.sql.functions._
   * exact long sums of squared diffs, and centroid means use truncating
   * division — identical on positive operands in Scala (`/`), Spark
   * (`div`) and DuckDB (`//`). Ties in the argmin break to the lowest
-  * centroid index via struct-ordered `array_min`. The oracle
+  * centroid index ([[graft.functions.QuantArgmin]]). The oracle
   * ([[unrolledSql]]) replays the SAME rounds as chained CTEs from the
   * same constants, so assignments are bit-identical after any number
   * of iterations — no float sum ever crosses engines.
   *
-  * Scale shape: the E-step is MAP-ONLY — centroids are k·d longs of
-  * broadcast driver metadata riding the expression tree, never a join.
-  * The M-step aggregates the unfanned (cluster, q) rows with the
-  * vector-summing [[graft.functions.LongVecSum]] (one hash probe per
-  * row, one d-long buffer per cluster — the earlier posexplode form
-  * fanned every row d× and paid the aggregate per element); partial
-  * aggregation collapses each partition to ≤ k array rows, and the
-  * collect is k rows of bounded model metadata — the Ivf precedent. The quantized
-  * points localCheckpoint once (the MLlib-style cache every Lloyd
-  * implementation needs: iters+1 passes re-read them); overflow is
-  * impossible by construction (|x| < Shift = 4 → q < 2^17,
+  * Scale shape: the model is a relation with one row per group, and a
+  * point meets only its own group's centroids, through one codegen'd
+  * argmin over them. A model that fits Spark's broadcast threshold is
+  * broadcast, so a k-means E-step of k·d longs moves no point; a larger
+  * one is joined by shuffle. The M-step is one per-group aggregate
+  * ([[graft.functions.CentroidUpdate]]: per-cell vector sums, one
+  * buffer probe per point row, partial aggregation collapsing each
+  * partition to ≤ k·d longs). Trained models are served as k·d literal
+  * longs riding the expression tree ([[assignWith]]). The quantized
+  * points localCheckpoint once (every round re-reads them); overflow
+  * is impossible by construction (|x| < Shift = 4 → q < 2^17,
   * scaled diff < 2^26, squared < 2^52, ×dim(64) < 2^58 « 2^63).
   *
   * Overlong-row guard: quantization raises on |x| ≥ Shift rather than
@@ -64,74 +68,106 @@ object KMeans {
       .otherwise(quantized)
   }
 
-  /** Squared distance from the quantized point column `q` to one
-    * centroid (scale Quant·CScale), as an exact long sum — the
-    * codegen'd no-allocation form (the zip_with fold allocated a
-    * d-element temp array per point PER CENTROID; same left-to-right
-    * long sum, bit-identical). */
-  private def distTo(c: Array[Long]): Column =
-    graft.functions.QuantSqDist.distCol(col("q"), typedLit(c.toSeq), CScale)
+  /** Nearest of the centroids `cents` (at scale Quant·CScale, sorted
+    * by cell) to the quantized point column `q`: `struct<idx, dist>`. */
+  private def argmin(cents: Column): Column =
+    QuantArgmin.argminCol(col("q"), cents, CScale)
 
-  /** Map-only assignment of every point to its nearest centroid;
-    * ties break to the lowest index (struct-ordered array_min). Keeps
-    * the winning squared distance as `dist2` (exact long). */
-  private def assign(pts: DataFrame, cents: Array[Array[Long]]): DataFrame = {
-    val best = array_min(array(cents.indices.map(i =>
-      struct(distTo(cents(i)).as("d"), lit(i).as("c"))): _*))
-    pts.withColumn("cluster", best.getField("c"))
-      .withColumn("dist2", best.getField("d"))
-  }
+  /** Map-only assignment of every point to its nearest centroid, ties
+    * to the lowest index; keeps the winning squared distance as
+    * `dist2` (exact long). */
+  private def assign(pts: DataFrame, cents: Array[Array[Long]]): DataFrame =
+    pts.withColumn("best", argmin(typedLit(cents.toSeq.map(_.toSeq))))
+      .select(col("*"), col("best.idx").as("cluster"), col("best.dist").as("dist2"))
+      .drop("best")
 
   private def quantPoints(em: DataFrame, idCol: String, vecCol: String): DataFrame =
     em.select(col(idCol).cast("long").as("vec_id"), quantCol(col(vecCol)).as("q"))
 
-  /** The Lloyd loop over an already-quantized (vec_id, q) relation:
-    * seed from the k lowest ids, `iters` rounds of (assign,
-    * mean-update; an emptied cluster keeps its previous centroid). */
-  private def lloyd(pts: DataFrame, k: Int, iters: Int): Array[Array[Long]] = {
-    var cents: Array[Array[Long]] = pts.orderBy(col("vec_id")).limit(k).collect()
-      .sortBy(_.getLong(0))
-      .map(_.getSeq[Long](1).map(_ * CScale).toArray)
-    require(cents.length == k, s"KMeans: k=$k but only ${cents.length} points")
+  /** The integer Lloyd program over quantized points `(id, q, grp)`.
+    * Group `grp` trains `alloc(grp)` centroids on its own points: the
+    * seeds are its lowest ids (all of them when it has fewer), then
+    * `iters` rounds of assign and mean-update, where an emptied cell
+    * keeps its previous centroid. Returns the model, one row per group
+    * `(grp, off, cents)`: `cents` sorted by seed id, and `off` the
+    * group's first cell label (groups in `grp` order), so a point's
+    * label is `off` + its centroid's index ([[nearest]]).
+    *
+    * The model is a lazy plan: the rounds chain into one query, each
+    * round one join of the points with the previous model and one
+    * per-group aggregate ([[graft.functions.CentroidUpdate]]), so a
+    * round costs one shuffle of partial buffers, and a broadcast when
+    * the model is small. The seeds are a per-group top-alloc window,
+    * so the model reaches the driver only as a broadcast, within
+    * Spark's threshold. */
+  private[ext] def lloyd(pts: DataFrame, alloc: Seq[(Int, Int)], iters: Int): DataFrame = {
+    val byGrp = alloc.sortBy(_._1)
+    val offs = byGrp.map(_._1).zip(byGrp.scanLeft(0)(_ + _._2)).toMap
+    // the literal bound makes the window a per-group top-N
+    // (WindowGroupLimit: no full per-group sort materializes)
+    val rn = row_number().over(Window.partitionBy(col("grp")).orderBy(col("id")))
+    var model = pts.withColumn("rn", rn)
+      .filter(col("rn") <= lit(byGrp.map(_._2).max))
+      .filter(col("rn") <= element_at(typedLit(alloc.toMap), col("grp")))
+      .groupBy(col("grp"))
+      .agg(sort_array(collect_list(struct(col("id"), col("q")))).as("s"))
+      .select(col("grp"), element_at(typedLit(offs), col("grp")).as("off"),
+        transform(col("s"), e => transform(e.getField("q"), x => x * lit(CScale)))
+          .as("cents"))
+    // the group's model row rides the M-step as one extra row per group
+    // with q NULL, so no point row carries a copy of its group's model
+    val modelRows = pts.sparkSession.createDataFrame(byGrp.map(_._1).map(Tuple1(_)))
+      .toDF("grp").select(col("grp"), lit(null).cast("array<bigint>").as("q"))
+    val bc = broadcastable(pts, alloc)
     for (_ <- 1 to iters) {
-      // vector-summing aggregate over the unfanned (cluster, q) rows:
-      // the posexplode form paid the hash aggregate per ELEMENT (d×
-      // the rows) and collected k·d rows; this collects k array rows.
-      // Long sums are order-independent — values bit-identical.
-      val sums = assign(pts, cents)
-        .groupBy(col("cluster"))
-        .agg(graft.functions.LongVecSum.sumCol(col("q")).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.clone()) // an emptied cluster keeps its centroid
-      sums.foreach { r =>
-        val s = r.getSeq[Long](1)
-        val n = r.getLong(2)
-        val c = next(r.getInt(0))
-        var i = 0
-        while (i < c.length) {
-          // positive operands: Scala `/`, Spark `div`, DuckDB `//` agree
-          c(i) = s(i) * CScale / n
-          i += 1
-        }
-      }
-      cents = next
+      model = join(pts.select(col("grp"), col("q")).unionByName(modelRows), model, bc)
+        .groupBy(col("grp"))
+        .agg(max(col("off")).as("off"),
+          CentroidUpdate.updateCol(col("q"), col("best.idx"),
+            when(col("q").isNull, col("cents")), CScale).as("cents"))
     }
-    cents
+    model
   }
+
+  /** Every point against its group's row of a [[lloyd]] model, with its
+    * nearest centroid `best` (struct of `idx`, `dist`). */
+  private def join(pts: DataFrame, model: DataFrame, bc: Boolean): DataFrame =
+    pts.join(if (bc) broadcast(model) else model, Seq("grp"))
+      .withColumn("best", argmin(col("cents")))
+
+  /** Whether a model of `alloc`'s centroids fits Spark's broadcast
+    * threshold. Plan statistics cannot tell: a model's estimated size
+    * is the product of its inputs' estimates. Its exact size is Σalloc
+    * centroids of d longs, and d is one row away. */
+  private def broadcastable(pts: DataFrame, alloc: Seq[(Int, Int)]): Boolean = {
+    val d = pts.select(size(col("q"))).take(1).headOption.fold(0)(_.getInt(0))
+    val limit = pts.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    alloc.map(_._2.toLong).sum * d * 8 <= limit
+  }
+
+  /** The points of `pts` labelled by a [[lloyd]] model: `cell` is the
+    * group's `off` + the index of the point's nearest centroid. */
+  private[ext] def nearest(pts: DataFrame, model: DataFrame, alloc: Seq[(Int, Int)]): DataFrame =
+    join(pts, model, broadcastable(pts, alloc))
+      .select(col("id"), (col("off") + col("best.idx")).as("cell"))
 
   /** Train and return the centroid model alone — k·d longs of driver
     * metadata, the broadcastable artifact a serving/streaming tier
-    * assigns against ([[assignWith]]). The quantized-points
-    * localCheckpoint lives only for the iters+1 training passes and is
-    * freed here ([[CacheScope.releaseCheckpoint]]) instead of lingering
-    * until driver GC. */
+    * assigns against ([[assignWith]]): [[lloyd]] with one group of k
+    * seeds. The quantized-points localCheckpoint lives only for the
+    * training query and is freed here ([[CacheScope.releaseCheckpoint]])
+    * instead of lingering until driver GC. */
   def fitCentroids(em: DataFrame, idCol: String, vecCol: String,
                    k: Int, iters: Int): Array[Array[Long]] = {
     require(k >= 1 && iters >= 0, s"KMeans: need k >= 1, iters >= 0 (got $k, $iters)")
-    val pts = quantPoints(em, idCol, vecCol).localCheckpoint()
-    try lloyd(pts, k, iters)
-    finally CacheScope.releaseCheckpoint(pts)
+    val pts = quantPoints(em, idCol, vecCol)
+      .select(col("vec_id").as("id"), col("q"), lit(0).as("grp")).localCheckpoint()
+    try {
+      val cents = lloyd(pts, Seq(0 -> k), iters).select(col("cents")).collect()
+        .flatMap(_.getSeq[scala.collection.Seq[Long]](0).map(_.toArray))
+      require(cents.length == k, s"KMeans: k=$k but only ${cents.length} points")
+      cents
+    } finally CacheScope.releaseCheckpoint(pts)
   }
 
   /** Map-only assignment of a (possibly streaming) relation against a

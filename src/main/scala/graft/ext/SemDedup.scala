@@ -1,7 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -76,8 +75,8 @@ object SemDedup {
     * run): at the first rung AT the old threshold — n=2.4M, k=4688,
     * d=64, SynthScale ×1000 — the driver trainer finished the full
     * semDedupAuto pass in 128.6 s while the distributed trainer took
-    * 882.7 s; after the E-step's allocation fix
-    * ([[graft.functions.QuantSqDist]]) the gap is still 1.7×
+    * 882.7 s; after the E-step's allocation fix (a no-allocation
+    * codegen'd distance) the gap is still 1.7×
     * (100.8 s vs 168.8 s — SCALE.md round-19 table). Equating the
     * driver's single-core Lloyd term (~k²·d·iters/10⁹ s, the only
     * driver cost that outgrows the distributed program) against the
@@ -93,23 +92,23 @@ object SemDedup {
   val DistributedK = 32768
 
   /** DISTRIBUTED two-level Lloyd over the unit-vector relation:
-    * returns (id, cell) with cell densely renumbered to [0, #cells).
-    * Nothing corpus- or k-sized ever reaches the driver — the bounded
-    * collects are [[Ivf.train]]'s coarse sample (⌈√k⌉ centroids) and
-    * the ≤⌈√k⌉-row group-count/seed-allocation table.
+    * returns (id, cell) with cell densely numbered in [0, #cells).
+    * Nothing corpus-sized ever reaches the driver, and the model only
+    * as a broadcast within Spark's threshold — the other collects are
+    * [[Ivf.train]]'s coarse sample (⌈√k⌉ centroids) and the
+    * ≤⌈√k⌉-row group-count/seed-allocation table.
     *
     * Structure (the serving-side two-level assignment, applied to
     * training): a bounded coarse model partitions the space into
     * g = ⌈√k⌉ FIXED groups; seeds are allocated per group
     * proportionally to its point count (largest-remainder, every live
     * group ≥ 1 seed, capped by group size — so every point always has
-    * candidates and no group empties out); Lloyd then iterates
-    * INDEPENDENTLY inside each group as one dataframe program. Points
-    * and centroids join on the group key — the centroid relation stays
-    * distributed (k·d rows shuffled, never a closure broadcast), each
-    * point scores only its group's ≈√k centroids, so the E-step is
-    * O(n·√k·d) rows per iteration, matching the serving assignment's
-    * arithmetic. Group boundaries make the clustering approximate in
+    * candidates and no group empties out); then [[KMeans.lloyd]], the
+    * engine's one integer Lloyd program, trains the groups
+    * independently: each point is scored by one codegen'd argmin over
+    * its own group's ≈√k centroids, so the E-step is O(n·√k·d)
+    * arithmetic with no per-candidate row and no aggregate keyed by
+    * point. Group boundaries make the clustering approximate in
     * exactly the way the serving path already is — SemDeDup tolerates
     * it by design (cells only decide which pairs are COMPARED, and
     * identical unit vectors co-assign under any deterministic
@@ -159,111 +158,14 @@ object SemDedup {
     // capacity < k (k > n) the loop stops with fewer seeds, which is
     // every seed the corpus can support.
     val alloc = scala.collection.mutable.Map(base.map(b => b._1 -> b._3): _*)
-    if (left > 0) {
-      val order = base.sortBy { case (grp, c, _) =>
-        (-(k.toLong * c % total), grp)
-      }
-      var progressed = true
-      while (left > 0 && progressed) {
-        progressed = false
-        var i = 0
-        while (left > 0 && i < order.length) {
-          val (grp, c, _) = order(i)
-          if (alloc(grp) < c) { alloc(grp) += 1; left -= 1; progressed = true }
-          i += 1
-        }
-      }
-    }
-    val allocMap = alloc.toMap
-    val maxAlloc = allocMap.values.max
-    val allocUdf = udf((grp: Int) => allocMap(grp))
-    // seeds: each group's lowest-id points. The literal rn bound makes
-    // the window a per-group TOP-maxAlloc (WindowGroupLimit — no full
-    // per-group sort materializes); the per-group exact cut follows.
-    val w = Window.partitionBy(col("grp")).orderBy(col("id"))
-    val seeds = pts.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= lit(maxAlloc))
-      .filter(col("rn") <= allocUdf(col("grp")))
-      .select(col("grp"), col("id").as("cell"),
-        transform(col("q"), x => x * lit(KMeans.CScale)).as("c"))
-
-    // exact long distance point↔centroid at the KMeans scales — the
-    // codegen'd no-allocation form (the zip_with fold it replaces
-    // allocated a d-element temp array per (point, candidate) pair:
-    // ~160M × 512 B per E-step at the k≈4700 rung, the measured
-    // dominant cost; same left-to-right long sum, bit-identical)
-    val dist = graft.functions.QuantSqDist.distCol(
-      col("q"), col("c"), KMeans.CScale)
-    // E-step: join on the group key — ≈√k candidate centroids per
-    // point, centroids pinned as the shuffled-hash BUILD side (k·d
-    // rows total, bounded per group; never a driver broadcast).
-    // Partial-aggregation collapses each point's candidate rows
-    // map-side (all rows of one id share its group's partition). It
-    // plans as a SortAggregate: min(struct) and first(array) keep
-    // non-primitive buffers and no typed-imperative aggregate, so no
-    // ObjectHashAggregate fallback threshold applies to it.
-    def estep(cents: DataFrame): DataFrame =
-      pts.join(cents.hint("shuffle_hash"), Seq("grp"))
-        .withColumn("d", dist)
-        .groupBy(col("id"))
-        .agg(min(struct(col("d"), col("cell"))).as("best"),
-          first(col("q")).as("q"))
-        .select(col("id"), col("best").getField("cell").as("cell"), col("q"))
-    // M-step: truncating-division integer means per (cell, pos); an
-    // emptied cell keeps its previous centroid (left join + coalesce).
-    // The sums come from the vector-summing aggregate over the UNFANNED
-    // (cell, q) rows — the posexplode form this replaces blew each row
-    // into d rows and paid the hash-aggregate per ELEMENT (a 64× row
-    // fan-out at d=64, the trainer's dominant term after the round-19
-    // E-step fix). Long sums are order-independent, so the per-position
-    // values — and every downstream verdict — are bit-identical
-    // (SemDedupSpec's distributed ≡ driver equality pins it).
-    def mstep(assigned: DataFrame, cents: DataFrame): DataFrame = {
-      val sums = assigned.groupBy(col("cell"))
-        .agg(graft.functions.LongVecSum.sumCol(col("q")).as("s"),
-          count(lit(1)).as("n"))
-        .select(col("cell"),
-          expr(s"transform(s, x -> x * ${KMeans.CScale}L div n)").as("c_new"))
-      cents.select(col("grp"), col("cell"), col("c").as("c_prev"))
-        .join(sums, Seq("cell"), "left")
-        .select(col("grp"), col("cell"),
-          coalesce(col("c_new"), col("c_prev")).as("c"))
-    }
-
-    var cents = seeds.localCheckpoint()
-    for (_ <- 1 to iters) {
-      val next = mstep(estep(cents), cents).localCheckpoint()
-      CacheScope.releaseCheckpoint(cents) // superseded: free it now, not at GC
-      cents = next
-    }
-    // dense int cell labels, renumbered PER COARSE GROUP plus a
-    // driver-computed group offset from the ≤√k allocation table
-    // (groups are fixed and emptied cells keep their previous centroid
-    // row, so the relation holds exactly allocMap(grp) rows per group
-    // throughout — the offsets are exact). A global
-    // Window.orderBy("cell") here would funnel all k rows CARRYING THE
-    // d-DIM VECTORS through one task (~12 GB at k=2M/d=768, VERDICT
-    // r18) — the exact k-sized bottleneck this trainer removes from
-    // the driver, re-introduced executor-side. Per-group windows keep
-    // every partition ≤ the largest group's allocation (≈√k·overalloc)
-    // and preserve the within-group seed-id tie-break; labels are
-    // grp-major instead of globally-id-ordered, which nothing
-    // observes — cells only decide which pairs are compared.
-    val offsets: Map[Int, Int] = {
-      val sorted = allocMap.toSeq.sortBy(_._1)
-      sorted.map(_._1)
-        .zip(sorted.scanLeft(0L)(_ + _._2).init.map(_.toInt)).toMap
-    }
-    val offUdf = udf((grp: Int) => offsets(grp))
-    val renum = cents.withColumn("cell_i",
-      (row_number().over(Window.partitionBy(col("grp")).orderBy(col("cell")))
-        - lit(1) + offUdf(col("grp"))).cast("int"))
-      .select(col("grp"), col("cell_i").as("cell"), col("c"))
+    val order = base.sortBy { case (grp, c, _) => (-(k.toLong * c % total), grp) }
+    while (left > 0 && order.exists { case (grp, c, _) => alloc(grp) < c })
+      for ((grp, c, _) <- order if left > 0 && alloc(grp) < c) { alloc(grp) += 1; left -= 1 }
+    val groups = alloc.toSeq.map { case (grp, a) => grp -> a.toInt }
     val asg = CacheScope.register(
-      estep(renum).select(col("id"), col("cell")).persist())
+      KMeans.nearest(pts, KMeans.lloyd(pts, groups, iters), groups).persist())
     asg.count() // materialize BEFORE the checkpoint blocks are freed
     CacheScope.releaseCheckpoint(pts)
-    CacheScope.releaseCheckpoint(cents)
     asg
   }
 
@@ -317,11 +219,6 @@ object SemDedup {
     }
   }
 
-  /** (id, cell, kept) for every input vector. `kept=false` iff some
-    * same-cell member with a smaller id sits within cosine ≥ τ.
-    * At k ≥ `distributedK` the cells train distributed
-    * ([[trainDistributedCells]]); below it, the bounded driver-sample
-    * [[Ivf.train]] + closure assignment. */
   /** (id, v) unit-vector rows: L2-normalized double vectors keyed by
     * id — the input relation of both the batch operator and the
     * streaming maintainer. */
@@ -335,6 +232,11 @@ object SemDedup {
         transform(col("v0"), x => x / sqrt(col("n2"))).as("v"))
   }
 
+  /** (id, cell, kept) for every input vector. `kept=false` iff some
+    * same-cell member with a smaller id sits within cosine ≥ τ.
+    * At k ≥ `distributedK` the cells train distributed
+    * ([[trainDistributedCells]]); below it, the bounded driver-sample
+    * [[Ivf.train]] + closure assignment. */
   def semDedup(emb: DataFrame, idCol: String, vecCol: String,
                tau: Double, k: Int = 16, iters: Int = 3,
                distributedK: Int = DistributedK): DataFrame = {

@@ -225,10 +225,11 @@ object CurationQueries {
 
     // the DISTRIBUTED-training path of the same operator, forced at
     // gate scale (distributedK = 1 — in production it engages at
-    // k ≥ 4096, where the driver-sample trainer's k²·d loop and k·d
-    // closure stop scaling): coarse √k-group model, per-group seed
-    // allocation, integer two-level Lloyd as a dataframe program,
-    // nothing k-sized on the driver. The SAME analytic oracle pins it:
+    // k ≥ SemDedup.DistributedK = 32768, where the driver-sample
+    // trainer's k²·d loop and k·d closure stop scaling): coarse
+    // √k-group model, per-group seed allocation, then KMeans.lloyd,
+    // the one integer Lloyd program, over the groups; nothing k-sized
+    // on the driver. The SAME analytic oracle pins it:
     // originals can never drop under ANY assignment (their only
     // ≥τ-cosine partner carries the LARGER id), and a clone drops iff
     // it co-assigns with its bit-identical original — which any

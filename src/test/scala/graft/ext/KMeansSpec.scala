@@ -105,6 +105,40 @@ class KMeansSpec extends AnyFunSuite with SparkSuite {
     } finally { em.unpersist(); () }
   }
 
+  test("a one-group training E-step has no exchange on the point side") {
+    // k-means is the one-group case of the grouped Lloyd program: its
+    // k·d-long model is small, so Spark broadcasts it from its cached
+    // size and the points stream through the join where they are.
+    // With one group a shuffle on the group key would send every point
+    // to one partition.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, HashJoin}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.functions.{col, lit}
+    def joins(p: SparkPlan): Seq[SparkPlan] =
+      p.collect { case n => n }.flatMap {
+        case a: AdaptiveSparkPlanExec => joins(a.inputPlan)
+        case s: InMemoryTableScanExec => joins(s.relation.cachedPlan)
+        case j: HashJoin => Seq(j)
+        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => Seq(j)
+        case _ => Nil
+      }
+    val pts = blobs.select(col("vec_id").as("id"),
+      KMeans.quantCol(col("embedding")).as("q"), lit(0).as("grp"))
+    val js = joins(KMeans.lloyd(pts, Seq(0 -> 3), iters = 2).queryExecution.executedPlan)
+    assert(js.size == 2, s"expected one E-step join per round:\n${js.mkString("\n")}")
+    js.foreach {
+      case j: BroadcastHashJoinExec =>
+        assert(j.buildSide == BuildRight, s"model is not the build side:\n$j")
+        val shuffles = j.left.collect { case e: ShuffleExchangeLike => e }
+        assert(shuffles.isEmpty, s"exchange on the point side:\n$j")
+      case j => fail(s"E-step join is not a broadcast:\n$j")
+    }
+  }
+
   test("null components and null vectors fail loudly, not by quantizing to null") {
     // a null would otherwise propagate through every distance and let
     // array_min silently assign the row while dragging its centroid

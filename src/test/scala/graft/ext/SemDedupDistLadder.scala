@@ -30,6 +30,12 @@ object SemDedupDistLadder {
         transform(col("embedding"), x => x * lit(1.5f)).as("embedding"))
     val all = emb.select(col("vec_id"), col("embedding")).unionByName(clones)
     val n = all.count()
+    val k = SemDedup.kFor(n, 512)
+    // printed before the warm-up, so a run stopped by a timeout or an
+    // out-of-memory kill still shows its rung and heap in the log
+    val heapMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
+    println(s"""{"semdedup_ladder_start":{"mode":"$mode","dir":"$dir","n":$n,"k":$k,"max_heap_mb":$heapMb}}""")
+    Console.out.flush()
 
     def pass(): Long = CacheScope.withScope {
       val out = SemDedup.semDedupAuto(all, "vec_id", "embedding", 0.9,
@@ -46,7 +52,6 @@ object SemDedupDistLadder {
       out.filter(col("id") >= 1000000L && col("kept")).count()
     }
     val keptClones = pass() // warmup, and the planted-contract check
-    val k = SemDedup.kFor(n, 512)
     val plantedClones = clones.count()
     // the zero-clones oracle is a MEASURED margin of the ×1.5f clone
     // construction (~1e-8 unit-vector float noise): it held at the

@@ -199,35 +199,39 @@ class SemDedupSpec extends AnyFunSuite with SparkSuite {
     assert(run(vecs) == run(vecs.repartition(5)))
   }
 
-  test("QuantSqDist equals the zip_with long fold it replaced") {
-    // the E-step's codegen'd distance vs the original expression form,
-    // over planted EQUAL-LENGTH quantized arrays — the only shape any
-    // call site produces (d-length points vs d-length centroids), and
-    // the shape on which the two forms are bit-identical
+  test("QuantArgmin's distance equals the zip_with long fold") {
+    // the E-step's codegen'd argmin over one candidate vs the original
+    // expression form of its distance, over planted EQUAL-LENGTH
+    // quantized arrays — the only shape any call site produces
+    // (d-length points vs d-length centroids), and the shape on which
+    // the two forms are bit-identical
     val rows = Seq(
       (Seq(131071L, 0L, 42L), Seq(131071L * 256, 7L, 42L * 256 + 1)),
       (Seq(0L, 1L), Seq(0L, 256L)),
       (Seq(5L, 5L, 5L), Seq(1280L, 1280L, 1280L)))
       .toDF("q", "c")
-    val got = rows.select(graft.functions.QuantSqDist.distCol(
-      col("q"), col("c"), KMeans.CScale).as("d")).collect().map(_.getLong(0))
+    val got = rows.select(graft.functions.QuantArgmin.argminCol(
+      col("q"), array(col("c")), KMeans.CScale).as("b"))
+      .select(col("b.idx"), col("b.dist")).collect()
+    assert(got.forall(_.getInt(0) == 0))
     val want = rows.select(aggregate(
       zip_with(col("q"), col("c"), (x, y) => {
         val dd = x * lit(KMeans.CScale) - y
         dd * dd
       }), lit(0L), (a, x) => a + x).as("d")).collect().map(_.getLong(0))
-    assert(got.toSeq == want.toSeq)
+    assert(got.map(_.getLong(1)).toSeq == want.toSeq)
   }
 
-  test("QuantSqDist on unequal lengths: partial sum, NOT zip_with's null") {
+  test("QuantArgmin on unequal lengths: partial sum, NOT zip_with's null") {
     // documented intended divergence (ADVICE r19): zip_with null-pads
     // the shorter array so the fold returns NULL on a length mismatch,
     // while the no-alloc loop sums over min(len) — the mismatch never
     // occurs at any call site, but the behavior difference is pinned
     // here so the equivalence claim above stays honest
     val rows = Seq((Seq(3L, 4L, 9L), Seq(256L))).toDF("q", "c")
-    val got = rows.select(graft.functions.QuantSqDist.distCol(
-      col("q"), col("c"), KMeans.CScale).as("d")).collect()(0).getLong(0)
+    val got = rows.select(graft.functions.QuantArgmin.argminCol(
+      col("q"), array(col("c")), KMeans.CScale).getField("dist").as("d"))
+      .collect()(0).getLong(0)
     val d0 = 3L * 256 - 256
     assert(got == d0 * d0)
     val foldIsNull = rows.select(aggregate(
@@ -236,5 +240,48 @@ class SemDedupSpec extends AnyFunSuite with SparkSuite {
         dd * dd
       }), lit(0L), (a, x) => a + x).as("d")).collect()(0).isNullAt(0)
     assert(foldIsNull)
+  }
+
+  test("QuantArgmin: ties go to the lowest index; no candidate is NULL") {
+    val rows = Seq((Seq(1L, 1L), Seq(Seq(0L, 0L), Seq(512L, 512L), Seq(0L, 0L))))
+      .toDF("q", "cs")
+    val b = rows.select(graft.functions.QuantArgmin.argminCol(
+      col("q"), col("cs"), KMeans.CScale).as("b"))
+      .select(col("b.idx"), col("b.dist")).collect()(0)
+    assert(b.getInt(0) == 0 && b.getLong(1) == 2L * 256 * 256)
+    val none = rows.select(graft.functions.QuantArgmin.argminCol(
+      col("q"), filter(col("cs"), _ => lit(false)), KMeans.CScale))
+      .collect()(0)
+    assert(none.isNullAt(0))
+  }
+
+  test("the grouped E-step plans no aggregate keyed by id") {
+    // the trainer's E-step is one argmin per point over its group's
+    // model row — the join + groupBy(id).agg(min(struct)) form it
+    // replaces ran an exchange of every point's candidate rows on every
+    // iteration. Walks the trainer's whole plan (through AQE wrappers
+    // and the cached assignment and model plans) for any aggregate
+    // grouped by `id`.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def aggKeys(p: SparkPlan): Seq[Seq[String]] =
+      p.collect { case n => n }.flatMap {
+        case a: AdaptiveSparkPlanExec => aggKeys(a.inputPlan)
+        case s: InMemoryTableScanExec => aggKeys(s.relation.cachedPlan)
+        case a: BaseAggregateExec => Seq(a.groupingExpressions.map(_.toAttribute.name))
+        case _ => Nil
+      }
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    CacheScope.withScope {
+      val unit = SemDedup.unitRows(emb, "vec_id", "embedding")
+      val asg = SemDedup.trainDistributedCells(unit, k = 50, iters = 2)
+      val keys = aggKeys(asg.queryExecution.executedPlan)
+      // non-vacuous: the walk reached the per-group seed and M-step
+      // aggregates
+      assert(keys.contains(Seq("grp")), s"aggregates found: $keys")
+      assert(!keys.exists(_.contains("id")), s"aggregate keyed by id: $keys")
+    }
   }
 }
