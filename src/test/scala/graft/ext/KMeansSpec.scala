@@ -107,8 +107,8 @@ class KMeansSpec extends AnyFunSuite with SparkSuite {
 
   test("a one-group training E-step has no exchange on the point side") {
     // k-means is the one-group case of the grouped Lloyd program: its
-    // k·d-long model is small, so Spark broadcasts it from its cached
-    // size and the points stream through the join where they are.
+    // k·d-long model fits the broadcast threshold, so it is broadcast
+    // and the points stream through the join where they are.
     // With one group a shuffle on the group key would send every point
     // to one partition.
     import org.apache.spark.sql.execution.SparkPlan

@@ -259,9 +259,9 @@ class SemDedupSpec extends AnyFunSuite with SparkSuite {
     // the trainer's E-step is one argmin per point over its group's
     // model row — the join + groupBy(id).agg(min(struct)) form it
     // replaces ran an exchange of every point's candidate rows on every
-    // iteration. Walks the trainer's whole plan (through AQE wrappers
-    // and the cached assignment and model plans) for any aggregate
-    // grouped by `id`.
+    // iteration. Walks the trainer's whole plan (through AQE wrappers,
+    // the cached assignment and the model's chain of rounds) for any
+    // aggregate grouped by `id`.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
