@@ -28,8 +28,8 @@ import graft.functions.{CentroidUpdate, QuantArgmin}
   * Scale shape: the model is a relation with one row per group, and a
   * point meets only its own group's centroids, through one codegen'd
   * argmin over them. A model that fits Spark's broadcast threshold is
-  * broadcast, so a k-means E-step of k·d longs moves no point; a larger
-  * one is joined by shuffle. The M-step is one per-group aggregate
+  * broadcast — k-means' always is, being driver metadata — so its
+  * E-step moves no point; a larger one is joined by shuffle. The M-step is one per-group aggregate
   * ([[graft.functions.CentroidUpdate]]: per-cell vector sums, one
   * buffer probe per point row, partial aggregation collapsing each
   * partition to ≤ k·d longs). Trained models are served as k·d literal
@@ -96,20 +96,28 @@ object KMeans {
     * The model is a lazy plan: the rounds chain into one query, each
     * round one join of the points with the previous model and one
     * per-group aggregate ([[graft.functions.CentroidUpdate]]), so a
-    * round costs one shuffle of partial buffers, and a broadcast when
-    * the model is small. The seeds are a per-group top-alloc window,
-    * so the model reaches the driver only as a broadcast, within
-    * Spark's threshold. */
-  private[ext] def lloyd(pts: DataFrame, alloc: Seq[(Int, Int)], iters: Int): DataFrame = {
+    * round costs one shuffle of partial buffers. `bc` broadcasts the
+    * model to the points; the caller decides it from the model's exact
+    * size (Σalloc·d longs), which plan statistics cannot give — a
+    * model's estimate is the product of its inputs'. Otherwise the
+    * points shuffle to their group's model row.
+    *
+    * Seeds: one group takes its k lowest ids as one distributed
+    * top-k; several take a per-group top-N window, which plans as a
+    * WindowGroupLimit (no full per-group sort) while the largest
+    * allocation stays within `spark.sql.optimizer.windowGroupLimitThreshold`
+    * (1000 by default). */
+  private[ext] def lloyd(pts: DataFrame, alloc: Seq[(Int, Int)], bc: Boolean,
+                         iters: Int): DataFrame = {
     val byGrp = alloc.sortBy(_._1)
     val offs = byGrp.map(_._1).zip(byGrp.scanLeft(0)(_ + _._2)).toMap
-    // the literal bound makes the window a per-group top-N
-    // (WindowGroupLimit: no full per-group sort materializes)
-    val rn = row_number().over(Window.partitionBy(col("grp")).orderBy(col("id")))
-    var model = pts.withColumn("rn", rn)
-      .filter(col("rn") <= lit(byGrp.map(_._2).max))
-      .filter(col("rn") <= element_at(typedLit(alloc.toMap), col("grp")))
-      .groupBy(col("grp"))
+    val seeds =
+      if (byGrp.size == 1) pts.orderBy(col("id")).limit(byGrp.head._2)
+      else pts
+        .withColumn("rn", row_number().over(Window.partitionBy(col("grp")).orderBy(col("id"))))
+        .filter(col("rn") <= lit(byGrp.map(_._2).max))
+        .filter(col("rn") <= element_at(typedLit(alloc.toMap), col("grp")))
+    var model = seeds.groupBy(col("grp"))
       .agg(sort_array(collect_list(struct(col("id"), col("q")))).as("s"))
       .select(col("grp"), element_at(typedLit(offs), col("grp")).as("off"),
         transform(col("s"), e => transform(e.getField("q"), x => x * lit(CScale)))
@@ -118,13 +126,14 @@ object KMeans {
     // with q NULL, so no point row carries a copy of its group's model
     val modelRows = pts.sparkSession.createDataFrame(byGrp.map(_._1).map(Tuple1(_)))
       .toDF("grp").select(col("grp"), lit(null).cast("array<bigint>").as("q"))
-    val bc = broadcastable(pts, alloc)
     for (_ <- 1 to iters) {
       model = join(pts.select(col("grp"), col("q")).unionByName(modelRows), model, bc)
+        // and only that row keeps the centroids into the aggregate
+        .select(col("grp"), col("off"), col("q"), col("best.idx").as("idx"),
+          when(col("q").isNull, col("cents")).as("prev"))
         .groupBy(col("grp"))
         .agg(max(col("off")).as("off"),
-          CentroidUpdate.updateCol(col("q"), col("best.idx"),
-            when(col("q").isNull, col("cents")), CScale).as("cents"))
+          CentroidUpdate.updateCol(col("q"), col("idx"), col("prev"), CScale).as("cents"))
     }
     model
   }
@@ -135,26 +144,16 @@ object KMeans {
     pts.join(if (bc) broadcast(model) else model, Seq("grp"))
       .withColumn("best", argmin(col("cents")))
 
-  /** Whether a model of `alloc`'s centroids fits Spark's broadcast
-    * threshold. Plan statistics cannot tell: a model's estimated size
-    * is the product of its inputs' estimates. Its exact size is Σalloc
-    * centroids of d longs, and d is one row away. */
-  private def broadcastable(pts: DataFrame, alloc: Seq[(Int, Int)]): Boolean = {
-    val d = pts.select(size(col("q"))).take(1).headOption.fold(0)(_.getInt(0))
-    val limit = pts.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    alloc.map(_._2.toLong).sum * d * 8 <= limit
-  }
-
   /** The points of `pts` labelled by a [[lloyd]] model: `cell` is the
     * group's `off` + the index of the point's nearest centroid. */
-  private[ext] def nearest(pts: DataFrame, model: DataFrame, alloc: Seq[(Int, Int)]): DataFrame =
-    join(pts, model, broadcastable(pts, alloc))
-      .select(col("id"), (col("off") + col("best.idx")).as("cell"))
+  private[ext] def nearest(pts: DataFrame, model: DataFrame, bc: Boolean): DataFrame =
+    join(pts, model, bc).select(col("id"), (col("off") + col("best.idx")).as("cell"))
 
   /** Train and return the centroid model alone — k·d longs of driver
     * metadata, the broadcastable artifact a serving/streaming tier
     * assigns against ([[assignWith]]): [[lloyd]] with one group of k
-    * seeds. The quantized-points localCheckpoint lives only for the
+    * seeds, its model broadcast (it is collected and served as literals
+    * anyway). The quantized-points localCheckpoint lives only for the
     * training query and is freed here ([[CacheScope.releaseCheckpoint]])
     * instead of lingering until driver GC. */
   def fitCentroids(em: DataFrame, idCol: String, vecCol: String,
@@ -163,7 +162,7 @@ object KMeans {
     val pts = quantPoints(em, idCol, vecCol)
       .select(col("vec_id").as("id"), col("q"), lit(0).as("grp")).localCheckpoint()
     try {
-      val cents = lloyd(pts, Seq(0 -> k), iters).select(col("cents")).collect()
+      val cents = lloyd(pts, Seq(0 -> k), bc = true, iters).select(col("cents")).collect()
         .flatMap(_.getSeq[scala.collection.Seq[Long]](0).map(_.toArray))
       require(cents.length == k, s"KMeans: k=$k but only ${cents.length} points")
       cents

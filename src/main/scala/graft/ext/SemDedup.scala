@@ -158,12 +158,28 @@ object SemDedup {
     // capacity < k (k > n) the loop stops with fewer seeds, which is
     // every seed the corpus can support.
     val alloc = scala.collection.mutable.Map(base.map(b => b._1 -> b._3): _*)
-    val order = base.sortBy { case (grp, c, _) => (-(k.toLong * c % total), grp) }
-    while (left > 0 && order.exists { case (grp, c, _) => alloc(grp) < c })
-      for ((grp, c, _) <- order if left > 0 && alloc(grp) < c) { alloc(grp) += 1; left -= 1 }
+    if (left > 0) {
+      val order = base.sortBy { case (grp, c, _) =>
+        (-(k.toLong * c % total), grp)
+      }
+      var progressed = true
+      while (left > 0 && progressed) {
+        progressed = false
+        var i = 0
+        while (left > 0 && i < order.length) {
+          val (grp, c, _) = order(i)
+          if (alloc(grp) < c) { alloc(grp) += 1; left -= 1; progressed = true }
+          i += 1
+        }
+      }
+    }
     val groups = alloc.toSeq.map { case (grp, a) => grp -> a.toInt }
+    // the model is Σalloc centroids of d longs: broadcast it when that
+    // fits the session's threshold, else shuffle the points to it
+    val bc = groups.map(_._2.toLong).sum * coarse.centroids.head.length * 8 <=
+      unit.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val asg = CacheScope.register(
-      KMeans.nearest(pts, KMeans.lloyd(pts, groups, iters), groups).persist())
+      KMeans.nearest(pts, KMeans.lloyd(pts, groups, bc, iters), bc).persist())
     asg.count() // materialize BEFORE the checkpoint blocks are freed
     CacheScope.releaseCheckpoint(pts)
     asg

@@ -229,9 +229,10 @@ object CurationQueries {
     // trainer's k²·d loop and k·d closure stop scaling): coarse
     // √k-group model, per-group seed allocation, then KMeans.lloyd,
     // the one integer Lloyd program, over the groups; nothing k-sized
-    // on the driver. The SAME analytic oracle pins it:
-    // originals can never drop under ANY assignment (their only
-    // ≥τ-cosine partner carries the LARGER id), and a clone drops iff
+    // on the driver beyond a model within the broadcast threshold.
+    // The SAME analytic oracle pins it: originals can never drop under
+    // ANY assignment (their only ≥τ-cosine partner carries the LARGER
+    // id), and a clone drops iff
     // it co-assigns with its bit-identical original — which any
     // deterministic assignment guarantees (verified across sf0.001/
     // 0.01/0.1/1/10). A torn E-step, a lost seed group, or a

@@ -107,8 +107,8 @@ class KMeansSpec extends AnyFunSuite with SparkSuite {
 
   test("a one-group training E-step has no exchange on the point side") {
     // k-means is the one-group case of the grouped Lloyd program: its
-    // k·d-long model fits the broadcast threshold, so it is broadcast
-    // and the points stream through the join where they are.
+    // k·d-long model is driver metadata, so it is broadcast and the
+    // points stream through the join where they are.
     // With one group a shuffle on the group key would send every point
     // to one partition.
     import org.apache.spark.sql.execution.SparkPlan
@@ -128,7 +128,7 @@ class KMeansSpec extends AnyFunSuite with SparkSuite {
       }
     val pts = blobs.select(col("vec_id").as("id"),
       KMeans.quantCol(col("embedding")).as("q"), lit(0).as("grp"))
-    val js = joins(KMeans.lloyd(pts, Seq(0 -> 3), iters = 2).queryExecution.executedPlan)
+    val js = joins(KMeans.lloyd(pts, Seq(0 -> 3), bc = true, iters = 2).queryExecution.executedPlan)
     assert(js.size == 2, s"expected one E-step join per round:\n${js.mkString("\n")}")
     js.foreach {
       case j: BroadcastHashJoinExec =>

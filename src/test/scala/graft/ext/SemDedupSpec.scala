@@ -284,4 +284,37 @@ class SemDedupSpec extends AnyFunSuite with SparkSuite {
       assert(!keys.exists(_.contains("id")), s"aggregate keyed by id: $keys")
     }
   }
+
+  test("the distributed trainer's shuffle side labels as its broadcast side") {
+    // a production model (k ≥ DistributedK) exceeds the broadcast
+    // threshold, so its points shuffle to the model instead; a session
+    // with the threshold off takes that side on a small corpus
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledHashJoinExec, SortMergeJoinExec}
+    def joins(p: SparkPlan): Seq[String] =
+      p.collect { case n => n }.flatMap {
+        case a: AdaptiveSparkPlanExec => joins(a.inputPlan)
+        case s: InMemoryTableScanExec => joins(s.relation.cachedPlan)
+        case _: BroadcastHashJoinExec => Seq("broadcast")
+        case _: ShuffledHashJoinExec | _: SortMergeJoinExec => Seq("shuffle")
+        case _ => Nil
+      }
+    def run(s: SparkSession): (Set[(Long, Int)], Set[String]) = CacheScope.withScope {
+      val emb = s.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      val asg = SemDedup.trainDistributedCells(
+        SemDedup.unitRows(emb, "vec_id", "embedding"), k = 50, iters = 2)
+      (asg.collect().map(r => r.getLong(0) -> r.getInt(1)).toSet,
+        joins(asg.queryExecution.executedPlan).toSet)
+    }
+    val (bcRows, bcJoins) = run(spark)
+    val (shRows, shJoins) = run(graft.GraftSession.derived(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    assert(bcJoins == Set("broadcast") && shJoins == Set("shuffle"),
+      s"E-step joins: $bcJoins at the default threshold, $shJoins with it off")
+    assert(shRows.size == bcRows.size && shRows == bcRows)
+  }
 }

@@ -66,32 +66,34 @@ class SketchPropertySpec extends AnyFunSuite with SparkSuite {
     // the grouped case (SemDeDup's distributed trainer): every group
     // trains its own allocation, seeded from its own lowest ids, and a
     // point's label is its group's offset (allocations summed in group
-    // order) plus its reference cluster index
+    // order) plus its reference cluster index — whether the model is
+    // broadcast to the points or the points shuffle to it
     val gen = for {
       dim <- Gen.chooseNum(1, 3)
       n <- Gen.chooseNum(3, 18)
       groups <- Gen.chooseNum(1, 3)
       iters <- Gen.chooseNum(0, 3)
+      bc <- Gen.oneOf(true, false)
       grps <- Gen.listOfN(n, Gen.chooseNum(0, groups - 1))
       allocs <- Gen.listOfN(groups, Gen.chooseNum(1, 4))
       vecs <- Gen.listOfN(n,
         Gen.listOfN(dim, Gen.chooseNum(-390, 390).map(_ / 100.0f)))
-    } yield (iters, allocs, vecs.zip(grps).zipWithIndex.map {
+    } yield (iters, bc, allocs, vecs.zip(grps).zipWithIndex.map {
       case ((v, g), i) => (i.toLong, v, g)
     })
-    samples(gen, 12).foreach { case (iters, allocs, rows) =>
+    samples(gen, 12).foreach { case (iters, bc, allocs, rows) =>
       val live = rows.map(_._3).distinct.sorted
       val alloc = live.map(g => g -> allocs(g))
       val offs = live.zip(alloc.scanLeft(0)(_ + _._2)).toMap
       val pts = rows.toDF("id", "embedding", "grp")
         .select(col("id"), KMeans.quantCol(col("embedding")).as("q"), col("grp"))
-      val got = KMeans.nearest(pts, KMeans.lloyd(pts, alloc, iters), alloc)
+      val got = KMeans.nearest(pts, KMeans.lloyd(pts, alloc, bc, iters), bc)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       val want = rows.groupBy(_._3).flatMap { case (g, members) =>
         refLloyd(members.map { case (id, v, _) => (id, refQuant(v)) },
           allocs(g), iters).map { case (id, c) => id -> (offs(g) + c) }
       }
-      assert(got == want, s"iters=$iters alloc=$alloc rows=$rows")
+      assert(got == want, s"iters=$iters bc=$bc alloc=$alloc rows=$rows")
     }
   }
 
