@@ -29,7 +29,8 @@ import graft.functions.{CentroidUpdate, QuantArgmin}
   * point meets only its own group's centroids, through one codegen'd
   * argmin over them. A model that fits Spark's broadcast threshold is
   * broadcast — k-means' always is, being driver metadata — so its
-  * E-step moves no point; a larger one is joined by shuffle. The M-step is one per-group aggregate
+  * E-step moves no point; a larger one is joined by shuffle. The
+  * M-step is one per-group aggregate
   * ([[graft.functions.CentroidUpdate]]: per-cell vector sums, one
   * buffer probe per point row, partial aggregation collapsing each
   * partition to ≤ k·d longs). Trained models are served as k·d literal
@@ -105,8 +106,8 @@ object KMeans {
     * Seeds: one group takes its k lowest ids as one distributed
     * top-k; several take a per-group top-N window, which plans as a
     * WindowGroupLimit (no full per-group sort) while the largest
-    * allocation stays within `spark.sql.optimizer.windowGroupLimitThreshold`
-    * (1000 by default). */
+    * allocation stays within
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (1000 by default). */
   private[ext] def lloyd(pts: DataFrame, alloc: Seq[(Int, Int)], bc: Boolean,
                          iters: Int): DataFrame = {
     val byGrp = alloc.sortBy(_._1)
